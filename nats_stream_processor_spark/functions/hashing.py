@@ -36,10 +36,6 @@ def hash32_sql_duck(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 8) AS BIGINT)"
 
 
-def hash60_sql_duck(expr: str) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
-
-
 def minhash_params(k: int = 32, seed: int = 42) -> list[tuple[int, int]]:
     """K pinned (a, b) pairs for h_j(x) = (a*x + b) mod (2^31-1)."""
     rng = random.Random(seed)

@@ -59,10 +59,6 @@ def _count_filter(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(*words)))
 
 
-def _counts(toks: Column) -> dict[str, Column]:
-    return {lab: _count_filter(toks, TOPIC_KEYWORDS[lab]) for lab in LABELS}
-
-
 def topics_struct(text: Column | str, dp: int = FLOAT_ROUND_DP) -> Column:
     """struct<topics array<string>, top_topic string, top_confidence double>
 

@@ -74,6 +74,20 @@ def enrich_posts(
     return out
 
 
+def mean_6dp_sql(col: str, div: str = "div") -> str:
+    """SQL aggregate: mean of a 6dp-rounded double, rounded half-up to 6 dp.
+
+    Computed in integer micro-units, so the sum is exact and
+    order-independent across partitions, and ``(2s + n) div 2n`` rounds an
+    exact tie at the 7th decimal the same way in Spark and DuckDB (a double
+    division before ``round(…, 6)`` splits such ties between the engines).
+    ``round`` comes before the cast because a Spark cast truncates where a
+    DuckDB cast rounds. ``div`` is the integer-division operator: ``div``
+    in Spark, ``//`` in DuckDB."""
+    s = f"sum(CAST(round({col} * 1e6) AS BIGINT))"
+    return f"((2 * {s} + count(*)) {div} (2 * count(*))) / 1e6"
+
+
 def enriched_route_counts(df: DataFrame, text_col: str | None = None,
                           id_cols: tuple[str, ...] = ()) -> DataFrame:
     """Flagship query: enrich then count per routing key (sentiment ×
@@ -87,14 +101,8 @@ def enriched_route_counts(df: DataFrame, text_col: str | None = None,
         )
         .agg(
             F.count("*").alias("n_posts"),
-            # decimal-sum average: confidence is a 6dp-rounded double, so
-            # the decimal(10,6) cast recovers the exact value and the sum
-            # is order-independent across partitions (a double avg would
-            # flip the 6th decimal depending on partial-agg order)
-            F.round(
-                F.sum(F.col("sentiment.confidence").cast("decimal(10,6)"))
-                .cast("double") / F.count("*"), 6,
-            ).alias("avg_confidence"),
+            F.expr(mean_6dp_sql("sentiment.confidence"))
+            .alias("avg_confidence"),
         )
         .orderBy("sentiment", "top_topic")
     )

@@ -14,7 +14,7 @@ from ..functions.classify import sentiment_udf, topics_udf
 from ..functions.sentiment import sentiment_count_sql_defs, sentiment_sql_columns
 from ..functions.text import tokens_sql
 from ..functions.topics import topic_count_sql_defs, topics_sql_columns
-from ..operators.enrich import enrich_posts, enriched_route_counts
+from ..operators.enrich import enrich_posts, enriched_route_counts, mean_6dp_sql
 # A CTE prelude shared by every classifier oracle: tokenize once, count once.
 # Defined BEFORE the registry import: a worker entering the package at THIS
 # module triggers the registry's full query-module chain from the import
@@ -58,8 +58,7 @@ def _docs(spark, sf_dir):
         WHERE length(trim(coalesce(text, ''))) > 0 AND {_S['confidence']} >= 0.4
     )
     SELECT sentiment, top_topic, count(*) AS n_posts,
-           round(CAST(sum(CAST(confidence AS DECIMAL(10,6))) AS DOUBLE)
-                 / count(*), 6) AS avg_confidence
+           {mean_6dp_sql("confidence", div="//")} AS avg_confidence
     FROM enriched GROUP BY 1, 2 ORDER BY 1, 2
     """,
     tags=("flagship", "U1", "U2", "F5", "P2", "M4", "M5"),

@@ -349,11 +349,6 @@ def oracle_sql() -> dict[str, str]:
 #     (curation_curriculum_schedule .. train_quality_logreg — every
 #     r9-latest row after corpus_token_gini);
 #  3. any remaining slots: the oldest r10-era rows alphabetically.
-# Operators WRITTEN in round 14 (the overflow-fill safety net below
-# keeps them sampled even if the explicit list ever under-allocates —
-# new code earns its formal row in the round it is written).
-_R14_NEW = ("sim_ivf_insert", "sim_ivf_lifecycle")
-
 SAMPLE_PREFIX_EXPECTED = [
     # 1. new in round 14 (formal rows in the round they are written)
     "sim_ivf_insert", "sim_ivf_lifecycle",
@@ -402,22 +397,6 @@ SAMPLE_PREFIX_EXPECTED = [
 # ::test_every_query_module_survives_worker_entry_import.)
 _POPULATED = False
 
-# Names per late-round module, for the sample-prefix tests (set by
-# _populate).
-_ext3_names: list[str] = []
-_ext4_names: list[str] = []
-_ext5_names: list[str] = []
-_ext6_names: list[str] = []
-_ext9_names: list[str] = []
-_ext10_names: list[str] = []
-_ext11_names: list[str] = []
-_ext12_names: list[str] = []
-_ext13_names: list[str] = []
-_ext14_names: list[str] = []
-_ext15_names: list[str] = []
-_ext16_names: list[str] = []
-
-
 def _populate() -> None:
     """Import every query module (registration side effects) and curate
     the sampled prefix. Idempotent; called from the package __init__.
@@ -425,8 +404,7 @@ def _populate() -> None:
     ORDER MATTERS for external snapshots: harnesses that sample a prefix
     of the registry see entries in registration order.
     """
-    global _POPULATED, _ext3_names, _ext4_names, _ext5_names, _ext9_names, \
-        _ext10_names, _ext11_names, _ext12_names
+    global _POPULATED
     if _POPULATED:
         return
     # Set the guard up front (re-entrant imports of the chain must
@@ -442,10 +420,6 @@ def _populate() -> None:
 
 
 def _populate_chain() -> None:
-    global _ext3_names, _ext4_names, _ext5_names, _ext6_names, \
-        _ext9_names, _ext10_names, _ext11_names, _ext12_names, \
-        _ext13_names, _ext14_names, _ext15_names, _ext16_names
-
     from .queries import llm  # noqa: F401
     from .queries import advanced  # noqa: F401
     from .queries import enrich  # noqa: F401
@@ -454,89 +428,26 @@ def _populate_chain() -> None:
     from .queries import relational  # noqa: F401
     from .queries import llm_ext  # noqa: F401
     from .queries import llm_ext2  # noqa: F401
-
-    pre = set(REGISTRY)
     from .queries import llm_ext3  # noqa: F401
-    _ext3_names = [n for n in REGISTRY if n not in pre]
-
-    pre = set(REGISTRY)
     from .queries import llm_ext4  # noqa: F401
-    _ext4_names = [n for n in REGISTRY if n not in pre]
-
-    # Late round-7 additions: leading the r8 sample window (the r7
-    # window was already fully allocated when these landed).
-    pre = set(REGISTRY)
     from .queries import llm_ext5  # noqa: F401
-    _ext5_names = [n for n in REGISTRY if n not in pre]
-
-    # Round-8 additions: inside the r8 sample window.
-    pre = set(REGISTRY)
     from .queries import llm_ext6  # noqa: F401
-    _ext6_names = [n for n in REGISTRY if n not in pre]
-
-    # llm_ext7: graph_nn_descent landed late in round 8 (behind that
-    # round's fully-allocated window; leads the r9 window for its first
-    # formal row), graph_greedy_search (round 9, in-window), and the
-    # late round-9 graph_beam_sweep / graph_knn_insert (behind the r9
-    # window — honest headers in the module — leading r10 with
-    # llm_ext8's late operators).
-    pre = set(REGISTRY)
     from .queries import llm_ext7  # noqa: F401
-
-    # Round-9 additions: inside the r9 sample window.
     from .queries import llm_ext8  # noqa: F401
-    _ext9_names = [n for n in REGISTRY if n not in pre]
-
-    # Round-10 additions (certify in the round they are written).
-    pre = set(REGISTRY)
     from .queries import llm_ext9  # noqa: F401
-    _ext10_names = [n for n in REGISTRY if n not in pre]
-
-    # Round-11 additions (certify in the round they are written).
-    pre = set(REGISTRY)
     from .queries import llm_ext10  # noqa: F401
     from .queries import llm_ext11  # noqa: F401
-    _ext11_names = [n for n in REGISTRY if n not in pre]
-
-    # Late round-11 additions: landed AFTER the r11 window was fully
-    # allocated; their first formal rows LEAD the r12 window (honest
-    # behind-window headers stood in llm_ext12 through round 11).
-    pre = set(REGISTRY)
     from .queries import llm_ext12  # noqa: F401
-    _ext12_names = [n for n in REGISTRY if n not in pre]
-
-    # Late round-12 additions: landed AFTER the r12 window was fully
-    # allocated — honest behind-window headers stood in llm_ext13
-    # through round 12; their first formal rows lead the r13 window.
-    pre = set(REGISTRY)
     from .queries import llm_ext13  # noqa: F401
-    _ext13_names = [n for n in REGISTRY if n not in pre]
-
-    # Round-13 additions (certify in the round they are written).
-    pre = set(REGISTRY)
     from .queries import llm_ext14  # noqa: F401
-    _ext14_names = [n for n in REGISTRY if n not in pre]
-
-    # Round-14 additions (certify in the round they are written).
-    pre = set(REGISTRY)
     from .queries import llm_ext15  # noqa: F401
-    _ext15_names = [n for n in REGISTRY if n not in pre]
-
-    # Late round-14 additions: landed AFTER the r14 window was fully
-    # allocated — honest behind-window headers in llm_ext16; their
-    # first formal rows lead the r15 window (pre-allocation above).
-    pre = set(REGISTRY)
     from .queries import llm_ext16  # noqa: F401
-    _ext16_names = [n for n in REGISTRY if n not in pre]
 
     # Reorder so the curated prefix leads. Every curated name must exist
     # on a clean import (asserted by test_sample_prefix_has_no_name_drift);
     # the soft filter below is only a guard against future partial-import
-    # schemes, and the current-round overflow fill keeps new operators
-    # sampled if the explicit list ever under-allocates.
+    # schemes.
     prefix = [n for n in SAMPLE_PREFIX_EXPECTED if n in REGISTRY]
-    prefix += [n for n in _R14_NEW
-               if n in REGISTRY and n not in prefix][:50 - len(prefix)]
     order = prefix + [n for n in REGISTRY if n not in set(prefix)]
     reordered = {n: REGISTRY[n] for n in order}
     REGISTRY.clear()

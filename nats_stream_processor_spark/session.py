@@ -15,12 +15,3 @@ def get_spark(conf: SparkEngineConf | None = None, **overrides: str) -> SparkSes
     for k, v in {**conf.to_conf(), **overrides}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read the driver's parquet tables; returns dict name -> DataFrame."""
-    names = names or (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    )
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -20,40 +20,34 @@ Reference parity (all citations into /root/reference):
   (src/nats_client.py:81-102): LIMITS retention, discard OLD, max_msgs
   5M, file storage, 600 s duplicate window.
 
-Transport: any non-`mem://` URL goes through nats_transport.py, a real
-nats-py client path (sequence-range pull fetch, idempotent publish, stream
-DDL) exercised in tests against a scripted fake `nats` module — the
-container ships neither nats-py nor a broker. `servers="mem://<name>"`
-selects the file-backed stand-in below, which the streaming e2e tests
-drive.
+Transport: the reader and writer talk to the broker only through
+nats_transport.open_transport, which picks the real nats-py JetStream
+client for a `nats://` URL and the file-backed stand-in for
+`servers="mem://<name>"` (the streaming e2e tests drive the latter; the
+JetStream path runs in tests against a scripted fake `nats` module — the
+container ships neither nats-py nor a broker).
 
-Scale: the default reader (NatsPartitionedStreamReader) splits each
-micro-batch's sequence range into N InputPartitions read in parallel
-executor workers — the deterministic analog of the reference's queue-group
-fan-out across pods (README.md:505-517). Per-message ORDER within the
-batch is not total across partitions (neither is the queue group's);
-pipelines needing order sort on `seq`. option("simple", "true") selects
-the single-partition driver-prefetch reader. For multi-stream topologies,
-register one source per stream/subject-filter.
+Scale: the reader (NatsPartitionedStreamReader) splits each micro-batch's
+sequence range into N InputPartitions read in parallel executor workers —
+the deterministic analog of the reference's queue-group fan-out across
+pods (README.md:505-517). Per-message ORDER within the batch is not total
+across partitions (neither is the queue group's); pipelines needing order
+sort on `seq`. For multi-stream topologies, register one source per
+stream/subject-filter.
 """
 
 from __future__ import annotations
 
-import base64
-import fcntl
+import datetime
 import json
-import os
-import shutil
 from collections.abc import Iterator
 from dataclasses import dataclass
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     DataSourceStreamWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import (
@@ -66,11 +60,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-try:  # pragma: no cover - not installed in this environment
-    import nats  # noqa: F401
-    HAVE_NATS = True
-except ImportError:
-    HAVE_NATS = False
+from ..config import INPUT_STREAM, OUTPUT_STREAM, OUTPUT_SUBJECT_PREFIX
+from .nats_transport import FetchedMessage, open_transport
 
 NATS_SCHEMA = StructType([
     StructField("subject", StringType()),
@@ -83,132 +74,18 @@ NATS_SCHEMA = StructType([
 DEFAULT_MAX_BATCH = 100_000
 
 
-# ------------------------------------------------------------- file-backed
-# JetStream stand-in: enough of the semantics to drive the connector in
-# tests — per-stream sequence numbers, subject filters, duplicate window.
-# File-backed (one jsonl per stream) because Spark runs Python data sources
-# in separate worker processes: the registered DataSource is pickled into a
-# source-runner process, so an in-process dict would be invisible there.
-
-
-@dataclass
-class MemMessage:
-    subject: str
-    data: bytes
-    seq: int
-    ts: float
-    headers: dict
-
-
-MEM_BROKER_DIR = os.environ.get(
-    "SPARK_GRAFT_MEM_BROKER_DIR", "/tmp/spark_graft_mem_broker")
-
-
-@dataclass
-class MemStream:
-    path: str
-
-    def _lines(self) -> list[dict]:
-        if not os.path.exists(self.path):
-            return []
-        with open(self.path) as f:
-            return [json.loads(ln) for ln in f if ln.strip()]
-
-    @property
-    def messages(self) -> list[MemMessage]:
-        return [
-            MemMessage(d["subject"], base64.b64decode(d["data"]), d["seq"],
-                       d["ts"], d["headers"])
-            for d in self._lines()
-        ]
-
-    def publish(self, subject: str, data: bytes, headers: dict | None = None,
-                ts: float = 0.0) -> bool:
-        headers = headers or {}
-        # The nats sink runs one writer per partition in parallel Python
-        # worker processes; an exclusive flock around read+append keeps the
-        # per-stream sequence monotonic and the Nats-Msg-Id duplicate scan
-        # race-free (the real broker serializes publishes server-side).
-        with open(self.path + ".lock", "w") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            try:
-                existing = self._lines()
-                msg_id = headers.get("Nats-Msg-Id")
-                if msg_id is not None:
-                    # duplicate_window dedup (reference: src/nats_client.py:99);
-                    # the file-backed window is unbounded, fine for tests
-                    if any(d["headers"].get("Nats-Msg-Id") == msg_id
-                           for d in existing):
-                        return False
-                seq = (existing[-1]["seq"] + 1) if existing else 1
-                line = json.dumps({
-                    "subject": subject, "data": base64.b64encode(data).decode(),
-                    "seq": seq, "ts": ts, "headers": headers,
-                })
-                with open(self.path, "a") as f:
-                    f.write(line + "\n")
-                return True
-            finally:
-                fcntl.flock(lockf, fcntl.LOCK_UN)
-
-    def fetch(self, start_seq: int, max_msgs: int,
-              subject_prefix: str | None = None) -> list[MemMessage]:
-        out = []
-        for m in self.messages:
-            if m.seq < start_seq:
-                continue
-            if subject_prefix and not m.subject.startswith(subject_prefix):
-                continue
-            out.append(m)
-            if len(out) >= max_msgs:
-                break
-        return out
-
-    def last_seq(self) -> int:
-        lines = self._lines()
-        return lines[-1]["seq"] if lines else 0
-
-
-def mem_stream(server: str, stream: str) -> MemStream:
-    name = server.removeprefix("mem://")
-    d = os.path.join(MEM_BROKER_DIR, name)
-    os.makedirs(d, exist_ok=True)
-    return MemStream(os.path.join(d, f"{stream}.jsonl"))
-
-
-def mem_reset(server: str) -> None:
-    """Drop all streams of a mem:// broker (test isolation)."""
-    d = os.path.join(MEM_BROKER_DIR, server.removeprefix("mem://"))
-    if os.path.isdir(d):
-        shutil.rmtree(d)
-
-
 def ensure_output_stream(
-    server: str, stream: str,
-    subject_prefix: str = "bluesky.posts.enriched",
-) -> MemStream | None:
+    server: str, stream: str, subject_prefix: str = OUTPUT_SUBJECT_PREFIX,
+) -> None:
     """S4: CREATE-STREAM-IF-NOT-EXISTS. Mirrors the reference's stream DDL
     (src/nats_client.py:81-102): LIMITS retention, discard OLD, max_msgs
     5M, FILE storage, 600 s duplicate window."""
-    if server.startswith("mem://"):
-        return mem_stream(server, stream)
-    if not HAVE_NATS:
-        raise ImportError(
-            "nats-py is required for a real NATS connection "
-            "(pip install nats-py); use servers='mem://<name>' for the "
-            "in-memory broker"
-        )
-    from .nats_transport import JetStreamTransport
-    with JetStreamTransport(server) as t:
+    with open_transport(server) as t:
         t.ensure_stream(stream, subject_prefix)
-    return None
 
 
-def _msgs_to_rows(msgs: list) -> list[tuple]:
-    """Map fetched messages onto NATS_SCHEMA tuples (shared by both
-    readers)."""
-    import datetime
-
+def _msgs_to_rows(msgs: list[FetchedMessage]) -> list[tuple]:
+    """Map fetched messages onto NATS_SCHEMA tuples."""
     return [
         (
             m.subject,
@@ -220,64 +97,6 @@ def _msgs_to_rows(msgs: list) -> list[tuple]:
         )
         for m in msgs
     ]
-
-
-class NatsStreamReader(SimpleDataSourceStreamReader):
-    """Offsets are JetStream stream sequences: {"seq": <next unread>}."""
-
-    def __init__(self, options: dict):
-        self.server = options.get("servers", "mem://default")
-        self.stream = options.get("stream", "bluesky-posts")
-        self.subject_prefix = options.get("subjectprefix") or None
-        self.max_batch = int(options.get("maxbatchsize", DEFAULT_MAX_BATCH))
-        self._transport = None
-        if not self.server.startswith("mem://") and not HAVE_NATS:
-            raise ImportError(
-                "nats-py is required for a real NATS connection; "
-                "use servers='mem://<name>' for tests"
-            )
-
-    def initialOffset(self) -> dict:  # noqa: N802
-        return {"seq": 1}  # DeliverPolicy.ALL (reference: src/nats_client.py:152)
-
-    def _subject_filter(self) -> str | None:
-        # option subjectPrefix="bluesky.posts." -> JetStream filter
-        # "bluesky.posts.>" (the reference subscribes "<subject>.>",
-        # src/nats_client.py:137)
-        if not self.subject_prefix:
-            return None
-        return self.subject_prefix.rstrip(".") + ".>"
-
-    def _fetch(self, start_seq: int, max_msgs: int) -> list[MemMessage]:
-        if self.server.startswith("mem://"):
-            return mem_stream(self.server, self.stream).fetch(
-                start_seq, max_msgs, self.subject_prefix)
-        from .nats_transport import JetStreamTransport
-        if self._transport is None:
-            # one connection for the life of the reader (driver-side)
-            self._transport = JetStreamTransport(self.server).connect()
-        return self._transport.fetch(
-            self.stream, start_seq, max_msgs, self._subject_filter())
-
-    def stop(self) -> None:
-        if self._transport is not None:
-            self._transport.close()
-            self._transport = None
-
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        msgs = self._fetch(start["seq"], self.max_batch)
-        if not msgs:
-            return iter([]), start
-        end = {"seq": msgs[-1].seq + 1}
-        return iter(_msgs_to_rows(msgs)), end
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:  # noqa: N802
-        # deterministic replay for recovery (same sequence range re-read)
-        msgs = self._fetch(start["seq"], end["seq"] - start["seq"])
-        return iter(_msgs_to_rows([m for m in msgs if m.seq < end["seq"]]))
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the Spark checkpoint (A0)
 
 
 @dataclass
@@ -299,24 +118,17 @@ class NatsPartitionedStreamReader(DataSourceStreamReader):
 
     Driver-side: initialOffset/latestOffset/partitions (one cheap
     stream-info call per trigger). Executor-side: read(partition) opens its
-    own connection per task (mem:// reads the shared file-backed broker).
-    Offsets are identical to the simple reader ({"seq": next unread}), so
-    checkpoints written by one are readable by the other.
+    own connection per task. Offsets are {"seq": next unread}.
     """
 
     def __init__(self, options: dict):
         self.server = options.get("servers", "mem://default")
-        self.stream = options.get("stream", "bluesky-posts")
+        self.stream = options.get("stream", INPUT_STREAM)
         self.subject_prefix = options.get("subjectprefix") or None
         self.max_batch = int(options.get("maxbatchsize", DEFAULT_MAX_BATCH))
         self.num_partitions = int(options.get("numpartitions", 8))
         self._transport = None
         self._prev_end: int | None = None
-        if not self.server.startswith("mem://") and not HAVE_NATS:
-            raise ImportError(
-                "nats-py is required for a real NATS connection; "
-                "use servers='mem://<name>' for tests"
-            )
 
     def __getstate__(self):
         # The reader ships to executor workers for read(); the transport
@@ -326,28 +138,25 @@ class NatsPartitionedStreamReader(DataSourceStreamReader):
         return state
 
     def _subject_filter(self) -> str | None:
+        # option subjectPrefix="bluesky.posts." -> JetStream filter
+        # "bluesky.posts.>" (the reference subscribes "<subject>.>",
+        # src/nats_client.py:137)
         if not self.subject_prefix:
             return None
         return self.subject_prefix.rstrip(".") + ".>"
 
-    def _last_seq(self) -> int:
-        if self.server.startswith("mem://"):
-            return mem_stream(self.server, self.stream).last_seq()
-        from .nats_transport import JetStreamTransport
-        if self._transport is None:
-            self._transport = JetStreamTransport(self.server).connect()
-        return self._transport.last_seq(self.stream)
-
     def initialOffset(self) -> dict:  # noqa: N802
-        return {"seq": 1}  # DeliverPolicy.ALL
+        return {"seq": 1}  # DeliverPolicy.ALL (reference: src/nats_client.py:152)
 
     def latestOffset(self) -> dict:  # noqa: N802
         # Admission control (S2): advance at most max_batch sequences per
         # trigger. The cap is relative to the previous latestOffset this
         # process returned; the first trigger after a restart is uncapped
         # (the Python API doesn't surface the checkpointed start here).
-        last = self._last_seq()
-        end = last + 1
+        if self._transport is None:
+            # one connection for the life of the reader (driver-side)
+            self._transport = open_transport(self.server).connect()
+        end = self._transport.last_seq(self.stream) + 1
         if self._prev_end is not None:
             end = min(end, self._prev_end + self.max_batch)
             end = max(end, self._prev_end)
@@ -372,14 +181,8 @@ class NatsPartitionedStreamReader(DataSourceStreamReader):
         lo, hi = partition.start_seq, partition.end_seq
         if hi <= lo:
             return iter([])
-        if self.server.startswith("mem://"):
-            msgs = mem_stream(self.server, self.stream).fetch(
-                lo, hi - lo, self.subject_prefix)
-        else:
-            from .nats_transport import JetStreamTransport
-            with JetStreamTransport(self.server) as t:
-                msgs = t.fetch(self.stream, lo, hi - lo,
-                               self._subject_filter())
+        with open_transport(self.server) as t:
+            msgs = t.fetch(self.stream, lo, hi - lo, self._subject_filter())
         return iter(_msgs_to_rows([m for m in msgs if m.seq < hi]))
 
     def commit(self, end: dict) -> None:
@@ -404,18 +207,12 @@ class NatsStreamWriter(DataSourceStreamWriter):
 
     def __init__(self, options: dict):
         self.server = options.get("servers", "mem://default")
-        self.stream = options.get("stream", "bluesky-posts-enriched")
-        self.default_subject = options.get(
-            "defaultsubject", "bluesky.posts.enriched")
-        if not self.server.startswith("mem://") and not HAVE_NATS:
-            raise ImportError(
-                "nats-py is required for a real NATS connection; "
-                "use servers='mem://<name>' for tests"
-            )
+        self.stream = options.get("stream", OUTPUT_STREAM)
 
     def _row_to_message(self, row) -> tuple[str, bytes, str | None]:
         d = row.asDict(recursive=True)
-        subject = d.get("route_subject") or d.get("subject") or self.default_subject
+        subject = (d.get("route_subject") or d.get("subject")
+                   or OUTPUT_SUBJECT_PREFIX)
         msg_id = d.get("msg_id")
         if msg_id is None and d.get("uri") and d.get("cid"):
             # Truthiness on purpose: the reference skips the dedup header for
@@ -436,21 +233,9 @@ class NatsStreamWriter(DataSourceStreamWriter):
         """Executor-side publish: this runs in each writer partition's
         Python worker with its own connection — no data crosses the driver
         (the queue-group fan-out analog, reference README.md:505-517)."""
-        if self.server.startswith("mem://"):
-            n_pub = n_dup = 0
-            stream = mem_stream(self.server, self.stream)
-            for row in iterator:
-                subject, payload, msg_id = self._row_to_message(row)
-                headers = {"Nats-Msg-Id": msg_id} if msg_id else {}
-                if stream.publish(subject, payload, headers):
-                    n_pub += 1
-                else:
-                    n_dup += 1
-            return NatsCommitMessage(n_published=n_pub, n_duplicates=n_dup)
-        from .nats_transport import JetStreamTransport
         items = [self._row_to_message(row) for row in iterator]
-        with JetStreamTransport(self.server) as t:
-            n_pub, n_dup = t.publish_many(items)
+        with open_transport(self.server) as t:
+            n_pub, n_dup = t.publish_many(self.stream, items)
         return NatsCommitMessage(n_published=n_pub, n_duplicates=n_dup)
 
     def commit(self, messages, batch_id) -> None:
@@ -470,18 +255,7 @@ class NatsDataSource(DataSource):
         return NATS_SCHEMA
 
     def streamReader(self, schema: StructType) -> NatsPartitionedStreamReader:  # noqa: N802
-        # Default: partitioned executor-side reads. option("simple","true")
-        # falls back to the single-partition driver-side prefetch reader
-        # (Spark catches this error and calls simpleStreamReader).
-        if self.options.get("simple", "false").lower() == "true":
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         return NatsPartitionedStreamReader(self.options)
-
-    def simpleStreamReader(self, schema: StructType) -> NatsStreamReader:  # noqa: N802
-        return NatsStreamReader(self.options)
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> NatsStreamWriter:  # noqa: N802
         return NatsStreamWriter(self.options)

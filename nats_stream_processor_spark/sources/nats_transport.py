@@ -1,11 +1,22 @@
-"""Real JetStream transport for the `format("nats")` connector.
+"""Transports for the `format("nats")` connector: one interface, two
+backends, chosen by :func:`open_transport` from the ``servers`` URL.
 
-Synchronous facade over the asyncio nats-py client, callable from Spark's
-reader (driver) and writer (executor worker) processes: a dedicated
-background thread runs one event loop + one connection per transport
-instance, and each operation is submitted with
-``asyncio.run_coroutine_threadsafe`` — no event-loop juggling inside Spark
-tasks.
+Both expose ``ensure_stream``, ``last_seq``, ``fetch``, ``publish_many``,
+``connect``/``close`` and context-manager use, and both return
+:class:`FetchedMessage` rows, so the reader and writer never branch on the
+backend.
+
+- :class:`JetStreamTransport` (any non-``mem://`` URL): a synchronous
+  facade over the asyncio nats-py client, callable from Spark's reader
+  (driver) and writer (executor worker) processes. A dedicated background
+  thread runs one event loop + one connection per transport instance, and
+  each operation is submitted with ``asyncio.run_coroutine_threadsafe`` —
+  no event-loop juggling inside Spark tasks.
+- :class:`MemTransport` (``mem://<name>``): a file-backed JetStream
+  stand-in with per-stream sequences, ``<prefix>.>`` subject filters and
+  the ``Nats-Msg-Id`` duplicate window. File-backed (one jsonl per stream)
+  because Spark runs Python data sources in separate worker processes, so
+  an in-process dict would be invisible there.
 
 Reference parity (citations into /root/reference/src/nats_client.py):
 
@@ -24,12 +35,17 @@ Reference parity (citations into /root/reference/src/nats_client.py):
 nats-py is imported lazily at call time, so unit tests can install a
 scripted fake ``nats`` module in ``sys.modules`` (tests/fake_nats.py) and
 this module's logic runs unmodified; the container has no broker, so that
-fake is also the only way the code path executes here.
+fake is also the only way the JetStream path executes here.
 """
 
 from __future__ import annotations
 
 import asyncio
+import base64
+import fcntl
+import json
+import os
+import shutil
 import threading
 import time
 from dataclasses import dataclass, field
@@ -40,6 +56,8 @@ PUBLISH_TIMEOUT_S = 5.0  # reference: src/nats_client.py:254
 MAX_PUBLISH_RETRIES = 3  # reference: src/config.py MAX_RETRIES
 RETRY_DELAY_S = 1.0  # reference: src/config.py RETRY_DELAY
 FETCH_TIMEOUT_S = 5.0
+MEM_BROKER_DIR = os.environ.get(
+    "SPARK_GRAFT_MEM_BROKER_DIR", "/tmp/spark_graft_mem_broker")
 
 
 def _api():
@@ -196,12 +214,15 @@ class JetStreamTransport:
     # ------------------------------------------------------------- publish
 
     def publish_many(
-        self, items: list[tuple[str, bytes, str | None]]
+        self, stream: str, items: list[tuple[str, bytes, str | None]]
     ) -> tuple[int, int]:
         """Publish (subject, payload, msg_id) triples; returns
         (published, duplicates). Retries timeouts with linear backoff;
         retried publishes are idempotent because the Nats-Msg-Id header
-        makes the server drop re-sends inside the duplicate window."""
+        makes the server drop re-sends inside the duplicate window.
+        ``stream`` is the stream the caller writes to; the server routes
+        each message by its subject, so JetStream needs no more than the
+        subject."""
         return self._run(self._publish_many(items),
                          timeout=PUBLISH_TIMEOUT_S * (MAX_PUBLISH_RETRIES + 1)
                          * max(len(items), 1) + 30)
@@ -227,3 +248,117 @@ class JetStreamTransport:
                         raise
                     await asyncio.sleep(RETRY_DELAY_S * attempt)
         return n_pub, n_dup
+
+
+class MemTransport:
+    """File-backed JetStream stand-in for ``mem://<name>`` URLs (tests and
+    local demos). Same interface as :class:`JetStreamTransport`; the
+    duplicate window is unbounded, which is fine for tests."""
+
+    def __init__(self, servers: str):
+        self.root = os.path.join(MEM_BROKER_DIR, servers.removeprefix("mem://"))
+
+    def connect(self) -> "MemTransport":
+        return self
+
+    def close(self) -> None:
+        pass
+
+    def __enter__(self) -> "MemTransport":
+        return self.connect()
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+    def _path(self, stream: str) -> str:
+        return os.path.join(self.root, f"{stream}.jsonl")
+
+    def _lines(self, stream: str) -> list[dict]:
+        path = self._path(stream)
+        if not os.path.exists(path):
+            return []
+        with open(path) as f:
+            return [json.loads(ln) for ln in f if ln.strip()]
+
+    def ensure_stream(self, stream: str, subject_prefix: str) -> None:
+        os.makedirs(self.root, exist_ok=True)
+        open(self._path(stream), "a").close()
+
+    def last_seq(self, stream: str) -> int:
+        lines = self._lines(stream)
+        return lines[-1]["seq"] if lines else 0
+
+    def fetch(self, stream: str, start_seq: int, max_msgs: int,
+              subject_filter: str | None = None) -> list[FetchedMessage]:
+        out = []
+        for d in self._lines(stream):
+            if len(out) >= max_msgs:
+                break
+            if d["seq"] >= start_seq and _subject_matches(d["subject"],
+                                                          subject_filter):
+                out.append(FetchedMessage(
+                    d["subject"], base64.b64decode(d["data"]), d["seq"],
+                    d["ts"], d["headers"]))
+        return out
+
+    def publish_many(
+        self, stream: str, items: list[tuple[str, bytes, str | None]]
+    ) -> tuple[int, int]:
+        # Writer partitions publish from parallel Python worker processes;
+        # one exclusive flock around read+append per batch keeps the
+        # sequence monotonic and the duplicate scan race-free (the real
+        # server serializes publishes).
+        os.makedirs(self.root, exist_ok=True)
+        path = self._path(stream)
+        with open(path + ".lock", "w") as lockf:
+            fcntl.flock(lockf, fcntl.LOCK_EX)
+            existing = self._lines(stream)
+            seen = {d["headers"].get("Nats-Msg-Id") for d in existing}
+            seq = existing[-1]["seq"] if existing else 0
+            lines = []
+            for subject, payload, msg_id in items:
+                if msg_id:
+                    if msg_id in seen:
+                        continue
+                    seen.add(msg_id)
+                seq += 1
+                lines.append(json.dumps({
+                    "subject": subject, "data": base64.b64encode(payload).decode(),
+                    "seq": seq, "ts": time.time(),
+                    "headers": {"Nats-Msg-Id": msg_id} if msg_id else {},
+                }) + "\n")
+            with open(path, "a") as f:
+                f.writelines(lines)
+        return len(lines), len(items) - len(lines)
+
+
+def _subject_matches(subject: str, subject_filter: str | None) -> bool:
+    """JetStream filter match for the forms the connector uses: an exact
+    subject or ``<prefix>.>`` (one or more further tokens)."""
+    if not subject_filter:
+        return True
+    if subject_filter.endswith(".>"):
+        prefix = subject_filter[:-1]
+        return subject.startswith(prefix) and len(subject) > len(prefix)
+    return subject == subject_filter
+
+
+def mem_reset(servers: str) -> None:
+    """Drop all streams of a ``mem://`` broker (test isolation)."""
+    shutil.rmtree(MemTransport(servers).root, ignore_errors=True)
+
+
+def open_transport(servers: str) -> JetStreamTransport | MemTransport:
+    """The transport for a ``servers`` URL, not yet connected (use it as a
+    context manager or call ``connect()``). ``mem://<name>`` selects the
+    file-backed stand-in; any other URL needs nats-py."""
+    if servers.startswith("mem://"):
+        return MemTransport(servers)
+    try:
+        _api()
+    except ImportError as e:
+        raise ImportError(
+            "nats-py is required for a real NATS connection "
+            "(pip install nats-py); use servers='mem://<name>' for the "
+            "file-backed broker") from e
+    return JetStreamTransport(servers)

@@ -54,7 +54,6 @@ uniform under crc32.
 from __future__ import annotations
 
 import struct
-import zlib
 from collections.abc import Iterator
 from math import floor
 
@@ -250,8 +249,3 @@ def near_dup_verdicts(evidence: DataFrame) -> DataFrame:
                     .otherwise(F.lit("keep")).alias("verdict"),
                     F.coalesce("canon", "comp", "doc_id").cast("long")
                     .alias("canon_id")))
-
-
-def shard_of(bucket: str, shards: int = ND_SHARDS) -> int:
-    """The JVM shard route (crc32 % shards), for state checks."""
-    return zlib.crc32(bucket.encode()) % shards

@@ -10,12 +10,12 @@ module only adds the streaming-specific pieces:
   600 s duplicate_window, reference: src/nats_client.py:99,244-266 — the
   watermark bounds dedup state exactly like the server-side window);
 - the routed idempotent publish (P3/S3/R1, reference:
-  src/nats_client.py:220-286). The default sink is the executor-side
-  format("nats") DataSource writer (NatsSink below); tests inject a
-  callable, which routes through the driver-side debug_sink. Retries are
-  safe because the Nats-Msg-Id key makes re-publish idempotent (A0:
-  checkpoint replay + idempotent sink = effectively-once, an improvement
-  over the reference's ack-after-failed-publish hole, SURVEY.md §3 EP2.7).
+  src/nats_client.py:220-286) through the executor-side format("nats")
+  DataSource writer (NatsSink below) — the one sink, which the streaming
+  tests drive against the `mem://` broker. Retries are safe because the
+  Nats-Msg-Id key makes re-publish idempotent (A0: checkpoint replay +
+  idempotent sink = effectively-once, an improvement over the reference's
+  ack-after-failed-publish hole, SURVEY.md §3 EP2.7).
 
 At scale: dedup state is partitioned by the key columns and bounded by the
 watermark; maxOffsetsPerTrigger (S2) caps micro-batch admission the way
@@ -24,7 +24,6 @@ max_ack_pending=100 caps the reference's in-flight messages.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -100,52 +99,30 @@ def enrich_stream(
     )
 
 
-Publisher = Callable[[str, str, str | None], None]
-"""(subject, json_payload, msg_id) -> None. msg_id is None when uri/cid
-are missing (the reference skips the dedup header then,
-src/nats_client.py:248-252)."""
-
-
 @dataclass
 class NatsSink:
     """Executor-side publish target: each writer partition opens its own
     connection and publishes directly (sources/nats.py NatsStreamWriter) —
-    no micro-batch ever crosses the driver. This is the production sink;
-    a bare callable routes through the driver-side debug publisher
-    (streaming/debug_sink.py) and is for tests/bespoke sinks only."""
+    no micro-batch ever crosses the driver."""
 
     servers: str
     stream: str
-    default_subject: str = "bluesky.posts.enriched"
 
 
 def start_enrichment_query(
     posts_stream: DataFrame,
-    sink: "NatsSink | Publisher",
+    sink: NatsSink,
     checkpoint_dir: str,
     trigger_seconds: float | None = None,
 ):
-    """Wire decode -> enrich -> dedup -> routed publish and start it.
-
-    ``sink`` is a :class:`NatsSink` (default, scale-safe: the format("nats")
-    DataSourceStreamWriter publishes from executor workers) or a Publisher
-    callable (driver-side foreachBatch — test/debug path)."""
-    enriched = enrich_stream(posts_stream)
-    if isinstance(sink, NatsSink):
-        writer = (
-            enriched.writeStream.format("nats")
-            .option("servers", sink.servers)
-            .option("stream", sink.stream)
-            .option("defaultSubject", sink.default_subject)
-            .outputMode("append")
-        )
-    else:
-        from .debug_sink import make_publish_batch
-        writer = (
-            enriched.writeStream.outputMode("append")
-            .foreachBatch(make_publish_batch(sink))
-        )
-    writer = writer.option("checkpointLocation", checkpoint_dir)
+    """Wire decode -> enrich -> dedup -> routed publish and start it."""
+    writer = (
+        enrich_stream(posts_stream).writeStream.format("nats")
+        .option("servers", sink.servers)
+        .option("stream", sink.stream)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+    )
     if trigger_seconds:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()

@@ -46,9 +46,3 @@ def session_counts(df: DataFrame, ts_col: str, key: str,
         .select(key, F.col("w.start").alias("session_start"),
                 F.col("w.end").alias("session_end"), "n_events")
     )
-
-
-def label_distribution(df: DataFrame, label_col: str) -> DataFrame:
-    """M4/M5: running per-label counts (complete/update output mode) — the
-    streaming analog of label-partitioned Prometheus counters."""
-    return df.groupBy(label_col).agg(F.count("*").alias("n"))

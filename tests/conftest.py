@@ -149,3 +149,29 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture()
+def fake_nats(monkeypatch):
+    """Install the scripted fake nats-py module (tests/fake_nats.py) under
+    the names the JetStream transport imports; returns its broker."""
+    from tests.fake_nats import make_fake_nats
+
+    mod, broker = make_fake_nats()
+    monkeypatch.setitem(sys.modules, "nats", mod)
+    monkeypatch.setitem(sys.modules, "nats.js", mod.js)
+    monkeypatch.setitem(sys.modules, "nats.js.api", mod.js.api)
+    return broker
+
+
+@pytest.fixture()
+def mem_broker(spark, request) -> str:
+    """A fresh `mem://` broker named after the test, with format("nats")
+    registered on the session; returns its servers URL."""
+    from nats_stream_processor_spark.sources.nats import register
+    from nats_stream_processor_spark.sources.nats_transport import mem_reset
+
+    register(spark)
+    server = f"mem://{request.node.name}"
+    mem_reset(server)
+    return server

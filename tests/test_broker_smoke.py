@@ -63,7 +63,7 @@ def test_full_pipeline_against_live_broker():
 
     with JetStreamTransport(NATS_URL).connect() as t:
         t.ensure_stream(s_in, prefix_in)
-        t.publish_many([
+        t.publish_many(s_in, [
             (f"{prefix_in}posts", json.dumps(p).encode(), None)
             for p in POSTS
         ])

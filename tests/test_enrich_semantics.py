@@ -148,3 +148,31 @@ def test_probabilities_sum_to_one(spark):
     for r in enrich_posts(df).collect():
         p = r["sentiment"]["probabilities"]
         assert abs(p["negative"] + p["neutral"] + p["positive"] - 1.0) < 1e-5
+
+
+def test_flagship_mean_rounds_exact_tie_identically(spark):
+    """enrich_flagship's avg_confidence on a planted tie group: the mean
+    of 0.599313 and 0.599314 is exactly 0.5993135, which a double division
+    before round(…, 6) resolves differently in Spark and DuckDB. The
+    integer micro-unit form rounds it half-up to 0.599314 on both engines,
+    and leaves a non-tie group's mean as the plain 6dp rounding."""
+    import duckdb
+
+    from nats_stream_processor_spark.operators.enrich import mean_6dp_sql
+
+    rows = [("tie", 0.599313), ("tie", 0.599314)] + [
+        ("twelve", c) for c in (0.5, 0.6, 0.7, 0.8, 0.9, 0.400001,
+                                0.45, 0.55, 0.65, 0.75, 0.85, 0.95)]
+    got = {r["g"]: r["m"] for r in (
+        spark.createDataFrame(rows, "g string, c double")
+        .groupBy("g").agg(F.expr(mean_6dp_sql("c")).alias("m")).collect())}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (g VARCHAR, c DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    oracle = dict(con.execute(
+        f"SELECT g, {mean_6dp_sql('c', div='//')} FROM t GROUP BY g"
+    ).fetchall())
+    con.close()
+    assert got == oracle
+    assert got["tie"] == 0.599314
+    assert got["twelve"] == round(8.100001 / 12, 6) == 0.675

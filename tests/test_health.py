@@ -109,18 +109,18 @@ def test_cli_serves_health_endpoints(spark, tmp_path):
     import threading
     import time
 
-    from nats_stream_processor_spark.sources.nats import mem_reset, mem_stream
+    from tests.brokers import seed_posts
+
+    from nats_stream_processor_spark.sources.nats_transport import mem_reset
     import nats_stream_processor_spark.__main__ as cli
     from nats_stream_processor_spark.streaming.health import HealthServer
 
     server = "mem://cli-health-test"
     mem_reset(server)
-    ms = mem_stream(server, "bluesky-posts")
-    for i in range(10):
-        p = {"uri": f"at://u/{i}", "cid": f"c{i}", "author": "did:plc:x",
-             "text": f"lovely post number {i} about coffee and friends"}
-        ms.publish(f"bluesky.posts.c{i}", _json.dumps(p).encode(),
-                   ts=time.time())
+    seed_posts(server, [
+        {"uri": f"at://u/{i}", "cid": f"c{i}", "author": "did:plc:x",
+         "text": f"lovely post number {i} about coffee and friends"}
+        for i in range(10)])
 
     scraped: dict = {}
 

@@ -72,7 +72,9 @@ def test_ext5_certified_r8_and_rotated_behind():
     landed in CORRECTNESS_r08 (hash green), so from r9 on it rotates
     BEHIND the window like any other certified-and-unchanged query —
     what stays pinned is that it remains registered with an oracle."""
-    assert registry._ext5_names == ["sim_rrf_fusion"]
-    for n in registry._ext5_names:
+    ext5 = [n for n, e in registry.REGISTRY.items()
+            if e.fn.__wrapped__.__module__.endswith(".llm_ext5")]
+    assert ext5 == ["sim_rrf_fusion"]
+    for n in ext5:
         assert n in registry.REGISTRY
         assert registry.REGISTRY[n].oracle is not None

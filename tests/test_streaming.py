@@ -1,6 +1,8 @@
 """Structured Streaming tests: the reference's streaming semantics on a
-file source + memory/foreachBatch sinks (the mock-ingest pattern of the
-reference's docker-compose smoke loop, SURVEY.md §5).
+file source (the mock-ingest pattern of the reference's docker-compose
+smoke loop, SURVEY.md §5) into the service's own sink — format("nats")
+publishing to the file-backed `mem://` broker, read back message by
+message — plus memory/foreachBatch sinks for the stateful operators.
 
 Covers: JSON decode drops malformed rows (F2), the full enrich transform
 running in a stream, watermarked dedup (D1), subject routing + idempotency
@@ -20,9 +22,12 @@ from nats_stream_processor_spark.streaming.metrics import (
     MetricsListener,
     observe_pipeline_counters,
 )
-from nats_stream_processor_spark.streaming.debug_sink import make_publish_batch
+from tests.brokers import published
+
+from nats_stream_processor_spark.config import OUTPUT_STREAM
 from nats_stream_processor_spark.streaming.pipeline import (
     RAW_POST_SCHEMA,
+    NatsSink,
     decode_posts,
     enrich_stream,
     start_enrichment_query,
@@ -57,38 +62,35 @@ def posts_dir(tmp_path):
     return d
 
 
-def test_stream_enrich_dedup_and_routing(spark, posts_dir, tmp_path):
+def test_stream_enrich_dedup_and_routing(spark, posts_dir, mem_broker, tmp_path):
     raw = (
         spark.readStream.format("text")
         .load(str(posts_dir))
         .withColumnRenamed("value", "value")
     )
     posts = decode_posts(raw)
-    published: list[tuple] = []
-
-    def publisher(subject, payload, msg_id):
-        published.append((subject, json.loads(payload), msg_id))
-
-    q = start_enrichment_query(posts, publisher,
+    q = start_enrichment_query(posts, NatsSink(mem_broker, OUTPUT_STREAM),
                                str(tmp_path / "ckpt"))
     q.processAllAvailable()
     q.stop()
 
-    by_uri = {p[1]["uri"]: p for p in published}
+    msgs = published(mem_broker)
+    by_uri = {json.loads(m.data)["uri"]: m for m in msgs}
     # 6 raw + 1 malformed -> malformed dropped (F2), empty dropped (F4),
     # gated dropped (F5), duplicate dropped (D1) => 3 published
-    assert len(published) == 3
+    assert len(msgs) == 3
     assert set(by_uri) == {"at://test/1", "at://test/2", "at://test/5"}
-    subject, doc, msg_id = by_uri["at://test/1"]
-    assert subject.startswith("bluesky.posts.enriched.positive.")
-    assert msg_id == "at://test/1:c1"
+    m = by_uri["at://test/1"]
+    doc = json.loads(m.data)
+    assert m.subject.startswith("bluesky.posts.enriched.positive.")
+    assert m.headers == {"Nats-Msg-Id": "at://test/1:c1"}
     assert doc["sentiment"]["sentiment"] == "positive"
-    assert doc["topics"]["top_topic"] in subject
-    neg_subject = by_uri["at://test/2"][0]
+    assert doc["topics"]["top_topic"] in m.subject
+    neg_subject = by_uri["at://test/2"].subject
     assert neg_subject.startswith("bluesky.posts.enriched.negative.")
 
 
-def test_stream_null_cid_posts_not_collapsed(spark, tmp_path):
+def test_stream_null_cid_posts_not_collapsed(spark, mem_broker, tmp_path):
     # D1 edge: the reference publishes WITHOUT a Nats-Msg-Id header when
     # cid is missing (src/nats_client.py:248-252) — no dedup. Two distinct
     # null-cid posts sharing a uri must therefore BOTH be published (the
@@ -102,41 +104,56 @@ def test_stream_null_cid_posts_not_collapsed(spark, tmp_path):
         {"uri": "at://n/2", "cid": "c2", "text": "I hate this weather"},
     ])
     raw = spark.readStream.format("text").load(str(d))
-    published: list[tuple] = []
-
-    def publisher(subject, payload, msg_id):
-        published.append((json.loads(payload)["uri"], msg_id))
-
-    q = start_enrichment_query(decode_posts(raw), publisher,
+    q = start_enrichment_query(decode_posts(raw),
+                               NatsSink(mem_broker, OUTPUT_STREAM),
                                str(tmp_path / "ckpt_nullcid"))
     q.processAllAvailable()
     q.stop()
-    uris = sorted(u for u, _ in published)
-    assert uris == ["at://n/1", "at://n/1", "at://n/2"]
+    got = [(json.loads(m.data)["uri"], m.headers.get("Nats-Msg-Id"))
+           for m in published(mem_broker)]
+    assert sorted(u for u, _ in got) == ["at://n/1", "at://n/1", "at://n/2"]
     # null-cid rows publish without a msg id (reference parity)
-    assert [m for u, m in published if u == "at://n/1"] == [None, None]
-    assert [m for u, m in published if u == "at://n/2"] == ["at://n/2:c2"]
+    assert [m for u, m in got if u == "at://n/1"] == [None, None]
+    assert [m for u, m in got if u == "at://n/2"] == ["at://n/2:c2"]
 
 
-def test_stream_restart_does_not_republish(spark, posts_dir, tmp_path):
+def test_stream_empty_cid_published_without_msg_id(spark, mem_broker, tmp_path):
+    # D1 edge: the reference's header guard is truthiness (`if post_uri
+    # and post_cid`, src/nats_client.py:248-252), so an empty-string cid
+    # gets no Nats-Msg-Id (never the id "uri:"), and two distinct posts
+    # sharing a uri with ''-cids are both published.
+    d = tmp_path / "in_emptycid"
+    write_json_lines(d / "posts.jsonl", [
+        {"uri": "at://e/1", "cid": "", "text": "This is a great day!"},
+        {"uri": "at://e/1", "cid": "", "text": "great technology news today"},
+    ])
+    raw = spark.readStream.format("text").load(str(d))
+    q = start_enrichment_query(decode_posts(raw),
+                               NatsSink(mem_broker, OUTPUT_STREAM),
+                               str(tmp_path / "ckpt_emptycid"))
+    q.processAllAvailable()
+    q.stop()
+    msgs = published(mem_broker)
+    assert [json.loads(m.data)["cid"] for m in msgs] == ["", ""]
+    assert [m.headers for m in msgs] == [{}, {}]
+
+
+def test_stream_restart_does_not_republish(spark, posts_dir, mem_broker, tmp_path):
     # A0: checkpoint replay — restarting the query over the same source
-    # publishes nothing new (offsets committed).
-    raw = spark.readStream.format("text").load(str(posts_dir))
-    posts = decode_posts(raw)
-    out: list = []
-
-    def publisher(subject, payload, msg_id):
-        out.append(msg_id)
-
+    # runs no batch with input and publishes nothing new (offsets
+    # committed).
+    posts = decode_posts(spark.readStream.format("text").load(str(posts_dir)))
+    sink = NatsSink(mem_broker, OUTPUT_STREAM)
     ckpt = str(tmp_path / "ckpt2")
-    q = start_enrichment_query(posts, publisher, ckpt)
+    q = start_enrichment_query(posts, sink, ckpt)
     q.processAllAvailable(); q.stop()
-    n_first = len(out)
-    assert n_first == 3
+    first = published(mem_broker)
+    assert len(first) == 3
 
-    q2 = start_enrichment_query(posts, publisher, ckpt)
+    q2 = start_enrichment_query(posts, sink, ckpt)
     q2.processAllAvailable(); q2.stop()
-    assert len(out) == n_first  # nothing re-published
+    assert all(p.numInputRows == 0 for p in q2.recentProgress)
+    assert published(mem_broker) == first  # nothing re-published
 
 
 def test_observe_counters_and_listener(spark, posts_dir, tmp_path):
@@ -245,7 +262,7 @@ def test_enrich_stream_batch_mode_parity(spark):
     assert out[0]["sentiment"]["sentiment"] == "positive"
 
 
-def test_rate_source_mock_ingest(spark, tmp_path):
+def test_rate_source_mock_ingest(spark, mem_broker, tmp_path):
     """The reference's mock-ingest smoke loop (docker-compose.yml:16-34) on
     Spark's rate source: synthesize alternating positive/negative posts at
     a fixed rate, run the full enrichment, check both classes flow through."""
@@ -257,16 +274,13 @@ def test_rate_source_mock_ingest(spark, tmp_path):
         F.when(F.col("value") % 2 == 0, "This is a great day!")
         .otherwise("I hate this weather").alias("text"),
     )
-    out: list = []
-
-    def publisher(subject, payload, msg_id):
-        out.append(subject)
-
-    q = start_enrichment_query(posts, publisher, str(tmp_path / "rate_ckpt"))
+    q = start_enrichment_query(posts, NatsSink(mem_broker, OUTPUT_STREAM),
+                               str(tmp_path / "rate_ckpt"))
     deadline = time.time() + 30
-    while time.time() < deadline and len(out) < 10:
+    while time.time() < deadline and len(published(mem_broker)) < 10:
         time.sleep(0.5)
     q.stop()
+    out = [m.subject for m in published(mem_broker)]
     assert len(out) >= 10
     assert any(".positive." in s for s in out)
     assert any(".negative." in s for s in out)
