@@ -17,9 +17,11 @@ bottom of this module), grouped by domain:
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -98,13 +100,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# Estimated scan-partition counts, keyed by (file list, split confs,
-# parallelism). File sizes are stable for a session (testdata is
-# immutable), so the estimate never needs recomputing — and the first
-# computation is pure os.stat, no Spark planning at all.
-_SCAN_PARTS_CACHE: dict[tuple, int] = {}
-
-
 _BYTE_SUFFIX = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
                 "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30,
                 "t": 1 << 40, "tb": 1 << 40}
@@ -145,37 +140,12 @@ def _is_scan_narrow_plan(df: DataFrame) -> bool:
     return not any(m in s for m in _WIDE_PLAN_MARKERS)
 
 
-def _estimated_scan_partitions(spark: SparkSession, df: DataFrame) -> int | None:
-    """How many partitions the file scan will yield, estimated from file
-    sizes with Spark's own FilePartition packing formula (maxSplitBytes =
-    min(maxPartitionBytes, max(openCostInBytes, padded_total /
-    defaultParallelism)); partitions ~ ceil(padded_total / maxSplitBytes)).
-    Returns None for non-file or non-local sources. Cheap by construction:
-    ``inputFiles()`` is analysis-only (~2 ms warm) and the sizes come from
-    os.stat — unlike ``df.rdd``, which forces a full physical planning
-    round-trip (measured 0.16-1.3 s per call on the wide dedup plans; with
-    ~30 spread sites that was a ~20% tax on the whole bench)."""
-    import os
-    from urllib.parse import urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    max_pb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes",
-                         128 * 1024 * 1024)
-    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes",
-                            4 * 1024 * 1024)
-    par = spark.sparkContext.defaultParallelism
-    # The estimate depends on the split confs and parallelism, so they are
-    # part of the cache key — a recreated session with different settings
-    # must not inherit another session's count.
-    key = (tuple(sorted(files)), max_pb, open_cost, par)
-    hit = _SCAN_PARTS_CACHE.get(key)
-    if hit is not None:
-        return hit
+@functools.lru_cache(maxsize=64)
+def _file_sizes(files: tuple[str, ...]) -> tuple[int, ...] | None:
+    """os.stat sizes of a scan's files, memoized with a bound: file
+    sizes are stable for a session (testdata is immutable), so the first
+    lookup is the only one. None when any file is non-local or
+    missing."""
     sizes = []
     for f in files:
         u = urlparse(f)
@@ -185,6 +155,35 @@ def _estimated_scan_partitions(spark: SparkSession, df: DataFrame) -> int | None
             sizes.append(os.path.getsize(u.path))
         except OSError:
             return None
+    return tuple(sizes)
+
+
+def _scan_file_sizes(df: DataFrame) -> tuple[int, ...] | None:
+    """File sizes behind a file scan; None for non-file or non-local
+    sources. Cheap by construction: ``inputFiles()`` is analysis-only
+    (~2 ms warm) and the sizes come from the memoized os.stat — unlike
+    ``df.rdd``, which forces a full physical planning round-trip
+    (measured 0.16-1.3 s per call on the wide dedup plans; with ~30
+    spread sites that was a ~20% tax on the whole bench)."""
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return None
+    return _file_sizes(tuple(sorted(files))) if files else None
+
+
+def _estimated_scan_partitions(spark: SparkSession,
+                               sizes: tuple[int, ...]) -> int:
+    """How many partitions a file scan over files of these sizes will
+    yield, with Spark's own FilePartition packing formula (maxSplitBytes
+    = min(maxPartitionBytes, max(openCostInBytes, padded_total /
+    defaultParallelism)); partitions ~ ceil(padded_total /
+    maxSplitBytes))."""
+    max_pb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes",
+                         128 * 1024 * 1024)
+    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes",
+                            4 * 1024 * 1024)
+    par = spark.sparkContext.defaultParallelism
     bytes_per_core = (sum(sizes) + len(sizes) * open_cost) // max(par, 1)
     max_split = min(max_pb, max(open_cost, bytes_per_core))
     # Replay FilePartition.getFilePartitions: chunk each file into
@@ -203,7 +202,6 @@ def _estimated_scan_partitions(spark: SparkSession, df: DataFrame) -> int | None
             est += 1
             cur = 0
         cur += c + open_cost
-    _SCAN_PARTS_CACHE[key] = est
     return est
 
 
@@ -217,38 +215,6 @@ def _estimated_scan_partitions(spark: SparkSession, df: DataFrame) -> int | None
 # spread gate is a no-op anyway, so the floor never binds.
 PY_MIN_SPLIT_BYTES = int(os.environ.get(
     "SPARK_GRAFT_PY_MIN_SPLIT_BYTES", str(64 * 1024)))
-
-_SCAN_BYTES_CACHE: dict[tuple, int] = {}
-
-
-def _estimated_scan_bytes(df: DataFrame) -> int | None:
-    """Total on-disk bytes behind a file scan (memoized os.stat, same
-    cheap discipline as _estimated_scan_partitions); None for non-file
-    or non-local sources."""
-    from urllib.parse import urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    key = tuple(sorted(files))
-    hit = _SCAN_BYTES_CACHE.get(key)
-    if hit is not None:
-        return hit
-    total = 0
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(u.path)
-        except OSError:
-            return None
-    _SCAN_BYTES_CACHE[key] = total
-    return total
-
 
 def spread(df: DataFrame, n: int | None = None,
            min_bytes_per_partition: int | None = None) -> DataFrame:
@@ -264,7 +230,7 @@ def spread(df: DataFrame, n: int | None = None,
     repartition is gated: if the plan already yields >= the target number of
     partitions (or the session conf ``spark.nats_spark.spread.enabled`` is
     ``false``), the input is returned untouched, plan identity preserved.
-    The partition count comes from a memoized file-size estimate
+    The partition count comes from the scan's memoized file sizes
     (_estimated_scan_partitions); only non-file inputs fall back to asking
     the planner via ``df.rdd``. Apply before CPU-bound per-row work or
     before a PARTIAL aggregate (the round-robin exchange feeds the
@@ -290,15 +256,13 @@ def spread(df: DataFrame, n: int | None = None,
     if str(enabled).lower() == "false":
         return df
     target = n or spark.sparkContext.defaultParallelism
-    if min_bytes_per_partition:
-        nbytes = (_estimated_scan_bytes(df)
-                  if _is_scan_narrow_plan(df) else None)
-        if nbytes is not None:
-            target = max(1, min(target,
-                                math.ceil(nbytes / min_bytes_per_partition)))
-    current = (_estimated_scan_partitions(spark, df)
-               if _is_scan_narrow_plan(df) else None)
-    if current is None:
+    sizes = _scan_file_sizes(df) if _is_scan_narrow_plan(df) else None
+    if min_bytes_per_partition and sizes is not None:
+        target = max(1, min(target,
+                            math.ceil(sum(sizes) / min_bytes_per_partition)))
+    if sizes is not None:
+        current = _estimated_scan_partitions(spark, sizes)
+    else:
         # Non-file source or partitioning-changing plan: ask the planner
         # (physical planning, no job).
         current = df.rdd.getNumPartitions()

@@ -27,9 +27,11 @@ Determinism discipline: digests are computed JVM-side (F.md5 over the
 raw text — the Python kernel never sees text, only 32-hex keys); the
 kernel sorts each micro-batch's rows by doc_id before the keep scan, so
 emission is independent of Arrow batch arrival order; the state bytes
-are canonical. tests/test_streaming.py asserts (a) the final state
-byte-identical to the batch kernel's digest sets — directly, via the
-``statestore`` data source; (b) a two-phase run (history files, then a
+are canonical. On a static frame the same operator is a single-pass
+corpus dedup (``stateful.keyed_state``'s static mode), the oracle the
+stream is compared against. tests/test_streaming.py asserts (a) the
+final state byte-identical to the canonical digest sets — directly, via
+the ``statestore`` data source; (b) a two-phase run (history files, then a
 NEW batch resumed from the same checkpoint — state restore exercised)
 whose phase-2 emissions reproduce ``dedup_incremental_batch``'s
 certified output relation exactly.
@@ -37,15 +39,13 @@ certified output relation exactly.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .stateful import keyed_state
 
 DD_OUT_SCHEMA = "doc_id long, content_key string, keep boolean"
-DD_STATE_SCHEMA = "digests binary"
 DD_SHARDS = 8
 
 
@@ -77,12 +77,10 @@ def _keep_scan(seen: set[bytes], pdf: pd.DataFrame) -> pd.DataFrame:
                          "keep": keeps})
 
 
-def _update_shard(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    seen = digests_decode(bytes(state.get[0])) if state.exists else set()
-    batch = pd.concat(list(pdfs), ignore_index=True)
-    out = _keep_scan(seen, batch)
-    state.update((digests_encode(seen),))
-    yield out
+def _shard_step(key, state: bytes | None, rows: pd.DataFrame):
+    seen = digests_decode(state) if state else set()
+    out = _keep_scan(seen, rows)
+    return digests_encode(seen), out
 
 
 def _keyed(df: DataFrame, id_col: str, text_col: str,
@@ -100,55 +98,26 @@ def _keyed(df: DataFrame, id_col: str, text_col: str,
 def dedup_keep_stream(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text",
                       shards: int = DD_SHARDS) -> DataFrame:
-    """STREAMING: exact-dedup keep/drop verdicts with the digest store
-    as per-shard managed state (module comment above). Update mode; one
+    """Exact-dedup keep/drop verdicts with the digest store as
+    per-shard managed state (module comment above). Update mode; one
     output row per input row; state survives restarts via the
     checkpoint — a resumed query dedups against everything any earlier
-    run saw.
-
-    Precondition for ROW-EXACT parity with dedup_keep_batch (which
-    keeps the globally-smallest id per digest): micro-batch arrival
-    order must respect ``id_col`` order — e.g. doc_id-range source
-    files with increasing mtimes. Hash-partitioned or unordered input
-    still satisfies the order-robust laws (exactly one keeper per
-    digest, identical state bytes), but the keeper CHOICE may differ
-    from the batch twin's (it keeps the first seen, r14 advice)."""
-    return (_keyed(df, id_col, text_col, shards)
-            .groupBy("shard")
-            .applyInPandasWithState(
-                _update_shard,
-                outputStructType=DD_OUT_SCHEMA,
-                stateStructType=DD_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            ))
-
-
-def _batch_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-    return _keep_scan(set(), pdf)
-
-
-def dedup_keep_batch(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     shards: int = DD_SHARDS) -> DataFrame:
-    """BATCH twin: the identical kernel over a static frame — the
-    determinism oracle for the streaming path (a single-pass corpus
-    dedup, keep-first-by-doc_id; equals exact dedup because digest
+    run saw. On a static frame: one pass per shard, keeping the
+    globally smallest doc_id per digest (exact dedup, since digest
     routing is deterministic per shard).
 
-    Row-exact parity precondition: this twin keeps the GLOBALLY
-    smallest doc_id per digest, while the stream keeps the first-SEEN
-    occurrence (smallest doc_id within the first micro-batch that
-    carries the digest). The two verdicts coincide exactly when
-    micro-batch boundaries partition the doc_id order — i.e. every
-    doc_id in batch i is smaller than every doc_id in batch i+1.
-    Hash-partitioned parquet files do NOT guarantee that;
-    tests/test_streaming.py's planted-duplicates test writes its
-    stream input as doc_id-RANGE files with increasing mtimes so the
-    file-listing trigger order respects it. When batch order is
-    arbitrary, the order-robust laws still hold (and are what the
-    state checks assert): one keeper per digest, and the final state
-    bytes equal the canonical encoding of the full digest set."""
-    return (_keyed(df, id_col, text_col, shards)
-            .groupBy("shard")
-            .applyInPandas(_batch_shard, DD_OUT_SCHEMA))
+    Precondition for ROW-EXACT parity between the stream and the same
+    operator on the static frame: the stream keeps the first-SEEN
+    occurrence (the smallest doc_id within the first micro-batch that
+    carries the digest), so the verdicts coincide exactly when
+    micro-batch boundaries partition the ``id_col`` order — every
+    doc_id in batch i smaller than every doc_id in batch i+1 (e.g.
+    doc_id-range source files with increasing mtimes, as
+    tests/test_streaming.py's planted-duplicates test writes them).
+    Hash-partitioned parquet files do NOT guarantee that. With
+    arbitrary batch order the order-robust laws still hold (and are
+    what the state checks assert): one keeper per digest, and the
+    final state bytes equal the canonical encoding of the full digest
+    set — but the keeper CHOICE may differ."""
+    return keyed_state(_keyed(df, id_col, text_col, shards), ["shard"],
+                       _shard_step, DD_OUT_SCHEMA)

@@ -4,7 +4,7 @@ registry, src/service.py:174-253 stats loop).
 
 The reference runs a FastAPI app with three endpoints backed by a
 prometheus_client registry. Here the metric source is Spark's own
-streaming telemetry — the ``MetricsListener`` ProgressRecords (rates,
+streaming telemetry — the ``MetricsListener`` running totals (rates,
 batch durations, ``df.observe`` counters) — rendered into the public
 Prometheus text exposition format 0.0.4 by hand, so no server-side
 dependency beyond the stdlib is needed:
@@ -17,11 +17,9 @@ dependency beyond the stdlib is needed:
   names (metrics.py:5-70): posts processed/published counters, batch
   duration histogram, rate + lag gauges.
 
-Scale note: the listener runs on the driver and holds O(batches) small
-records; the exposition pass is O(records). At very long uptimes, cap
-with ``MetricsListener(records=deque(maxlen=...))``-style trimming —
-counters below are running totals, so trimming only affects the
-duration histogram's tail, and a scrape never touches executors.
+Scale note: the listener runs on the driver and keeps running totals of
+fixed size, so a scrape is O(1) at any uptime and never touches
+executors.
 """
 
 from __future__ import annotations
@@ -30,45 +28,30 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from .metrics import MetricsListener
-
-# Reference bucket boundaries (src/metrics.py:48-53,
-# processing_duration_seconds) — reused for the per-batch duration
-# histogram, the closest Spark-native analog.
-DURATION_BUCKETS = [0.01, 0.05, 0.1, 0.2, 0.5, 1.0, 2.0, 5.0]
+from .metrics import DURATION_BUCKETS, MetricsListener
 
 _PREFIX = "stream_processor"
-
-
-def _observed_total(listener: MetricsListener, key: str) -> int:
-    total = 0
-    for rec in listener.records:
-        for metrics in rec.observed_metrics.values():
-            v = metrics.get(key)
-            if v is not None:
-                total += int(v)
-    return total
 
 
 def snapshot(listener: MetricsListener, connected: bool = True) -> dict:
     """One coherent view of the pipeline's counters and gauges — the
     dict behind both /metrics and ad-hoc status queries."""
-    records = list(listener.records)
-    last = records[-1] if records else None
-    return {
-        "posts_processed_total": _observed_total(listener, "n_processed"),
-        "posts_published_total": _observed_total(listener, "n_published"),
-        "posts_empty_text_total": _observed_total(listener, "n_empty_text"),
-        "posts_gated_total": _observed_total(listener, "n_gated"),
-        "batches_total": len(records),
-        "input_rows_total": sum(r.num_input_rows for r in records),
-        "input_rows_per_second": last.input_rows_per_second if last else 0.0,
-        "processed_rows_per_second":
-            last.processed_rows_per_second if last else 0.0,
-        "last_batch_duration_ms": last.batch_duration_ms if last else 0,
-        "nats_connected": 1 if connected else 0,
-        "batch_durations_s": [r.batch_duration_ms / 1000.0 for r in records],
-    }
+    with listener.lock:
+        return {
+            "posts_processed_total": listener.observed.get("n_processed", 0),
+            "posts_published_total": listener.observed.get("n_published", 0),
+            "posts_empty_text_total": listener.observed.get("n_empty_text", 0),
+            "posts_gated_total": listener.observed.get("n_gated", 0),
+            "batches_total": listener.batches,
+            "input_rows_total": listener.input_rows,
+            "input_rows_per_second": listener.input_rows_per_second,
+            "processed_rows_per_second": listener.processed_rows_per_second,
+            "last_batch_duration_ms": listener.last_batch_duration_ms,
+            "nats_connected": 1 if connected else 0,
+            "duration_buckets": list(zip(DURATION_BUCKETS,
+                                         listener.duration_buckets)),
+            "duration_sum_s": listener.duration_sum_s,
+        }
 
 
 def prometheus_text(listener: MetricsListener, connected: bool = True) -> str:
@@ -114,16 +97,13 @@ def prometheus_text(listener: MetricsListener, connected: bool = True) -> str:
     # Histogram of per-batch trigger durations (reference
     # processing_duration_seconds shape, per-batch granularity).
     name = f"{p}_processing_duration_seconds"
-    durations = s["batch_durations_s"]
     lines.append(f"# HELP {name} Micro-batch trigger durations")
     lines.append(f"# TYPE {name} histogram")
-    cumulative = 0
-    for b in DURATION_BUCKETS:
-        cumulative = sum(1 for d in durations if d <= b)
-        lines.append(f'{name}_bucket{{le="{b}"}} {cumulative}')
-    lines.append(f'{name}_bucket{{le="+Inf"}} {len(durations)}')
-    lines.append(f"{name}_sum {sum(durations)}")
-    lines.append(f"{name}_count {len(durations)}")
+    for le, cumulative in s["duration_buckets"]:
+        lines.append(f'{name}_bucket{{le="{le}"}} {cumulative}')
+    lines.append(f'{name}_bucket{{le="+Inf"}} {s["batches_total"]}')
+    lines.append(f"{name}_sum {s['duration_sum_s']}")
+    lines.append(f"{name}_count {s['batches_total']}")
     return "\n".join(lines) + "\n"
 
 

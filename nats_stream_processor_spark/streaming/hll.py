@@ -5,10 +5,8 @@ The streaming half of the mergeable-sketch story:
 twin — one Datasketches HLL per base hour, sliding windows as unions
 over the hourly sketch binaries. A streaming job keeps the same hourly
 sketches as MANAGED STATE: each micro-batch folds its rows into the
-hour bucket's registers via ``applyInPandasWithState`` (the
-env-available arbitrary-state API; ``transformWithStateInPandas``
-stays protobuf-gated, see streaming/stateful.py) and emits the
-updated sketch + estimate per touched hour. Sliding windows then
+hour bucket's registers through ``stateful.keyed_state`` and emits
+the updated sketch + estimate per touched hour. Sliding windows then
 union <= W hourly register arrays — sketch rows, never events — the
 identical fan-out law the batch operator certifies.
 
@@ -18,7 +16,8 @@ linear-counting correction) rather than Spark's JVM Datasketches
 binary: the streaming state lives Python-side, and byte-for-byte
 determinism between the BATCH and STREAMING paths is the whole proof
 obligation — tests/test_streaming.py asserts final streaming registers
-== batch registers computed by the same kernel over the same rows, so
+== the registers the same operator computes on the static frame of the
+same rows (one step per hour, ``keyed_state``'s static mode), so
 window unions and estimates agree exactly, and the estimates sit
 within the batch operator's 5% tolerance of the exact counts.
 """
@@ -27,18 +26,17 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .stateful import hour_col, keyed_state
 
 HLL_PY_LG_K = 12                 # 4096 registers (~1.6% rel. std. error)
 HLL_PY_M = 1 << HLL_PY_LG_K
 
 HLL_OUT_SCHEMA = "h long, n_events long, regs binary, estimate double"
-HLL_STATE_SCHEMA = "regs binary"
 
 
 def _hash64(value: str) -> int:
@@ -78,62 +76,23 @@ def hll_estimate(regs: bytes) -> float:
     return raw
 
 
-def _hour_rows(df: DataFrame, ts_col: str, id_col: str) -> DataFrame:
-    # Same hour bucketing as the batch twin (`div` truncates toward
-    # zero in both engines — tests/test_engine_semantics.py).
-    return df.select(
-        F.expr(f"unix_micros({ts_col}) div 3600000000")
-        .cast("long").alias("h"),
-        F.col(id_col).cast("string").alias("uid"))
-
-
-def _update_hour(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    regs = bytearray(state.get[0]) if state.exists \
-        else bytearray(HLL_PY_M)
-    n = 0
-    for pdf in pdfs:
-        n += len(pdf)
-        hll_update(regs, pdf["uid"])
-    state.update((bytes(regs),))
-    yield pd.DataFrame({
-        "h": [key[0]], "n_events": [n],
+def _hour_step(key, state: bytes | None, rows: pd.DataFrame):
+    regs = bytearray(state) if state else bytearray(HLL_PY_M)
+    hll_update(regs, rows["uid"])
+    return bytes(regs), pd.DataFrame({
+        "h": [key[0]], "n_events": [len(rows)],
         "regs": [bytes(regs)], "estimate": [hll_estimate(regs)],
     })
 
 
 def hourly_distinct_hll(df: DataFrame, ts_col: str = "ts",
                         id_col: str = "user_id") -> DataFrame:
-    """STREAMING: per-hour HLL sketch state. Each micro-batch emits the
-    updated (sketch, estimate) for every hour it touched (update
-    mode); the last emit per hour is the final sketch. State is
-    partitioned by the hour key — horizontal scale is |hours| x
-    register-array bytes, never event volume — and survives restarts
-    via the checkpoint."""
-    return (_hour_rows(df, ts_col, id_col)
-            .groupBy("h")
-            .applyInPandasWithState(
-                _update_hour,
-                outputStructType=HLL_OUT_SCHEMA,
-                stateStructType=HLL_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            ))
-
-
-def _batch_hour(pdf: pd.DataFrame) -> pd.DataFrame:
-    regs = bytearray(HLL_PY_M)
-    hll_update(regs, pdf["uid"])
-    return pd.DataFrame({
-        "h": [int(pdf["h"].iloc[0])], "n_events": [len(pdf)],
-        "regs": [bytes(regs)], "estimate": [hll_estimate(regs)],
-    })
-
-
-def hourly_distinct_hll_batch(df: DataFrame, ts_col: str = "ts",
-                              id_col: str = "user_id") -> DataFrame:
-    """BATCH twin: the identical kernel over a static frame — the
-    determinism oracle for the streaming path (and the shape a backfill
-    job uses to seed the state store)."""
-    return (_hour_rows(df, ts_col, id_col)
-            .groupBy("h")
-            .applyInPandas(_batch_hour, HLL_OUT_SCHEMA))
+    """Per-hour HLL sketch state. Each micro-batch emits the updated
+    (sketch, estimate) for every hour it touched (update mode); the
+    last emit per hour is the final sketch. State is partitioned by the
+    hour key — horizontal scale is |hours| x register-array bytes, never
+    event volume — and survives restarts via the checkpoint. On a
+    static frame: one row per hour over all its rows."""
+    rows = df.select(hour_col(ts_col),
+                     F.col(id_col).cast("string").alias("uid"))
+    return keyed_state(rows, ["h"], _hour_step, HLL_OUT_SCHEMA)

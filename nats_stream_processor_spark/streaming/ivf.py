@@ -26,51 +26,34 @@ the final state counts equal ``sim_ivf_list_balance``'s n_vecs column
 exactly; fed corpus-then-batch phases across a checkpoint RESUME, the
 restored-and-updated counts equal ``sim_ivf_insert``'s post-insert
 list sizes; state bytes are the canonical sorted (cent_id, count)
-encoding, checked through the ``statestore`` source.
+encoding (``stateful.pairs_encode``), checked through the
+``statestore`` source.
 """
 
 from __future__ import annotations
 
-import struct
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators import similarity as sim
+from .stateful import keyed_state, pairs_decode, pairs_encode
 
 IVS_OUT_SCHEMA = "cent_id long, n_vecs long"
-IVS_STATE_SCHEMA = "counts binary"
 IVS_SHARDS = 4
 
 
-def counts_encode(counts: dict[int, int]) -> bytes:
-    """Canonical bytes: sorted (cent_id i64, count i64) pairs. Equal
-    histograms <=> equal bytes."""
-    return b"".join(struct.pack(">qq", c, counts[c])
-                    for c in sorted(counts))
-
-
-def counts_decode(blob: bytes) -> dict[int, int]:
-    return {c: n for c, n in struct.iter_unpack(">qq", blob)}
-
-
-def _count_shard(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    counts = (counts_decode(bytes(state.get[0]))
-              if state.exists else {})
-    batch = pd.concat(list(pdfs), ignore_index=True)
+def _shard_step(key, state: bytes | None, rows: pd.DataFrame):
+    counts = pairs_decode(state) if state else {}
     touched = set()
-    for cent_id in batch["cent_id"]:
+    for cent_id in rows["cent_id"]:
         cent_id = int(cent_id)
         counts[cent_id] = counts.get(cent_id, 0) + 1
         touched.add(cent_id)
-    state.update((counts_encode(counts),))
     t = sorted(touched)
-    yield pd.DataFrame({"cent_id": pd.array(t, dtype="int64"),
-                        "n_vecs": pd.array([counts[c] for c in t],
-                                           dtype="int64")})
+    return pairs_encode(counts), pd.DataFrame({
+        "cent_id": pd.array(t, dtype="int64"),
+        "n_vecs": pd.array([counts[c] for c in t], dtype="int64")})
 
 
 def assigned(df: DataFrame, cent: DataFrame,
@@ -133,17 +116,11 @@ def list_counts_stream(df: DataFrame, cent: DataFrame,
                        vec_col: str = "embedding",
                        id_col: str = "vec_id",
                        shards: int = IVS_SHARDS) -> DataFrame:
-    """STREAMING: running inverted-list sizes as per-shard managed
-    state (module comment above). Update mode; each micro-batch emits
-    one (cent_id, n_vecs) row per touched list with its running count;
-    state survives restarts via the checkpoint, so a resumed monitor
-    continues the histogram where any earlier run left it."""
-    return (assigned(df, cent, vec_col, id_col, shards)
-            .groupBy("shard")
-            .applyInPandasWithState(
-                _count_shard,
-                outputStructType=IVS_OUT_SCHEMA,
-                stateStructType=IVS_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            ))
+    """Running inverted-list sizes as per-shard managed state (module
+    comment above). Update mode; each micro-batch emits one (cent_id,
+    n_vecs) row per touched list with its running count; state survives
+    restarts via the checkpoint, so a resumed monitor continues the
+    histogram where any earlier run left it. On a static frame: one row
+    per non-empty list with its size."""
+    return keyed_state(assigned(df, cent, vec_col, id_col, shards),
+                       ["shard"], _shard_step, IVS_OUT_SCHEMA)

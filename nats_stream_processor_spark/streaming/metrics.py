@@ -16,80 +16,78 @@ src/service.py:174-253) via Spark's native mechanisms:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
-from ..functions.sentiment import confidence_gate
-from ..functions.text import non_empty_text
+from ..functions.text import extract_text_col, non_empty_text
+
+# Reference bucket boundaries (src/metrics.py:48-53,
+# processing_duration_seconds) — reused for the per-batch duration
+# histogram, the closest Spark-native analog.
+DURATION_BUCKETS = [0.01, 0.05, 0.1, 0.2, 0.5, 1.0, 2.0, 5.0]
 
 
 def observe_pipeline_counters(df: DataFrame, name: str = "pipeline") -> DataFrame:
-    """Attach M1 counters (processed/published split) to any stage of the
-    pipeline; values arrive in QueryProgress.observedMetrics[name]."""
-    has_text = non_empty_text(F.coalesce(F.col("text"), F.lit("")))
-    counters = [
-        F.count(F.lit(1)).alias("n_processed"),
-        F.count(F.when(~has_text, 1)).alias("n_empty_text"),
-    ]
-    if "sentiment" in df.columns:
-        counters += [
-            F.count(F.when(~confidence_gate("sentiment"), 1)).alias("n_gated"),
-            F.count(F.when(confidence_gate("sentiment"), 1)).alias("n_published"),
-        ]
-    return df.observe(name, *counters)
+    """Attach the M1 input counters (processed, empty text — the same
+    extracted text enrich_posts filters on) to a decoded post frame;
+    values arrive in QueryProgress.observedMetrics[name]."""
+    has_text = non_empty_text(extract_text_col(set(df.columns)))
+    return df.observe(name, F.count(F.lit(1)).alias("n_processed"),
+                      F.count(F.when(~has_text, 1)).alias("n_empty_text"))
 
 
-@dataclass
-class ProgressRecord:
-    batch_id: int
-    num_input_rows: int
-    input_rows_per_second: float
-    processed_rows_per_second: float
-    batch_duration_ms: int
-    observed_metrics: dict
-
-
-@dataclass
 class MetricsListener(StreamingQueryListener):
-    """Collects per-batch progress — rates (M3), durations (M2's timing
-    histograms), observed counters (M1) — the Spark-native replacement for
-    the reference's Prometheus registry + 20 s stats loop."""
+    """Running totals over every micro-batch's progress — observed
+    counters summed per key (M1), the last batch's rates (M3), and the
+    batch-duration histogram (M2's timing histograms) as cumulative
+    bucket counts plus sum and count — the Spark-native replacement for
+    the reference's Prometheus registry + 20 s stats loop. Its size is
+    fixed however long the query runs; ``lock`` guards a consistent read
+    against the listener thread."""
 
-    records: list = field(default_factory=list)
+    def __init__(self) -> None:
+        self.lock = threading.Lock()
+        self.observed: dict[str, int] = {}
+        self.batches = 0
+        self.input_rows = 0
+        self.input_rows_per_second = 0.0
+        self.processed_rows_per_second = 0.0
+        self.last_batch_duration_ms = 0
+        self.duration_buckets = [0] * len(DURATION_BUCKETS)
+        self.duration_sum_s = 0.0
 
     def onQueryStarted(self, event) -> None:  # noqa: N802
         pass
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
-        observed = {}
+        observed = []
         try:
-            for name, row in (p.observedMetrics or {}).items():
-                observed[name] = row.asDict()
+            for row in (p.observedMetrics or {}).values():
+                observed += [(k, int(v)) for k, v in row.asDict().items()
+                             if v is not None]
         except Exception:
             pass
-        self.records.append(
-            ProgressRecord(
-                batch_id=p.batchId,
-                num_input_rows=p.numInputRows,
-                input_rows_per_second=p.inputRowsPerSecond or 0.0,
-                processed_rows_per_second=p.processedRowsPerSecond or 0.0,
-                batch_duration_ms=(p.durationMs or {}).get("triggerExecution", 0),
-                observed_metrics=observed,
-            )
-        )
+        duration_ms = (p.durationMs or {}).get("triggerExecution", 0)
+        duration_s = duration_ms / 1000.0
+        with self.lock:
+            for k, v in observed:
+                self.observed[k] = self.observed.get(k, 0) + v
+            self.batches += 1
+            self.input_rows += p.numInputRows
+            self.input_rows_per_second = p.inputRowsPerSecond or 0.0
+            self.processed_rows_per_second = p.processedRowsPerSecond or 0.0
+            self.last_batch_duration_ms = duration_ms
+            for i, le in enumerate(DURATION_BUCKETS):
+                if duration_s <= le:
+                    self.duration_buckets[i] += 1
+            self.duration_sum_s += duration_s
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         pass
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass
-
-    def totals(self) -> dict:
-        return {
-            "n_batches": len(self.records),
-            "total_input_rows": sum(r.num_input_rows for r in self.records),
-        }

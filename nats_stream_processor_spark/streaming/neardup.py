@@ -54,20 +54,18 @@ uniform under crc32.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 from math import floor
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.dedup import (LSH_BANDS, minhash_signature_col,
                                shingle_ids_tok_col, token_hashes_32_col)
 from ..queries.llm import NEAR_DUP_JACCARD
+from .stateful import keyed_state
 
 ND_OUT_SCHEMA = "kind string, a long, b long"
-ND_STATE_SCHEMA = "entries binary"
 ND_SHARDS = 4  # bucket shards per band; groups = LSH_BANDS * ND_SHARDS
 
 
@@ -114,18 +112,16 @@ def entries_decode(blob: bytes) -> dict[tuple[str, int], frozenset]:
     return entries
 
 
-def _probe_shard(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+def _probe_step(key, state: bytes | None, rows: pd.DataFrame):
     """One (band, shard) group, one micro-batch: probe the restored
     index, emit evidence rows, index the batch. Rows are processed in
     doc_id order so emission is independent of Arrow batch arrival
     order (pairs are emitted smaller-id-first by construction)."""
-    entries = (entries_decode(bytes(state.get[0]))
-               if state.exists else {})
+    entries = entries_decode(state) if state else {}
     by_bucket: dict[str, list] = {}
     for (bucket, doc_id), sids in entries.items():
         by_bucket.setdefault(bucket, []).append((doc_id, sids))
-    batch = pd.concat(list(pdfs), ignore_index=True) \
-              .sort_values("doc_id")
+    batch = rows.sort_values("doc_id")
     kinds, a_ids, b_ids = [], [], []
     fresh: dict[str, list] = {}
     for doc_id, bucket, sids in zip(batch["doc_id"], batch["bucket"],
@@ -154,10 +150,10 @@ def _probe_shard(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
     for bucket, rows in fresh.items():
         for doc_id, sset in rows:
             entries[(bucket, doc_id)] = sset
-    state.update((entries_encode(entries),))
-    yield pd.DataFrame({"kind": kinds,
-                        "a": pd.array(a_ids, dtype="int64"),
-                        "b": pd.array(b_ids, dtype="Int64")})
+    return entries_encode(entries), pd.DataFrame({
+        "kind": kinds,
+        "a": pd.array(a_ids, dtype="int64"),
+        "b": pd.array(b_ids, dtype="Int64")})
 
 
 def banded(df: DataFrame, id_col: str = "doc_id",
@@ -200,21 +196,14 @@ def banded(df: DataFrame, id_col: str = "doc_id",
 def near_dup_stream(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text",
                     shards: int = ND_SHARDS) -> DataFrame:
-    """STREAMING: probe-and-index evidence rows with the corpus band
-    index as per-(band, shard) managed state (module comment above).
-    Update mode; run ``near_dup_verdicts`` on each micro-batch's
-    output (foreachBatch) to turn evidence into per-doc verdicts.
-    State survives restarts via the checkpoint — a resumed query
-    probes everything any earlier run indexed."""
-    return (banded(df, id_col, text_col, shards)
-            .groupBy("band", "shard")
-            .applyInPandasWithState(
-                _probe_shard,
-                outputStructType=ND_OUT_SCHEMA,
-                stateStructType=ND_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            ))
+    """Probe-and-index evidence rows with the corpus band index as
+    per-(band, shard) managed state (module comment above). Update
+    mode; run ``near_dup_verdicts`` on each micro-batch's output
+    (foreachBatch) to turn evidence into per-doc verdicts. State
+    survives restarts via the checkpoint — a resumed query probes
+    everything any earlier run indexed."""
+    return keyed_state(banded(df, id_col, text_col, shards),
+                       ["band", "shard"], _probe_step, ND_OUT_SCHEMA)
 
 
 def near_dup_verdicts(evidence: DataFrame) -> DataFrame:

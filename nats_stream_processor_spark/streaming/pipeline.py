@@ -32,6 +32,7 @@ from pyspark.sql.types import StructType
 
 from ..config import DEDUP_WINDOW_SECONDS
 from ..operators.enrich import enrich_posts
+from .metrics import observe_pipeline_counters
 
 # Declared input schema (RawPost, reference: src/types.py:27-33 + the
 # fallback fields of src/service.py:152-172). cid nullable (the mock
@@ -115,9 +116,15 @@ def start_enrichment_query(
     checkpoint_dir: str,
     trigger_seconds: float | None = None,
 ):
-    """Wire decode -> enrich -> dedup -> routed publish and start it."""
+    """Wire decode -> enrich -> dedup -> routed publish and start it.
+    The M1 counters ride along as ``df.observe`` metrics (summed by
+    MetricsListener): processed and empty-text on the decoded input,
+    published on the rows handed to the sink."""
+    posts = observe_pipeline_counters(posts_stream, "input")
+    published = enrich_stream(posts).observe(
+        "published", F.count(F.lit(1)).alias("n_published"))
     writer = (
-        enrich_stream(posts_stream).writeStream.format("nats")
+        published.writeStream.format("nats")
         .option("servers", sink.servers)
         .option("stream", sink.stream)
         .outputMode("append")

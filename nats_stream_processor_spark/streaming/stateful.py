@@ -1,5 +1,21 @@
-"""Arbitrary stateful streaming operators (applyInPandasWithState) —
+"""Keyed managed state for every stateful streaming operator —
 SURVEY.md §2B "Arbitrary stateful ops".
+
+An operator is one ``step(key, state, rows) -> (state, out)``: it folds
+one group's rows into the group's state bytes and returns the rows to
+emit. ``keyed_state`` runs that step on any frame, the way
+``pipeline.enrich_stream`` serves static and streaming input alike:
+
+- streaming: ``applyInPandasWithState`` (update mode, no timeout), the
+  state one binary column that survives restarts via the checkpoint;
+- static: ``applyInPandas`` with ``state=None``, once per group — the
+  determinism oracle the streaming parity tests compare against (and the
+  shape a backfill job uses).
+
+Either way, a group's rows in one trigger reach ``step`` as one frame.
+The RocksDB state store is a session conf
+(``spark.sql.streaming.stateStore.providerClass``), which this API uses
+unchanged.
 
 running_label_counts reproduces the reference's label-partitioned running
 counters (sentiment_predictions_total{sentiment} etc., reference:
@@ -11,80 +27,70 @@ the checkpoint.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import struct
+from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-OUT_SCHEMA = "label string, n_total long, n_batch long"
-STATE_SCHEMA = "n long"
+Step = Callable[[tuple, bytes | None, pd.DataFrame],
+                tuple[bytes, pd.DataFrame]]
+
+STATE_SCHEMA = "state binary"
 
 
-def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    n_batch = 0
-    for pdf in pdfs:
-        n_batch += len(pdf)
-    (prev,) = state.get if state.exists else (0,)
-    total = prev + n_batch
-    state.update((total,))
-    yield pd.DataFrame({
-        "label": [key[0]], "n_total": [total], "n_batch": [n_batch],
-    })
+def keyed_state(df: DataFrame, keys: list[str], step: Step,
+                out_schema: str) -> DataFrame:
+    """Group ``df`` by ``keys`` and run ``step`` per group (module
+    comment above). Streaming output mode: update."""
+    grouped = df.groupBy(*keys)
+    if not df.isStreaming:
+        return grouped.applyInPandas(
+            lambda key, rows: step(key, None, rows)[1], out_schema)
 
+    def run(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        blob, out = step(key, bytes(state.get[0]) if state.exists else None,
+                         pd.concat(list(pdfs), ignore_index=True))
+        state.update((blob,))
+        yield out
 
-# Runtime requirement for transformWithState's python<->JVM state protocol;
-# without it the v2 API is defined but cannot execute (tests skip).
-try:
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-    HAVE_PROTOBUF = True
-except ImportError:  # pragma: no cover - container has no protobuf
-    HAVE_PROTOBUF = False
-
-try:  # Spark >= 4.0 arbitrary-state v2 (transformWithState)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
+    return grouped.applyInPandasWithState(
+        run,
+        outputStructType=out_schema,
+        stateStructType=STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    class LabelCountProcessor(StatefulProcessor):
-        """transformWithStateInPandas version of the running counters —
-        the arbitrary-state v2 API: named state variables on a handle,
-        lazy iterator output, RocksDB-backed state with fine-grained
-        changelog checkpointing (the scale path for large keyspaces,
-        where applyInPandasWithState's HDFS-backed snapshot per batch
-        becomes the bottleneck)."""
 
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._count = handle.getValueState("count", STATE_SCHEMA)
+def pairs_encode(pairs: dict[int, int]) -> bytes:
+    """Canonical state bytes for an int -> int map: sorted (key, value)
+    int64 pairs. Equal maps <=> equal bytes."""
+    return b"".join(struct.pack(">qq", k, pairs[k]) for k in sorted(pairs))
 
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            n_batch = sum(len(pdf) for pdf in rows)
-            prev = self._count.get()[0] if self._count.exists() else 0
-            total = prev + n_batch
-            self._count.update((total,))
-            yield pd.DataFrame({
-                "label": [key[0]], "n_total": [total], "n_batch": [n_batch],
-            })
 
-        def close(self) -> None:
-            pass
+def pairs_decode(blob: bytes) -> dict[int, int]:
+    return dict(struct.iter_unpack(">qq", blob))
 
-    def running_label_counts_v2(df: DataFrame, label_col: str) -> DataFrame:
-        """running_label_counts on the transformWithState API. Requires the
-        RocksDB state store provider (set it on the session conf)."""
-        return (
-            df.select(df[label_col].alias("label"))
-            .groupBy("label")
-            .transformWithStateInPandas(
-                LabelCountProcessor(),
-                outputStructType=OUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None",
-            )
-        )
-except ImportError:  # pragma: no cover - older Spark
-    running_label_counts_v2 = None
+
+def hour_col(ts_col: str) -> Column:
+    """The hour bucket every hourly summary keys on (`div` truncates
+    toward zero in both engines — tests/test_engine_semantics.py)."""
+    return (F.expr(f"unix_micros({ts_col}) div 3600000000")
+            .cast("long").alias("h"))
+
+
+OUT_SCHEMA = "label string, n_total long, n_batch long"
+
+
+def _count_step(key, state: bytes | None, rows: pd.DataFrame):
+    (prev,) = struct.unpack(">q", state) if state else (0,)
+    total = prev + len(rows)
+    return struct.pack(">q", total), pd.DataFrame({
+        "label": [key[0]], "n_total": [total], "n_batch": [len(rows)],
+    })
 
 
 def running_label_counts(df: DataFrame, label_col: str) -> DataFrame:
@@ -92,14 +98,5 @@ def running_label_counts(df: DataFrame, label_col: str) -> DataFrame:
     mode: update (one row per key per batch that saw the key)."""
     # rename before grouping: applyInPandasWithState can't resolve an
     # aliased grouping expression
-    return (
-        df.select(df[label_col].alias("label"))
-        .groupBy("label")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=OUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return keyed_state(df.select(df[label_col].alias("label")), ["label"],
+                       _count_step, OUT_SCHEMA)

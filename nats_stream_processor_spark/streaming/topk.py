@@ -18,45 +18,29 @@ batch operator's window layer consumes.
 
 Determinism discipline: counting happens on integer user ids grouped
 JVM-side per hour; the state is the canonical byte encoding of the
-sorted (user, count) pairs (the streaming/quantile.py law: equal dicts
-<=> equal bytes); the emitted summary applies the batch operator's own
+sorted (user, count) pairs (``stateful.pairs_encode``: equal dicts <=>
+equal bytes); the emitted summary applies the batch operator's own
 ordering (count desc, user asc) and width. tests/test_streaming.py
-asserts final streaming state byte-identical to the batch kernel over
-the same rows — DIRECTLY, by reading the persisted state back through
+asserts final streaming state byte-identical to the full counts of the
+same rows — DIRECTLY, by reading the persisted state back through
 Spark's ``statestore`` data source and comparing each hour's blob to
-``counts_encode`` of the hour's recomputed full counts (checked on the
+``pairs_encode`` of the hour's recomputed full counts (checked on the
 truncated planted corpus too, where the emitted summary alone could
-not prove it) — AND that the emitted summaries match the batch
-operator's kept/error relation exactly — so any window-layer consumer
-(prune, verify, fallback) sees identical inputs from either path.
+not prove it) — AND that the emitted summaries match both the same
+operator run on the static frame and the batch operator's kept/error
+relation exactly — so any window-layer consumer (prune, verify,
+fallback) sees identical inputs from either path.
 """
 
 from __future__ import annotations
 
-import struct
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .stateful import hour_col, keyed_state, pairs_decode, pairs_encode
 
 TK_OUT_SCHEMA = "h long, user_id long, cnt long"
-TK_STATE_SCHEMA = "counts binary"
-
-
-def counts_encode(counts: dict[int, int]) -> bytes:
-    """Canonical byte form: sorted (user, count) int64 pairs."""
-    return b"".join(struct.pack(">qq", u, counts[u])
-                    for u in sorted(counts))
-
-
-def counts_decode(blob: bytes) -> dict[int, int]:
-    out: dict[int, int] = {}
-    for i in range(0, len(blob), 16):
-        u, c = struct.unpack(">qq", blob[i:i + 16])
-        out[u] = c
-    return out
 
 
 def summary_rows(h: int, counts: dict[int, int],
@@ -72,58 +56,24 @@ def summary_rows(h: int, counts: dict[int, int],
     return pd.DataFrame(rows, columns=["h", "user_id", "cnt"])
 
 
-def _hour_user_rows(df: DataFrame, ts_col: str, id_col: str) -> DataFrame:
-    # Same hour bucketing as the batch twin (`div` truncates toward
-    # zero on both engines — tests/test_engine_semantics.py).
-    return df.select(
-        F.expr(f"unix_micros({ts_col}) div 3600000000")
-        .cast("long").alias("h"),
-        F.col(id_col).cast("long").alias("user_id"))
-
-
-def _update_hour(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+def _hour_step(key, state: bytes | None, rows: pd.DataFrame):
     from ..queries.llm_ext13 import SLT_C
-    counts = counts_decode(bytes(state.get[0])) if state.exists else {}
-    for pdf in pdfs:
-        for u, c in pdf["user_id"].value_counts().items():
-            counts[int(u)] = counts.get(int(u), 0) + int(c)
-    state.update((counts_encode(counts),))
-    yield summary_rows(int(key[0]), counts, SLT_C)
+    counts = pairs_decode(state) if state else {}
+    for u, c in rows["user_id"].value_counts().items():
+        counts[int(u)] = counts.get(int(u), 0) + int(c)
+    return pairs_encode(counts), summary_rows(int(key[0]), counts, SLT_C)
 
 
 def hourly_topk_summaries(df: DataFrame, ts_col: str = "ts",
                           id_col: str = "user_id") -> DataFrame:
-    """STREAMING: per-hour frequent-items summary state. Each
-    micro-batch emits the touched hour's current top-C summary plus its
-    truncation-bound row (update mode); the last emit per hour is the
-    final summary — the exact relation events_sliding_topk's window
-    layer (merge, prune, verify, fallback) consumes. State is
-    partitioned by the hour key and bounded by one hour's user
-    cardinality; it survives restarts via the checkpoint."""
-    return (_hour_user_rows(df, ts_col, id_col)
-            .groupBy("h")
-            .applyInPandasWithState(
-                _update_hour,
-                outputStructType=TK_OUT_SCHEMA,
-                stateStructType=TK_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            ))
-
-
-def _batch_hour(pdf: pd.DataFrame) -> pd.DataFrame:
-    from ..queries.llm_ext13 import SLT_C
-    counts: dict[int, int] = {}
-    for u, c in pdf["user_id"].value_counts().items():
-        counts[int(u)] = counts.get(int(u), 0) + int(c)
-    return summary_rows(int(pdf["h"].iloc[0]), counts, SLT_C)
-
-
-def hourly_topk_summaries_batch(df: DataFrame, ts_col: str = "ts",
-                                id_col: str = "user_id") -> DataFrame:
-    """BATCH twin: the identical kernel over a static frame — the
-    determinism oracle for the streaming path (and the shape a backfill
-    job uses to seed the state store)."""
-    return (_hour_user_rows(df, ts_col, id_col)
-            .groupBy("h")
-            .applyInPandas(_batch_hour, TK_OUT_SCHEMA))
+    """Per-hour frequent-items summary state. Each micro-batch emits
+    the touched hour's current top-C summary plus its truncation-bound
+    row (update mode); the last emit per hour is the final summary —
+    the exact relation events_sliding_topk's window layer (merge,
+    prune, verify, fallback) consumes. State is partitioned by the hour
+    key and bounded by one hour's user cardinality; it survives
+    restarts via the checkpoint. On a static frame: one summary per
+    hour over all its rows."""
+    rows = df.select(hour_col(ts_col),
+                     F.col(id_col).cast("long").alias("user_id"))
+    return keyed_state(rows, ["h"], _hour_step, TK_OUT_SCHEMA)

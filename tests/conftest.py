@@ -3,6 +3,9 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+import tempfile
+import time
+from typing import IO
 
 import pytest
 
@@ -33,9 +36,9 @@ SF_CORRECT = "/root/testdata/sf0.01"
 # session the serial tests use, which is exactly the oversubscription a
 # 32-core host absorbs.
 
-_PARITY_SHARDS: list[tuple[subprocess.Popen, list[str]]] = []
-_PARITY_N_WORKERS = int(os.environ.get("SPARK_GRAFT_PARITY_WORKERS")
-                        or max(1, min(8, (os.cpu_count() or 4) // 4)))
+_PARITY_SHARDS: list[tuple[subprocess.Popen, list[str], IO[str]]] = []
+_PARITY_N_WORKERS = max(1, int(os.environ.get("SPARK_GRAFT_PARITY_WORKERS")
+                               or min(8, (os.cpu_count() or 4) // 4)))
 
 
 def _launch_parity_workers() -> None:
@@ -46,16 +49,19 @@ def _launch_parity_workers() -> None:
     names = list(registry.REGISTRY)
     for i in range(_PARITY_N_WORKERS):
         shard = names[i::_PARITY_N_WORKERS]
+        # stderr (JVM logs) goes to a file: an unread pipe fills at
+        # ~64 KB and blocks the worker mid-shard.
+        err = tempfile.TemporaryFile("w+", errors="replace")
         p = subprocess.Popen(
             [sys.executable, worker, SF_SMOKE, *shard],
-            stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+            stdout=subprocess.PIPE, stderr=err,
             text=True, cwd=root,
             # The workers have huge slack (the sweep finishes in a
             # fraction of the serial files' window) — deprioritize them
             # so they back-fill idle cores instead of stealing cycles
             # from the foreground tests they overlap.
             preexec_fn=lambda: os.nice(10))
-        _PARITY_SHARDS.append((p, shard))
+        _PARITY_SHARDS.append((p, shard, err))
 
 
 def pytest_collection_modifyitems(session, config, items):
@@ -66,13 +72,9 @@ def pytest_collection_modifyitems(session, config, items):
 def pytest_sessionfinish(session, exitstatus):
     # -x / --maxfail can abort before the parity tests join the workers;
     # never leave orphaned JVMs behind.
-    for p, _ in _PARITY_SHARDS:
+    for p, _, _ in _PARITY_SHARDS:
         if p.poll() is None:
             p.kill()
-
-
-def parity_shards() -> list[tuple[subprocess.Popen, list[str]]]:
-    return _PARITY_SHARDS
 
 
 _PARITY_JOINED: dict[str, dict] | None = None
@@ -93,13 +95,19 @@ def parity_join() -> dict[str, dict]:
     if not _PARITY_SHARDS:  # direct single-file invocation fallback
         _launch_parity_workers()
     results: dict[str, dict] = {}
-    for p, shard in _PARITY_SHARDS:
+    deadline = time.monotonic() + _PARITY_TIMEOUT_S  # one, for all shards
+    for p, shard, err_file in _PARITY_SHARDS:
+        timed_out = ""
         try:
-            out, err = p.communicate(timeout=_PARITY_TIMEOUT_S)
+            out, _ = p.communicate(
+                timeout=max(0.0, deadline - time.monotonic()))
         except subprocess.TimeoutExpired:
             p.kill()
-            out, err = p.communicate()
-            err = (err or "") + "\n[parity worker timed out]"
+            out, _ = p.communicate()
+            timed_out = "\n[parity worker timed out]"
+        err_file.seek(0)
+        err = err_file.read() + timed_out
+        err_file.close()
         for line in out.splitlines():
             if not line.startswith("{"):
                 continue
@@ -113,7 +121,7 @@ def parity_join() -> dict[str, dict]:
                 results[name] = {
                     "problem": (
                         f"parity worker died before reaching this query "
-                        f"(rc={p.returncode}): ...{(err or '')[-400:]}"),
+                        f"(rc={p.returncode}): ...{err[-400:]}"),
                     "sec": None, "cartesian": None}
     _PARITY_JOINED = results
     return results

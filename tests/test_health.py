@@ -1,39 +1,41 @@
 """Health/readiness/metrics surface (H1; reference src/health.py:7-25,
-src/metrics.py:5-70). Spark-free: the exposition renders from
-MetricsListener records, which we construct directly."""
+src/metrics.py:5-70). Spark-free: the exposition renders from a
+MetricsListener fed synthetic progress events."""
 
 from __future__ import annotations
 
 import json
 import urllib.request
+from types import SimpleNamespace
+
+from pyspark.sql import Row
 
 from nats_stream_processor_spark.streaming.health import (
     HealthServer,
     prometheus_text,
     snapshot,
 )
-from nats_stream_processor_spark.streaming.metrics import (
-    MetricsListener,
-    ProgressRecord,
-)
+from nats_stream_processor_spark.streaming.metrics import MetricsListener
+
+
+def _progress(rows: int, in_rate: float, proc_rate: float,
+              duration_ms: int, observed: dict) -> SimpleNamespace:
+    """A QueryProgressEvent stand-in with the fields the listener reads."""
+    return SimpleNamespace(progress=SimpleNamespace(
+        numInputRows=rows, inputRowsPerSecond=in_rate,
+        processedRowsPerSecond=proc_rate,
+        durationMs={"triggerExecution": duration_ms},
+        observedMetrics={k: Row(**v) for k, v in observed.items()}))
 
 
 def _listener() -> MetricsListener:
     lst = MetricsListener()
-    lst.records.append(ProgressRecord(
-        batch_id=0, num_input_rows=100, input_rows_per_second=50.0,
-        processed_rows_per_second=48.0, batch_duration_ms=120,
-        observed_metrics={"pipeline": {
-            "n_processed": 100, "n_empty_text": 3,
-            "n_gated": 17, "n_published": 80}},
-    ))
-    lst.records.append(ProgressRecord(
-        batch_id=1, num_input_rows=60, input_rows_per_second=30.0,
-        processed_rows_per_second=29.0, batch_duration_ms=80,
-        observed_metrics={"pipeline": {
-            "n_processed": 60, "n_empty_text": 1,
-            "n_gated": 9, "n_published": 50}},
-    ))
+    lst.onQueryProgress(_progress(100, 50.0, 48.0, 120, {"pipeline": {
+        "n_processed": 100, "n_empty_text": 3,
+        "n_gated": 17, "n_published": 80}}))
+    lst.onQueryProgress(_progress(60, 30.0, 29.0, 80, {"pipeline": {
+        "n_processed": 60, "n_empty_text": 1,
+        "n_gated": 9, "n_published": 50}}))
     return lst
 
 
@@ -68,6 +70,29 @@ def test_prometheus_exposition_format():
         name, value = line.rsplit(" ", 1)
         assert name.startswith("stream_processor_")
         float(value)
+
+
+def test_listener_state_is_constant_size():
+    """The listener keeps running totals, not per-batch records: 10k
+    more progress events leave every container it holds the same size,
+    while the totals keep counting."""
+    def footprint(lst):
+        return {k: len(v) if hasattr(v, "__len__") else type(v)
+                for k, v in vars(lst).items()}
+
+    lst = _listener()
+    before = footprint(lst)
+    for i in range(10_000):
+        lst.onQueryProgress(_progress(1, 1.0, 1.0, i, {
+            "input": {"n_processed": 1, "n_empty_text": 0},
+            "published": {"n_published": 1}}))
+    assert footprint(lst) == before
+    s = snapshot(lst)
+    assert s["batches_total"] == 10_002
+    assert s["posts_processed_total"] == 10_160
+    assert s["posts_published_total"] == 10_130
+    # durations 0..9999 ms: 5001 of them <= 5 s, plus the two above
+    assert s["duration_buckets"][-1] == (5.0, 5_003)
 
 
 def test_disconnected_gauge():

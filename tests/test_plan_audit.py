@@ -194,6 +194,29 @@ def test_spread_is_gated_on_input_partitioning(spark):
         spark.conf.set("spark.nats_spark.spread.enabled", "true")
 
 
+def test_spread_min_bytes_per_partition_caps_fan_out(spark):
+    """The opt-in input-bytes floor for Python-boundary stages: the
+    fan-out target is ceil(scan bytes / floor), capped at the session's
+    parallelism, and a target the scan already meets leaves the input
+    untouched."""
+    import math
+
+    dp = spark.sparkContext.defaultParallelism
+    single = spark.read.parquet(f"{SF}/documents.parquet")
+    nbytes = sum(registry._scan_file_sizes(single))
+    assert single.rdd.getNumPartitions() == 1
+    # floor -> 2 partitions' worth of bytes
+    floor = math.ceil(nbytes / 2)
+    assert registry.spread(single, min_bytes_per_partition=floor) \
+        .rdd.getNumPartitions() == min(dp, 2)
+    # a tiny floor asks for more than the session has: capped at dp
+    assert registry.spread(single, min_bytes_per_partition=1) \
+        .rdd.getNumPartitions() == dp
+    # a floor above the scan's size: target 1, already met -> identity
+    assert registry.spread(single,
+                           min_bytes_per_partition=nbytes + 1) is single
+
+
 def test_vocab_topk_is_take_ordered_not_global_window(spark):
     """text_vocab_topk's head selection must be TakeOrderedAndProject over
     the aggregated vocabulary — ranking through an unpartitioned window
@@ -212,7 +235,8 @@ def test_scan_partition_estimate_matches_planner(spark):
     for t in ("documents", "embeddings", "lineitem", "events", "orders"):
         df = spark.read.parquet(f"{SF}/{t}.parquet")
         assert registry._is_scan_narrow_plan(df)
-        est = registry._estimated_scan_partitions(spark, df)
+        est = registry._estimated_scan_partitions(
+            spark, registry._scan_file_sizes(df))
         assert est == df.rdd.getNumPartitions(), t
     # narrow transforms keep the fast path; wide ones must leave it
     nr = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id")

@@ -681,19 +681,26 @@ def test_power_sum_merge_invariance_under_any_partitioning(vals, k):
 # ------------------- round-12 mergeable-summary kernels (pure Python)
 
 
+def _assert_pair_codec_roundtrip_and_canonical(pairs):
+    """streaming/stateful.py's int64-pair codec: decode(encode(d)) == d,
+    and the encoding is CANONICAL — equal dicts give equal bytes
+    regardless of insertion order (the equal-dicts <=> equal-bytes law
+    the streaming parity tests lean on)."""
+    from nats_stream_processor_spark.streaming.stateful import (
+        pairs_decode, pairs_encode)
+    blob = pairs_encode(pairs)
+    assert pairs_decode(blob) == pairs
+    reordered = dict(sorted(pairs.items(), reverse=True))
+    assert pairs_encode(reordered) == blob
+
+
 @settings(max_examples=200, deadline=None)
 @given(st.dictionaries(st.integers(-2**40, 2**40),
                        st.integers(1, 2**40), max_size=30))
 def test_hist_codec_roundtrip_and_canonical(hist):
-    """streaming/quantile.py codec: decode(encode(d)) == d, and the
-    encoding is CANONICAL — equal dicts give equal bytes regardless of
-    insertion order (the equal-dicts <=> equal-bytes law the streaming
-    parity test leans on)."""
-    from nats_stream_processor_spark.streaming import quantile as qh
-    blob = qh.hist_encode(hist)
-    assert qh.hist_decode(blob) == hist
-    reordered = dict(sorted(hist.items(), reverse=True))
-    assert qh.hist_encode(reordered) == blob
+    """Quantile histogram state (bin -> count; bins may be negative)
+    through the shared pair codec."""
+    _assert_pair_codec_roundtrip_and_canonical(hist)
 
 
 @settings(max_examples=200, deadline=None)
@@ -745,11 +752,9 @@ def test_hist_quantile_containment_theorem(values):
 @given(st.dictionaries(st.integers(0, 2**40), st.integers(1, 2**40),
                        max_size=40))
 def test_topk_counts_codec_roundtrip_and_canonical(counts):
-    from nats_stream_processor_spark.streaming import topk as tk
-    blob = tk.counts_encode(counts)
-    assert tk.counts_decode(blob) == counts
-    reordered = dict(sorted(counts.items(), reverse=True))
-    assert tk.counts_encode(reordered) == blob
+    """Top-k counts state (item id -> count) through the shared pair
+    codec."""
+    _assert_pair_codec_roundtrip_and_canonical(counts)
 
 
 @settings(max_examples=200, deadline=None)

@@ -18,6 +18,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from nats_stream_processor_spark.streaming.health import snapshot
 from nats_stream_processor_spark.streaming.metrics import (
     MetricsListener,
     observe_pipeline_counters,
@@ -25,6 +26,10 @@ from nats_stream_processor_spark.streaming.metrics import (
 from tests.brokers import published
 
 from nats_stream_processor_spark.config import OUTPUT_STREAM
+from nats_stream_processor_spark.streaming.stateful import (
+    pairs_decode,
+    pairs_encode,
+)
 from nats_stream_processor_spark.streaming.pipeline import (
     RAW_POST_SCHEMA,
     NatsSink,
@@ -170,20 +175,48 @@ def test_observe_counters_and_listener(spark, posts_dir, tmp_path):
         q.processAllAvailable()
         # listener delivery is async; give it a moment
         for _ in range(40):
-            if any(r.observed_metrics.get("pipeline") for r in listener.records):
+            if listener.observed.get("n_processed"):
                 break
             time.sleep(0.25)
         q.stop()
     finally:
         spark.streams.removeListener(listener)
-    obs = [r.observed_metrics["pipeline"] for r in listener.records
-           if "pipeline" in r.observed_metrics]
-    assert obs, f"no observed metrics in {listener.records}"
-    m = obs[0]
     # 6 decoded posts (malformed dropped before observe)
-    assert m["n_processed"] == 6
-    assert m["n_empty_text"] == 1
-    assert listener.totals()["total_input_rows"] >= 6
+    assert listener.observed.get("n_processed") == 6, listener.observed
+    assert listener.observed["n_empty_text"] == 1
+    assert listener.input_rows >= 6
+
+
+def test_service_counters_exact_on_mem_broker(spark, posts_dir, mem_broker,
+                                              tmp_path):
+    """The service's /metrics post counters, end to end: the query
+    start_enrichment_query wires carries its own observe() counters, so
+    a known corpus through the mem:// broker yields exact totals — 6
+    decoded posts processed, 1 of them empty-text, and published equal
+    to the messages that reached the output stream (the gated post and
+    the duplicate are dropped). posts_gated_total has no observation
+    yet and reads 0."""
+    listener = MetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        raw = spark.readStream.format("text").load(str(posts_dir))
+        q = start_enrichment_query(decode_posts(raw),
+                                   NatsSink(mem_broker, OUTPUT_STREAM),
+                                   str(tmp_path / "ckpt_svc"))
+        q.processAllAvailable()
+        for _ in range(40):
+            if listener.observed.get("n_published") is not None:
+                break
+            time.sleep(0.25)
+        q.stop()
+    finally:
+        spark.streams.removeListener(listener)
+    s = snapshot(listener)
+    n_out = len(published(mem_broker))
+    assert n_out == 3
+    assert (s["posts_processed_total"], s["posts_empty_text_total"],
+            s["posts_published_total"], s["posts_gated_total"]) == \
+        (6, 1, n_out, 0)
 
 
 def test_streaming_tumbling_window_append(spark, tmp_path):
@@ -284,47 +317,6 @@ def test_rate_source_mock_ingest(spark, mem_broker, tmp_path):
     assert len(out) >= 10
     assert any(".positive." in s for s in out)
     assert any(".negative." in s for s in out)
-
-
-@pytest.mark.env_gated
-def test_stateful_running_counts_v2(spark, tmp_path):
-    """transformWithStateInPandas twin of test_stateful_running_counts.
-    The v2 state protocol serializes via protobuf, which this container
-    lacks — the processor/plan construction is still exercised; execution
-    runs wherever protobuf is installed."""
-    from nats_stream_processor_spark.streaming import stateful
-
-    if stateful.running_label_counts_v2 is None:
-        pytest.skip("this PySpark build lacks transformWithStateInPandas "
-                    "(needs Spark >= 4.0); unlock by upgrading pyspark")
-    # Plan construction must succeed regardless of protobuf.
-    raw = (spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-           .selectExpr("CAST(value % 2 AS STRING) AS label_in"))
-    counts = stateful.running_label_counts_v2(raw, "label_in")
-    assert counts.isStreaming and set(counts.columns) == {"label", "n_total", "n_batch"}
-    if not stateful.HAVE_PROTOBUF:
-        pytest.skip("plan construction verified; EXECUTION needs the v2 "
-                    "state protocol's protobuf serializer — unlock with: "
-                    "`pip install protobuf` then rerun this test")
-    d = tmp_path / "tws_in"
-    d.mkdir()
-    with open(d / "b1.jsonl", "w") as f:
-        for lab in ["pos", "pos", "neg"]:
-            f.write(json.dumps({"label_in": lab}) + "\n")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                   "org.apache.spark.sql.execution.streaming.state."
-                   "RocksDBStateStoreProvider")
-    src = (spark.readStream.format("json").schema("label_in string")
-           .option("maxFilesPerTrigger", "1").load(str(d)))
-    q = (stateful.running_label_counts_v2(src, "label_in")
-         .writeStream.format("memory").queryName("tws_test")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt_tws")).start())
-    q.processAllAvailable()
-    q.stop()
-    got = {r["label"]: r["n_total"]
-           for r in spark.sql("SELECT * FROM tws_test").collect()}
-    assert got == {"pos": 2, "neg": 1}
 
 
 def test_stream_static_dimension_join(spark, posts_dir, tmp_path):
@@ -480,7 +472,8 @@ def test_streaming_hourly_hll_state_matches_batch(spark, tmp_path):
     """The streaming half of the sliding-HLL sketch story
     (streaming/hll.py): per-hour HLL registers as applyInPandasWithState
     managed state, fed one parquet file per micro-batch, must end
-    byte-identical to the batch twin's registers over the same rows —
+    byte-identical to the same operator's registers on the static
+    frame of the same rows —
     so every sliding-window union (register-wise max over <= SW_HOURS
     sketch rows, never events) and every estimate agrees exactly
     between the streaming and batch paths, and the estimates sit
@@ -498,7 +491,7 @@ def test_streaming_hourly_hll_state_matches_batch(spark, tmp_path):
     src.repartition(4).write.parquet(str(pdir))
 
     batch = {r.h: r for r in
-             hll.hourly_distinct_hll_batch(
+             hll.hourly_distinct_hll(
                  spark.read.parquet(str(pdir))).collect()}
 
     stream = (spark.readStream.schema(src.schema)
@@ -554,7 +547,7 @@ def test_streaming_hourly_quantile_hist_state_matches_batch(spark, tmp_path):
     (cardinality: HLL batch+stream; moments: power sums batch+stream;
     quantiles: THIS): per-hour value histograms as
     applyInPandasWithState managed state, fed one parquet file per
-    micro-batch, must end byte-identical to the batch twin's canonical
+    micro-batch, must end byte-identical to the same operator's canonical
     histogram encoding over the same rows — and sliding-window p50/p95
     composed from the STREAMING state (merge <= SW_HOURS hourly bucket
     dicts, integer k arithmetic) must equal the certified
@@ -574,7 +567,7 @@ def test_streaming_hourly_quantile_hist_state_matches_batch(spark, tmp_path):
     src.repartition(4).write.parquet(str(pdir))
 
     batch = {r.h: r for r in
-             qh.hourly_value_hist_batch(
+             qh.hourly_value_hist(
                  spark.read.parquet(str(pdir))).collect()}
 
     stream = (spark.readStream.schema(src.schema)
@@ -621,7 +614,7 @@ def test_streaming_hourly_quantile_hist_state_matches_batch(spark, tmp_path):
         for h in latest:
             if w - SW_HOURS + 1 <= h <= w:
                 merged = qh.hist_merge(
-                    merged, qh.hist_decode(bytes(latest[h].hist)))
+                    merged, pairs_decode(bytes(latest[h].hist)))
         n, est50, est95 = qh.hist_quantiles(merged, SQ_W)
         assert n == op[w].n_events, w
         assert est50 == op[w].est_p50, w
@@ -679,7 +672,7 @@ def test_streaming_hourly_topk_summaries_match_batch(spark, tmp_path):
         # DIRECT state-store byte check (the docstring's claim, checked
         # for real): read the final managed state via Spark's statestore
         # data source and compare each hour's blob byte-for-byte against
-        # counts_encode() of the hour's full counts recomputed from the
+        # pairs_encode() of the hour's full counts recomputed from the
         # same rows — the canonical-encoding law (equal dicts <=> equal
         # bytes) applied to the ACTUAL persisted state, truncation or
         # not, rather than inferred from emitted summaries.
@@ -695,7 +688,7 @@ def test_streaming_hourly_topk_summaries_match_batch(spark, tmp_path):
         want: dict = {}
         for (h, u), c in pdf.groupby(["h", "user_id"]).size().items():
             want.setdefault(int(h), {})[int(u)] = int(c)
-        assert got == {h: tk.counts_encode(cs) for h, cs in want.items()}
+        assert got == {h: pairs_encode(cs) for h, cs in want.items()}
 
     latest, touches = run_stream(pdir, "ckpt_tk")
     assert_state_bytes_match_batch(pdir, "ckpt_tk")
@@ -705,7 +698,7 @@ def test_streaming_hourly_topk_summaries_match_batch(spark, tmp_path):
         "no hour was updated across batches — statefulness unexercised"
 
     batch = {}
-    for r in tk.hourly_topk_summaries_batch(
+    for r in tk.hourly_topk_summaries(
             spark.read.parquet(str(pdir))).collect():
         batch.setdefault(r.h, []).append((r.user_id, r.cnt))
     assert set(latest) == set(batch)
@@ -848,7 +841,7 @@ def test_streaming_dedup_digest_state_matches_batch(spark, tmp_path):
     state. Three claims, each checked directly:
 
     1. fed the sf0.001 documents one parquet file per micro-batch, the
-       per-row keep verdicts equal the batch twin's over the same rows
+       per-row keep verdicts equal the same operator's on the static frame
        (keep-first-by-doc_id, digest-routing identical);
     2. the final persisted state is byte-identical to the canonical
        encoding of each shard's digest set — read back through the
@@ -894,12 +887,12 @@ def test_streaming_dedup_digest_state_matches_batch(spark, tmp_path):
         q.awaitTermination(180)
         return verdicts
 
-    # --- single-run parity vs the batch twin + state byte check
+    # --- single-run parity vs the static frame + state byte check
     pdir = tmp_path / "dd_docs"
     docs.repartition(4).write.parquet(str(pdir))
     got = run_stream(pdir, "ckpt_dd")
     want = {r.doc_id: (r.content_key, r.keep)
-            for r in dd.dedup_keep_batch(
+            for r in dd.dedup_keep_stream(
                 spark.read.parquet(str(pdir))).collect()}
     assert got == want
     # exactly one keeper per digest, and it is the smallest doc_id
@@ -959,9 +952,10 @@ def test_streaming_dedup_planted_duplicates_all_regimes(spark, tmp_path):
       phase-2 row repeats a phase-1 text — dropped ONLY because the
       restored state still holds the digest.
 
-    Row-exact parity vs dedup_keep_batch (keep-globally-smallest)
-    requires micro-batch order to respect doc_id order (the batch
-    twin's documented precondition), so the stream input is written as
+    Row-exact parity vs the static frame (keep-globally-smallest)
+    requires micro-batch order to respect doc_id order (the
+    precondition dedup_keep_stream documents), so the stream input is
+    written as
     doc_id-RANGE chunk files with strictly increasing mtimes — not
     hash-partitioned — and the final state bytes are checked against
     the canonical digest-set encoding, which is order-robust.
@@ -1023,7 +1017,7 @@ def test_streaming_dedup_planted_duplicates_all_regimes(spark, tmp_path):
         write_chunk(sdir, i, rows)
     got = run_stream(sdir, "ckpt_pl")
     want = {r.doc_id: (r.content_key, r.keep)
-            for r in dd.dedup_keep_batch(
+            for r in dd.dedup_keep_stream(
                 spark.read.parquet(str(sdir))).collect()}
     assert got == want
     # each planted regime actually fired
@@ -1273,9 +1267,9 @@ def test_streaming_ivf_list_counts_match_batch_index(spark, tmp_path):
                        for r in st.collect()}
         merged = {}
         for shard, blob in shard_blobs.items():
-            decoded = si.counts_decode(blob)
+            decoded = pairs_decode(blob)
             # the byte law: canonical re-encode round-trips
-            assert si.counts_encode(decoded) == blob
+            assert pairs_encode(decoded) == blob
             for c, n in decoded.items():
                 assert c % si.IVS_SHARDS == shard  # routed correctly
                 merged[c] = n
