@@ -181,9 +181,6 @@ HEADLINE = [
 ]
 
 
-STREAM_STATE_PARTITIONS = 8
-
-
 def stream_posts_per_sec(spark, sf_dir: str) -> tuple[float, float, float, float, int]:
     """The reference's headline metric, measured on OUR streaming path:
     documents corpus as JSON posts -> file-source stream (availableNow) ->
@@ -191,14 +188,13 @@ def stream_posts_per_sec(spark, sf_dir: str) -> tuple[float, float, float, float
     watermarked dedup -> foreachBatch sink. Returns (median posts/s,
     median posts/s at 10x corpus, best posts/s, best at 10x, n_posts).
 
-    State shards are sized to the streaming load (STREAM_STATE_PARTITIONS,
-    the --state-partitions knob): every micro-batch pays a state-store
-    commit per shard, and at ~5k posts/batch that fixed cost dominates —
-    measured 32 shards 2,245 posts/s vs 8 shards 4,084 posts/s, identical
-    results. The 10x number replays the same pipeline over the corpus
-    duplicated 10x: per-batch fixed overhead amortizes (23k+ posts/s),
-    showing the sf0.1 figure is an overhead-bound floor, not the
-    pipeline's per-row ceiling."""
+    The dedup state has one shard per core the process can use
+    (``get_spark`` sets the streaming shuffle width): every micro-batch
+    commits every shard, so the figures depend on the core count, which
+    ``main`` records as ``stream_state_partitions``. The 10x number
+    replays the same pipeline over the corpus duplicated 10x: per-batch
+    fixed overhead amortizes (23k+ posts/s), showing the sf0.1 figure is
+    an overhead-bound floor, not the pipeline's per-row ceiling."""
     import shutil
     import tempfile
 
@@ -212,9 +208,6 @@ def stream_posts_per_sec(spark, sf_dir: str) -> tuple[float, float, float, float
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n = docs.count()
     tmp = tempfile.mkdtemp(prefix="bench_stream_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(STREAM_STATE_PARTITIONS))
     try:
         def make_src(mult: int) -> str:
             src = f"{tmp}/src{mult}"
@@ -264,7 +257,6 @@ def stream_posts_per_sec(spark, sf_dir: str) -> tuple[float, float, float, float
         return (round(n / d1[1], 1), round(10 * n / d10[1], 1),
                 round(n / d1[0], 1), round(10 * n / d10[0], 1), n)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -278,12 +270,14 @@ def _stream_only(sf_dir: str) -> int:
     rps, rps10, best, best10, _ = stream_posts_per_sec(spark, sf_dir)
     print(json.dumps({"streaming_posts": rps, "streaming_posts_10x": rps10,
                       "streaming_posts_best": best,
-                      "streaming_posts_10x_best": best10}))
+                      "streaming_posts_10x_best": best10,
+                      "stream_state_partitions": int(spark.conf.get(
+                          "spark.sql.shuffle.partitions"))}))
     spark.stop()
     return 0
 
 
-def _measure_streaming_isolated(sf_dir: str) -> tuple[float, float, float, float]:
+def _measure_streaming_isolated(sf_dir: str) -> dict:
     """Run the streaming measurement in a CHILD python process with its
     own JVM. Isolation matters in both directions: the 60+ batch plans
     age a JVM enough to cost the short streaming passes ~40% (measured
@@ -300,9 +294,7 @@ def _measure_streaming_isolated(sf_dir: str) -> tuple[float, float, float, float
         [sys.executable, os.path.abspath(__file__), "--stream-only"],
         capture_output=True, text=True, env=os.environ.copy(), check=True)
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    d = json.loads(line)
-    return (d["streaming_posts"], d["streaming_posts_10x"],
-            d["streaming_posts_best"], d["streaming_posts_10x_best"])
+    return json.loads(line)
 
 
 def main() -> int:
@@ -312,8 +304,7 @@ def main() -> int:
 
     # Child JVM measures streaming first and exits before the batch
     # session starts (see _measure_streaming_isolated).
-    (stream_rps, stream_rps_10x,
-     stream_rps_best, stream_rps_10x_best) = _measure_streaming_isolated(sf_dir)
+    stream = _measure_streaming_isolated(sf_dir)
 
     from nats_stream_processor_spark import registry
     from nats_stream_processor_spark.session import get_spark
@@ -374,12 +365,16 @@ def main() -> int:
         # (see stream_posts_per_sec); *_best keep the pre-r16 best-of
         # methodology so cross-round artifacts stay comparable.
         "rows_per_sec": {"enrich_flagship_docs": enrich_rows_per_sec,
-                         "streaming_posts": stream_rps,
+                         "streaming_posts": stream["streaming_posts"],
                          # fixed-overhead-amortized ceiling: same pipeline,
                          # corpus replayed 10x (see stream_posts_per_sec)
-                         "streaming_posts_10x": stream_rps_10x,
-                         "streaming_posts_best": stream_rps_best,
-                         "streaming_posts_10x_best": stream_rps_10x_best},
+                         "streaming_posts_10x": stream["streaming_posts_10x"],
+                         "streaming_posts_best": stream["streaming_posts_best"],
+                         "streaming_posts_10x_best":
+                             stream["streaming_posts_10x_best"]},
+        # dedup state shards of the streaming passes (one per core): the
+        # streaming figures depend on it across hosts
+        "stream_state_partitions": stream["stream_state_partitions"],
     }
     print(json.dumps(out))
     spark.stop()

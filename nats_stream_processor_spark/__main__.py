@@ -49,16 +49,6 @@ def main(argv: list[str] | None = None) -> int:
                                     str(MAX_OFFSETS_PER_TRIGGER))))
     ap.add_argument("--once", action="store_true",
                     help="process available data then exit (smoke/test mode)")
-    ap.add_argument("--state-partitions", type=int,
-                    default=(int(env("STREAM_STATE_PARTITIONS"))
-                             if env("STREAM_STATE_PARTITIONS") else None),
-                    help="shard count for streaming state (the dedup "
-                         "store) — size to streaming load, not batch "
-                         "shuffle width; each micro-batch pays a commit "
-                         "per shard, so oversizing taxes every trigger "
-                         "(measured: 32 shards at ~5k posts/batch runs "
-                         "1.8x slower than 8). Captured into the "
-                         "checkpoint at first batch.")
     ap.add_argument("--health-port", type=int,
                     default=(int(env("HEALTH_CHECK_PORT"))
                              if env("HEALTH_CHECK_PORT") else None),
@@ -73,11 +63,6 @@ def main(argv: list[str] | None = None) -> int:
         "output_stream": args.output_stream}})
 
     spark = get_spark()
-    if args.state_partitions:
-        # Streaming state shard count rides the shuffle-partition conf; it
-        # binds at the query's first batch and persists in the checkpoint.
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(args.state_partitions))
     nats_src.register(spark)
     nats_src.ensure_output_stream(args.servers, args.output_stream)
 

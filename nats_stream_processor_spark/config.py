@@ -45,6 +45,15 @@ class SparkEngineConf:
     1000-executor cluster (AQE re-plans shuffles at runtime, skew-join
     splitting handles hot keys, Arrow makes the Python<->JVM boundary
     columnar).
+
+    Two shuffle widths. ``shuffle_partitions`` is the batch width: AQE
+    starts every batch shuffle at it and coalesces from there. Streaming
+    runs with AQE off, so its stateful exchange takes
+    ``spark.sql.shuffle.partitions``, which ``session.get_spark`` sets to
+    one state shard per core the session runs tasks on
+    (``session.state_partitions``), so each micro-batch commits all of
+    them in one parallel wave. A query records that width in its
+    checkpoint at the first batch and keeps it on every restart.
     """
 
     app_name: str = "nats-stream-processor-spark"
@@ -54,11 +63,14 @@ class SparkEngineConf:
             f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
         )
     )
+    # Batch shuffle width (AQE's initial partition number); streaming state
+    # uses one shard per core instead (see the class docstring).
     shuffle_partitions: int = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
     def to_conf(self) -> dict[str, str]:
         return {
-            "spark.sql.shuffle.partitions": str(self.shuffle_partitions),
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
+                str(self.shuffle_partitions),
             # Adaptive execution: runtime shuffle-partition coalescing,
             # skew-join splitting, plan re-optimisation. Mandatory at scale.
             "spark.sql.adaptive.enabled": "true",

@@ -276,8 +276,8 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     # wall clock is driver/job-latency bound locally, ~0.3 s/round), but
     # the map side still writes one shuffle file per configured partition
     # — 200 near-empty files per job per round under a driver-default
-    # session. ~100k edges per task; the session default is the ceiling
-    # so a billion-edge graph at 100 TB still fans out fully.
+    # session. ~100k edges per task; the session's batch shuffle width is
+    # the ceiling so a billion-edge graph at 100 TB still fans out fully.
     #
     # The width is scoped PER-PLAN with explicit hash repartition() calls
     # (never by mutating spark.sql.shuffle.partitions: a concurrent query
@@ -288,7 +288,13 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     # (the groupBy on "a") gets its own explicit repartition below.
     spark = edges.sparkSession
     n_edges = 2 * one.count()  # symmetrized size; count scans the checkpoint
-    session_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # The batch width is AQE's initial partition number (get_spark sets it;
+    # spark.sql.shuffle.partitions there is the streaming state width).
+    # Unset — the driver's plain session — Spark itself starts batch
+    # shuffles at spark.sql.shuffle.partitions, and so does the loop bound.
+    session_p = int(spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", None)
+        or spark.conf.get("spark.sql.shuffle.partitions"))
     loop_p = max(1, min(session_p, math.ceil(n_edges / 100_000)))
     return _cc_loop(sym, loop_p, max_iter, warnings)
 

@@ -15,7 +15,8 @@ dependency beyond the stdlib is needed:
   health.py:16-19)
 - ``/metrics`` -> Prometheus text format with the reference's metric
   names (metrics.py:5-70): posts processed/published counters, batch
-  duration histogram, rate + lag gauges.
+  duration histogram, rate + lag gauges, and the last batch's state-store
+  rows, memory and commit time.
 
 Scale note: the listener runs on the driver and keeps running totals of
 fixed size, so a scrape is O(1) at any uptime and never touches
@@ -47,6 +48,9 @@ def snapshot(listener: MetricsListener, connected: bool = True) -> dict:
             "input_rows_per_second": listener.input_rows_per_second,
             "processed_rows_per_second": listener.processed_rows_per_second,
             "last_batch_duration_ms": listener.last_batch_duration_ms,
+            "state_rows": listener.state_rows,
+            "state_memory_bytes": listener.state_memory_bytes,
+            "state_commit_ms": listener.state_commit_ms,
             "nats_connected": 1 if connected else 0,
             "duration_buckets": list(zip(DURATION_BUCKETS,
                                          listener.duration_buckets)),
@@ -93,6 +97,13 @@ def prometheus_text(listener: MetricsListener, connected: bool = True) -> str:
           s["input_rows_per_second"])
     gauge("processed_rows_per_second", "Processing rate of the last batch",
           s["processed_rows_per_second"])
+    gauge("state_rows", "State-store rows after the last batch",
+          s["state_rows"])
+    gauge("state_memory_bytes", "State-store memory after the last batch",
+          s["state_memory_bytes"])
+    gauge("state_commit_seconds",
+          "State-store commit time of the last batch, summed over shards",
+          s["state_commit_ms"] / 1000.0)
 
     # Histogram of per-batch trigger durations (reference
     # processing_duration_seconds shape, per-batch granularity).

@@ -41,12 +41,13 @@ def observe_pipeline_counters(df: DataFrame, name: str = "pipeline") -> DataFram
 
 class MetricsListener(StreamingQueryListener):
     """Running totals over every micro-batch's progress — observed
-    counters summed per key (M1), the last batch's rates (M3), and the
-    batch-duration histogram (M2's timing histograms) as cumulative
-    bucket counts plus sum and count — the Spark-native replacement for
-    the reference's Prometheus registry + 20 s stats loop. Its size is
-    fixed however long the query runs; ``lock`` guards a consistent read
-    against the listener thread."""
+    counters summed per key (M1), the last batch's rates (M3), the last
+    batch's state-store totals over its stateful operators (rows, memory
+    bytes, commit ms), and the batch-duration histogram (M2's timing
+    histograms) as cumulative bucket counts plus sum and count — the
+    Spark-native replacement for the reference's Prometheus registry +
+    20 s stats loop. Its size is fixed however long the query runs;
+    ``lock`` guards a consistent read against the listener thread."""
 
     def __init__(self) -> None:
         self.lock = threading.Lock()
@@ -56,6 +57,9 @@ class MetricsListener(StreamingQueryListener):
         self.input_rows_per_second = 0.0
         self.processed_rows_per_second = 0.0
         self.last_batch_duration_ms = 0
+        self.state_rows = 0
+        self.state_memory_bytes = 0
+        self.state_commit_ms = 0
         self.duration_buckets = [0] * len(DURATION_BUCKETS)
         self.duration_sum_s = 0.0
 
@@ -73,6 +77,7 @@ class MetricsListener(StreamingQueryListener):
             pass
         duration_ms = (p.durationMs or {}).get("triggerExecution", 0)
         duration_s = duration_ms / 1000.0
+        states = p.stateOperators or []
         with self.lock:
             for k, v in observed:
                 self.observed[k] = self.observed.get(k, 0) + v
@@ -81,6 +86,9 @@ class MetricsListener(StreamingQueryListener):
             self.input_rows_per_second = p.inputRowsPerSecond or 0.0
             self.processed_rows_per_second = p.processedRowsPerSecond or 0.0
             self.last_batch_duration_ms = duration_ms
+            self.state_rows = sum(s.numRowsTotal for s in states)
+            self.state_memory_bytes = sum(s.memoryUsedBytes for s in states)
+            self.state_commit_ms = sum(s.commitTimeMs for s in states)
             for i, le in enumerate(DURATION_BUCKETS):
                 if duration_s <= le:
                     self.duration_buckets[i] += 1

@@ -19,7 +19,16 @@ module only adds the streaming-specific pieces:
 
 At scale: dedup state is partitioned by the key columns and bounded by the
 watermark; maxOffsetsPerTrigger (S2) caps micro-batch admission the way
-max_ack_pending=100 caps the reference's in-flight messages.
+max_ack_pending=100 caps the reference's in-flight messages. The state has
+one shard per core of the session that creates the checkpoint
+(session.state_partitions), and every micro-batch commits every shard, so
+all commits finish in one parallel wave. The shard count is fixed when the
+checkpoint is created: a checkpoint started on a small host keeps its
+width after scale-out. The classifiers run before the shuffle, with one
+task per input partition, so they still fan out; dedup (a hash lookup per
+row) and the NATS publish run after it, one task per shard, so publishing
+is capped at the recorded width. A service that outgrows it starts a new
+checkpoint on the larger cluster.
 """
 
 from __future__ import annotations

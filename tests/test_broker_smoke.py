@@ -76,7 +76,6 @@ def test_full_pipeline_against_live_broker():
             "--output-stream", s_out,
             "--subject-prefix", prefix_in,
             "--checkpoint", f"{tmp}/ckpt",
-            "--state-partitions", "4",
             "--once",
         ])
     assert rc == 0

@@ -19,23 +19,31 @@ from nats_stream_processor_spark.streaming.metrics import MetricsListener
 
 
 def _progress(rows: int, in_rate: float, proc_rate: float,
-              duration_ms: int, observed: dict) -> SimpleNamespace:
-    """A QueryProgressEvent stand-in with the fields the listener reads."""
+              duration_ms: int, observed: dict,
+              states: tuple = ()) -> SimpleNamespace:
+    """A QueryProgressEvent stand-in with the fields the listener reads;
+    ``states`` holds one (rows, memory bytes, commit ms) per stateful
+    operator."""
     return SimpleNamespace(progress=SimpleNamespace(
         numInputRows=rows, inputRowsPerSecond=in_rate,
         processedRowsPerSecond=proc_rate,
         durationMs={"triggerExecution": duration_ms},
-        observedMetrics={k: Row(**v) for k, v in observed.items()}))
+        observedMetrics={k: Row(**v) for k, v in observed.items()},
+        stateOperators=[SimpleNamespace(numRowsTotal=r, memoryUsedBytes=m,
+                                        commitTimeMs=c)
+                        for r, m, c in states]))
 
 
 def _listener() -> MetricsListener:
     lst = MetricsListener()
     lst.onQueryProgress(_progress(100, 50.0, 48.0, 120, {"pipeline": {
         "n_processed": 100, "n_empty_text": 3,
-        "n_gated": 17, "n_published": 80}}))
+        "n_gated": 17, "n_published": 80}}, states=[(80, 40_000, 300)]))
+    # two stateful operators in the last batch: gauges sum them
     lst.onQueryProgress(_progress(60, 30.0, 29.0, 80, {"pipeline": {
         "n_processed": 60, "n_empty_text": 1,
-        "n_gated": 9, "n_published": 50}}))
+        "n_gated": 9, "n_published": 50}},
+        states=[(130, 65_000, 250), (7, 2_048, 4)]))
     return lst
 
 
@@ -49,6 +57,8 @@ def test_snapshot_totals():
     assert s["input_rows_total"] == 160
     assert s["input_rows_per_second"] == 30.0
     assert s["last_batch_duration_ms"] == 80
+    assert (s["state_rows"], s["state_memory_bytes"], s["state_commit_ms"]) \
+        == (137, 67_048, 254)
 
 
 def test_prometheus_exposition_format():
@@ -62,6 +72,10 @@ def test_prometheus_exposition_format():
     assert 'stream_processor_processing_duration_seconds_bucket{le="0.1"} 1' in text
     assert 'stream_processor_processing_duration_seconds_bucket{le="0.2"} 2' in text
     assert 'stream_processor_processing_duration_seconds_bucket{le="+Inf"} 2' in text
+    assert "# TYPE stream_processor_state_rows gauge" in text
+    assert "stream_processor_state_rows 137\n" in text
+    assert "stream_processor_state_memory_bytes 67048\n" in text
+    assert "stream_processor_state_commit_seconds 0.254\n" in text
     assert "stream_processor_processing_duration_seconds_count 2" in text
     # every non-comment line is "name{labels} value" — parseable exposition
     for line in text.strip().splitlines():

@@ -13,6 +13,7 @@ keys in the sink (P3/S3), observe()-based counters + listener metrics
 from __future__ import annotations
 
 import json
+import os
 import time
 
 import pytest
@@ -25,7 +26,8 @@ from nats_stream_processor_spark.streaming.metrics import (
 )
 from tests.brokers import published
 
-from nats_stream_processor_spark.config import OUTPUT_STREAM
+from nats_stream_processor_spark.config import OUTPUT_STREAM, SparkEngineConf
+from nats_stream_processor_spark.session import get_spark, state_partitions
 from nats_stream_processor_spark.streaming.stateful import (
     pairs_decode,
     pairs_encode,
@@ -143,22 +145,75 @@ def test_stream_empty_cid_published_without_msg_id(spark, mem_broker, tmp_path):
     assert [m.headers for m in msgs] == [{}, {}]
 
 
+def _offset_log_width(ckpt: str, batch_id: int) -> int:
+    """The state shard count a checkpoint's offset log records for a
+    batch (line 2 of the entry holds the batch's session conf)."""
+    with open(f"{ckpt}/offsets/{batch_id}") as f:
+        meta = json.loads(f.read().splitlines()[1])
+    return int(meta["conf"]["spark.sql.shuffle.partitions"])
+
+
 def test_stream_restart_does_not_republish(spark, posts_dir, mem_broker, tmp_path):
     # A0: checkpoint replay — restarting the query over the same source
     # runs no batch with input and publishes nothing new (offsets
-    # committed).
+    # committed). get_spark gives the dedup state one shard per core it
+    # can use, whatever the batch shuffle width; the offset log records
+    # that width at the first batch, and a restart on a session with
+    # another width (a resized host) keeps the recorded width and the
+    # state in it.
+    width = min(spark.sparkContext.defaultParallelism,
+                len(os.sched_getaffinity(0)))
+    batch_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    batch_width = spark.conf.get(batch_key)
     posts = decode_posts(spark.readStream.format("text").load(str(posts_dir)))
     sink = NatsSink(mem_broker, OUTPUT_STREAM)
     ckpt = str(tmp_path / "ckpt2")
-    q = start_enrichment_query(posts, sink, ckpt)
-    q.processAllAvailable(); q.stop()
-    first = published(mem_broker)
-    assert len(first) == 3
+    try:
+        get_spark(SparkEngineConf(shuffle_partitions=2 * width))
+        assert int(spark.conf.get(batch_key)) == 2 * width
+        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == width
+        q = start_enrichment_query(posts, sink, ckpt)
+        q.processAllAvailable(); q.stop()
+        first = published(mem_broker)
+        assert len(first) == 3
+        assert _offset_log_width(ckpt, 0) == width
 
-    q2 = start_enrichment_query(posts, sink, ckpt)
-    q2.processAllAvailable(); q2.stop()
-    assert all(p.numInputRows == 0 for p in q2.recentProgress)
-    assert published(mem_broker) == first  # nothing re-published
+        spark.conf.set("spark.sql.shuffle.partitions", str(width + 3))
+        q2 = start_enrichment_query(posts, sink, ckpt)
+        q2.processAllAvailable()
+        assert all(p.numInputRows == 0 for p in q2.recentProgress)
+        assert published(mem_broker) == first  # nothing re-published
+        # a replay of a published post plus one new post, after the restart
+        write_json_lines(posts_dir / "more.jsonl", [
+            POSTS[0], {"uri": "at://test/6", "cid": "c6",
+                       "text": "what a lovely sunny morning"}])
+        q2.processAllAvailable()
+        last = q2.lastProgress
+        q2.stop()
+    finally:
+        spark.conf.set(batch_key, batch_width)
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    assert last["stateOperators"][0]["numShufflePartitions"] == width
+    assert _offset_log_width(ckpt, last["batchId"]) == width
+    again = published(mem_broker)
+    assert again[:3] == first
+    assert [json.loads(m.data)["uri"] for m in again[3:]] == ["at://test/6"]
+
+
+def test_state_width_is_one_shard_per_usable_cpu():
+    # A local master wider than the CPUs the process may use (the default
+    # local[32] on a smaller host) still gets one shard per usable CPU; a
+    # cluster master takes its configured cores, not the executors that
+    # happen to be registered when the session starts.
+    cpus = len(os.sched_getaffinity(0))
+    assert state_partitions(f"local[{cpus + 8}]", cpus + 8, {}) == cpus
+    assert state_partitions("local[1]", 1, {}) == 1
+    executors = {"spark.executor.instances": "10", "spark.executor.cores": "4"}
+    assert state_partitions("spark://m:7077", 2, executors) == 40
+    assert state_partitions("yarn", 2, {**executors,
+                            "spark.default.parallelism": "96"}) == 96
+    assert state_partitions("k8s://h:443", 2,
+                            {"spark.executor.cores": "4"}) == 2
 
 
 def test_observe_counters_and_listener(spark, posts_dir, tmp_path):
