@@ -1,17 +1,17 @@
 """Scalar function library.
 
-Every function here exists in two forms generated from one source of truth:
+Each classifier has one Spark form and one ANSI-SQL twin:
 
-- a Spark ``Column`` builder (JVM-side, whole-stage-codegen friendly — no
-  Python UDFs in the hot path), and
-- an ANSI-SQL fragment builder (DuckDB dialect) used for oracle checking.
+- the Spark form is an Arrow-vectorized pandas UDF (classify.py), and
+- the SQL twin is a DuckDB-dialect fragment generator (sentiment.py,
+  topics.py) used for oracle checking.
 
-This guarantees the engine's results are independently reproducible, and it
-keeps the classifiers deterministic (the reference's ONNX models are replaced
+This keeps the engine's results independently reproducible, and it keeps
+the classifiers deterministic (the reference's ONNX models are replaced
 by lexicon/keyword stand-ins with identical output shape and gating
 semantics; see SURVEY.md §7 and FIXTURES.md §4).
 """
 
-from .sentiment import sentiment_struct, sentiment_sql_columns  # noqa: F401
-from .topics import topics_struct, topics_sql_columns  # noqa: F401
+from .sentiment import sentiment_sql_columns  # noqa: F401
+from .topics import topics_sql_columns  # noqa: F401
 from .text import tokens_col, tokens_sql, extract_text_col  # noqa: F401

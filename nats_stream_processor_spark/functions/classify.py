@@ -2,8 +2,8 @@
 sentiment/topic stages (U1/U2).
 
 Why pandas UDFs and not pure Column expressions: the stand-in classifiers
-are expressible as built-in expressions (see sentiment.py / topics.py, kept
-as the executable spec + SQL oracle twins), but Catalyst duplicates
+are expressible as built-in expressions (the DuckDB SQL twins in
+sentiment.py / topics.py are exactly that), but on Spark Catalyst duplicates
 projection expressions into downstream filters and grouping keys
 (PushDownPredicate / CollapseProject do not share heavy subtrees), which
 multiplies the ~20 keyword-count subexpressions per reference — measured
@@ -15,8 +15,8 @@ architecture, where both models are opaque per-message functions
 Spark mapping called for in SURVEY.md §2A (U1/U2: per-executor state inside
 a pandas_udf, Arrow batches replacing per-message calls).
 
-Values are bit-identical to the Column/SQL twins (floats rounded to
-FLOAT_ROUND_DP on every path), which the test suite asserts.
+Values are bit-identical to the SQL twins (floats rounded to
+FLOAT_ROUND_DP on both engines), which the oracle checks assert.
 """
 
 from __future__ import annotations
@@ -86,7 +86,8 @@ def _occurrence_counts(ex: pd.Series, n: int, vocab: frozenset) -> np.ndarray:
 
 
 def sentiment_batch(texts: pd.Series, dp: int = FLOAT_ROUND_DP) -> pd.DataFrame:
-    """Vectorized sentiment over a batch; same math as sentiment_struct."""
+    """Vectorized sentiment over a batch; same math as
+    sentiment.sentiment_sql_columns."""
     n = len(texts)
     ex = _exploded_tokens(texts)
     neg = _occurrence_counts(ex, n, _NEG)
@@ -109,7 +110,8 @@ def sentiment_batch(texts: pd.Series, dp: int = FLOAT_ROUND_DP) -> pd.DataFrame:
 
 
 def topics_batch(texts: pd.Series, dp: int = FLOAT_ROUND_DP) -> pd.DataFrame:
-    """Vectorized topics over a batch; same math as topics_struct."""
+    """Vectorized topics over a batch; same math as
+    topics.topics_sql_columns."""
     n = len(texts)
     ex = _exploded_tokens(texts)
     # n x n_labels keyword-occurrence matrix in one scatter-add pass

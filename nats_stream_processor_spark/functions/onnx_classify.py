@@ -29,13 +29,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
+
+from .classify import SENTIMENT_SCHEMA, TOPICS_SCHEMA
 
 try:  # pragma: no cover - not installed in this environment
     import onnxruntime as ort
@@ -45,22 +40,6 @@ except ImportError:
     ort = None
     AutoTokenizer = None
     HAVE_ONNX = False
-
-SENTIMENT_SCHEMA = StructType([
-    StructField("sentiment", StringType()),
-    StructField("confidence", DoubleType()),
-    StructField("probabilities", StructType([
-        StructField("negative", DoubleType()),
-        StructField("neutral", DoubleType()),
-        StructField("positive", DoubleType()),
-    ])),
-])
-
-TOPICS_SCHEMA = StructType([
-    StructField("topics", ArrayType(StringType())),
-    StructField("top_topic", StringType()),
-    StructField("top_confidence", DoubleType()),
-])
 
 _SESSIONS: dict = {}  # per-worker cache: model path -> (session, tokenizer)
 

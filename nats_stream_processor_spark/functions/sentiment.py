@@ -14,9 +14,10 @@ Output shape and semantics mirror the reference exactly
   sentiment and topic stages (reference: src/service.py:118-120).
 
 Scores: pos = #positive-lexicon tokens, neg = #negative-lexicon tokens,
-neutral = constant bias 1.0. Pure function of ``text``; the SQL builder
-emits the identical computation in DuckDB dialect so the oracle can verify
-it bit-for-bit (floats rounded to FLOAT_ROUND_DP, see config.py).
+neutral = constant bias NEUTRAL_BIAS. Pure function of ``text``. This
+module holds the lexicons and the DuckDB SQL twin; the Spark form is the
+Arrow kernel in classify.py, which the oracle verifies bit-for-bit against
+the SQL twin (floats rounded to FLOAT_ROUND_DP, see config.py).
 """
 
 from __future__ import annotations
@@ -25,7 +26,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..config import FLOAT_ROUND_DP, SENTIMENT_CONFIDENCE_THRESHOLD
-from .text import tokens_col, tokens_sql
 
 # Lexicons cover both the synthetic documents vocabulary and the reference's
 # smoke corpus ("This is a great day!" / "I hate this weather" —
@@ -47,43 +47,11 @@ NEUTRAL_BIAS = 0.5
 LABELS = ("negative", "neutral", "positive")  # index order = reference id2label
 
 
-def _count_in(tokens: Column, words: tuple[str, ...]) -> Column:
-    return F.size(F.filter(tokens, lambda t: t.isin(*words)))
-
-
-def sentiment_struct(text: Column | str, dp: int = FLOAT_ROUND_DP) -> Column:
-    """struct<sentiment string, confidence double,
-    probabilities struct<negative,neutral,positive double>>"""
-    toks = tokens_col(text)
-    neg = _count_in(toks, NEGATIVE_WORDS).cast("double")
-    pos = _count_in(toks, POSITIVE_WORDS).cast("double")
-    neu = F.lit(NEUTRAL_BIAS)
-    mx = F.greatest(neg, neu, pos)
-    e_neg, e_neu, e_pos = (F.exp(x - mx) for x in (neg, neu, pos))
-    denom = e_neg + e_neu + e_pos
-    p_neg, p_neu, p_pos = (F.round(e / denom, dp) for e in (e_neg, e_neu, e_pos))
-    # numpy-argmax tie-breaking: first max in index order neg, neu, pos.
-    label = (
-        F.when((neg >= neu) & (neg >= pos), F.lit("negative"))
-        .when(neu >= pos, F.lit("neutral"))
-        .otherwise(F.lit("positive"))
-    )
-    conf = F.greatest(p_neg, p_neu, p_pos)
-    return F.struct(
-        label.alias("sentiment"),
-        conf.alias("confidence"),
-        F.struct(
-            p_neg.alias("negative"), p_neu.alias("neutral"), p_pos.alias("positive")
-        ).alias("probabilities"),
-    )
-
-
-def confidence_gate(sentiment: Column | str,
-                    threshold: float = SENTIMENT_CONFIDENCE_THRESHOLD) -> Column:
+def confidence_gate(sentiment: Column | str) -> Column:
     """F5: rows below the sentiment-confidence threshold are dropped before
     the topic stage (reference: src/sentiment.py:108-115, src/service.py:118-120)."""
     c = F.col(sentiment) if isinstance(sentiment, str) else sentiment
-    return c["confidence"] >= F.lit(threshold)
+    return c["confidence"] >= F.lit(SENTIMENT_CONFIDENCE_THRESHOLD)
 
 
 # ---------------------------------------------------------------- SQL twin
@@ -108,7 +76,7 @@ def sentiment_sql_columns(dp: int = FLOAT_ROUND_DP) -> dict[str, str]:
     """DuckDB SQL fragments over the ``sc_neg``/``sc_pos`` count columns.
 
     Returns {name: sql_expr} for: sentiment, confidence, p_negative,
-    p_neutral, p_positive — same values as :func:`sentiment_struct`.
+    p_neutral, p_positive — same values as ``classify.sentiment_udf``.
     """
     neg, pos, neu = "sc_neg", "sc_pos", f"{NEUTRAL_BIAS:.1f}"
     mx = f"greatest({neg}, {neu}, {pos})"

@@ -14,16 +14,13 @@ Reference parity (src/topic_classifier.py:130-200):
 
 Score for label L = sigmoid(#keyword-hits(L) - 0.5): >=1 hit clears the 0.5
 threshold, 0 hits does not, and more hits rank higher. Pure function of
-``text``; SQL twin below.
+``text``. This module holds the keyword table and the DuckDB SQL twin
+below; the Spark form is the Arrow kernel in classify.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from ..config import FLOAT_ROUND_DP
-from .text import tokens_col, tokens_sql
 
 # The reference's 19 labels (README.md:164-174), alphabetical order. Keywords
 # are drawn from the synthetic documents vocabulary plus natural words so the
@@ -53,38 +50,6 @@ LABELS = tuple(sorted(TOPIC_KEYWORDS))  # alphabetical == tie-break order
 SCORE_OFFSET = 0.5  # sigmoid(cnt - offset): cnt>=1 -> >0.5, cnt==0 -> <0.5
 
 
-def _count_filter(toks: Column, words: tuple[str, ...]) -> Column:
-    # NB: the lambda must take exactly one parameter — F.filter inspects the
-    # arity and would pass (element, index) to a two-parameter function.
-    return F.size(F.filter(toks, lambda t: t.isin(*words)))
-
-
-def topics_struct(text: Column | str, dp: int = FLOAT_ROUND_DP) -> Column:
-    """struct<topics array<string>, top_topic string, top_confidence double>
-
-    Implementation note: the per-label counts are materialized ONCE into an
-    array and all downstream logic (argmax, threshold filter) runs as array
-    expressions — a naive 19-branch CASE chain duplicates each count
-    subexpression ~40x and blows up Catalyst analysis/codegen time.
-    """
-    toks = tokens_col(text)
-    labs = F.array(*[F.lit(lab) for lab in LABELS])
-    cnts = F.array(*[_count_filter(toks, TOPIC_KEYWORDS[lab]) for lab in LABELS])
-    mx = F.array_max(cnts)
-    # First label (alphabetical order) reaching the max count wins ties —
-    # array_position returns the first occurrence (1-based).
-    top = F.element_at(labs, F.array_position(cnts, mx).cast("int"))
-    sig = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(F.lit(SCORE_OFFSET) - mx.cast("double"))), dp)
-    above = F.filter(labs, lambda lab, i: F.element_at(cnts, i + 1) >= 1)
-    # U2d: ensure top_topic is present even when below threshold.
-    topics = F.array_sort(F.array_distinct(F.concat(above, F.array(top))))
-    return F.struct(
-        topics.alias("topics"),
-        top.alias("top_topic"),
-        sig.alias("top_confidence"),
-    )
-
-
 # ---------------------------------------------------------------- SQL twin
 #
 # The oracle SQL is composed as a CTE chain so the tokenization and keyword
@@ -107,7 +72,7 @@ def topic_count_sql_defs(toks_expr: str = "toks") -> str:
 def topics_sql_columns(dp: int = FLOAT_ROUND_DP) -> dict[str, str]:
     """DuckDB SQL fragments over the ``tc_*`` count columns: topics_str
     (comma-joined sorted list), top_topic, top_confidence — same values as
-    :func:`topics_struct`."""
+    ``classify.topics_udf``."""
     cnts = {lab: f"tc_{i}" for i, lab in enumerate(LABELS)}
     mx = "greatest(" + ", ".join(cnts.values()) + ")"
     top = "CASE " + " ".join(

@@ -199,6 +199,22 @@ def minhash_signature_sql(sids_expr: str) -> str:
     return f"[{mins}]"
 
 
+def band_buckets(sig_col: str, bands_n: int, rows_n: int) -> Column:
+    """Generator column: one struct<band, bucket> per band, the bucket
+    being the band's slice of the signature '_'-joined. The one bucket
+    construction of both the batch LSH operators and the streaming
+    near-dup band index (streaming/neardup.banded), so their bucket
+    strings — and the streaming state bytes — agree."""
+    return F.explode(F.transform(
+        F.sequence(F.lit(0), F.lit(bands_n - 1)),
+        lambda b: F.struct(
+            b.alias("band"),
+            F.array_join(
+                F.slice(F.col(sig_col), b * rows_n + 1, rows_n), "_"
+            ).alias("bucket"),
+        )))
+
+
 def minhash_band_explode(df: DataFrame, id_col: str, sig_col: str,
                          bands_n: int = LSH_BANDS,
                          rows_n: int = LSH_ROWS) -> DataFrame:
@@ -206,17 +222,7 @@ def minhash_band_explode(df: DataFrame, id_col: str, sig_col: str,
     shuffles. Equal (band, bucket) => candidate pair. band/row counts are
     the recall knob: fewer rows per band => more candidates => higher
     recall at lower Jaccard thresholds (P[candidate] = 1-(1-j^r)^b)."""
-    def _mk(rows_n):
-        return lambda b: F.struct(
-            b.alias("band"),
-            F.array_join(
-                F.slice(F.col(sig_col), b * rows_n + 1, rows_n), "_"
-            ).alias("bucket"),
-        )
-
-    bands = F.explode(
-        F.transform(F.sequence(F.lit(0), F.lit(bands_n - 1)), _mk(rows_n))
-    )
+    bands = band_buckets(sig_col, bands_n, rows_n)
     return df.select(F.col(id_col), bands.alias("bk")).select(
         id_col, F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket")
     )

@@ -15,11 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import (
-    OUTPUT_SUBJECT_PREFIX,
-    PROCESSOR_NAME,
-    SENTIMENT_CONFIDENCE_THRESHOLD,
-)
+from ..config import OUTPUT_SUBJECT_PREFIX, PROCESSOR_NAME
 from ..functions.classify import sentiment_udf, topics_udf
 from ..functions.sentiment import confidence_gate
 from ..functions.text import extract_text_col, non_empty_text
@@ -32,32 +28,26 @@ def route_subject(sentiment: Column, top_topic: Column,
     return F.concat_ws(".", F.lit(prefix), sentiment, top_topic)
 
 
-def enrich_posts(
-    df: DataFrame,
-    text_col: str | None = None,
-    id_cols: tuple[str, ...] = (),
-    threshold: float = SENTIMENT_CONFIDENCE_THRESHOLD,
-    dedup: bool = True,
-) -> DataFrame:
+def enrich_posts(df: DataFrame, text_col: str | None = None) -> DataFrame:
     """Full F1→P3 enrichment over any DataFrame with text content.
 
     - ``text_col=None`` applies the reference's 5-way coalesce (P1) over
       whichever candidate fields exist; otherwise uses the named column.
-    - ``id_cols`` are the idempotency key (reference uses (uri, cid),
-      src/nats_client.py:248-252); duplicates are dropped when ``dedup``.
     - Rows with empty text (F4) or gated confidence (F5) are dropped, exactly
       like the reference acks-without-publishing.
+    - No D1 dedup here: the (uri, cid) idempotency key is applied by
+      streaming/pipeline.dedup_posts, on static and streaming frames alike.
 
     Output adds: ``sentiment`` struct, ``topics`` struct, ``processed_at``,
     ``processor``, ``route_subject`` (shape: src/types.py:36-41 +
     FIXTURES.md §2 — note NO topics.probabilities, Discrepancy #1).
     """
     text = F.col(text_col) if text_col else extract_text_col(set(df.columns))
-    out = (
+    return (
         df.withColumn("__text", text)
         .filter(non_empty_text(F.col("__text")))                       # F1/F4
         .withColumn("sentiment", sentiment_udf(F.col("__text")))      # U1
-        .filter(confidence_gate("sentiment", threshold))               # F5
+        .filter(confidence_gate("sentiment"))                          # F5
         .withColumn("topics", topics_udf(F.col("__text")))             # U2
         .withColumn("processed_at", F.current_timestamp())             # P2
         .withColumn("processor", F.lit(PROCESSOR_NAME))
@@ -67,11 +57,6 @@ def enrich_posts(
         )
         .drop("__text")
     )
-    if dedup and id_cols:
-        # D1: exact-key dedup; streaming callers use the watermarked variant
-        # in streaming/pipeline.py (dropDuplicatesWithinWatermark).
-        out = out.dropDuplicates(list(id_cols))
-    return out
 
 
 def mean_6dp_sql(col: str, div: str = "div") -> str:
@@ -88,13 +73,13 @@ def mean_6dp_sql(col: str, div: str = "div") -> str:
     return f"((2 * {s} + count(*)) {div} (2 * count(*))) / 1e6"
 
 
-def enriched_route_counts(df: DataFrame, text_col: str | None = None,
-                          id_cols: tuple[str, ...] = ()) -> DataFrame:
+def enriched_route_counts(df: DataFrame,
+                          text_col: str | None = None) -> DataFrame:
     """Flagship query: enrich then count per routing key (sentiment ×
     top_topic) — the reference's M4/M5 distribution snapshot over the
     output stream, ordered for determinism."""
     return (
-        enrich_posts(df, text_col=text_col, id_cols=id_cols)
+        enrich_posts(df, text_col=text_col)
         .groupBy(
             F.col("sentiment.sentiment").alias("sentiment"),
             F.col("topics.top_topic").alias("top_topic"),

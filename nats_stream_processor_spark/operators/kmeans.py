@@ -9,12 +9,9 @@ this is the standard faiss architecture — index training happens where the
 sample fits, and only the tiny trained centroids/codebooks flow back into
 the distributed plan as broadcast constants) and run Lloyd's iterations
 in-process with IEEE-double arithmetic that is fold-for-fold identical to
-the engines' (see Cross-engine determinism). The *_distributed variants
-keep the all-Spark formulation — per-iteration assignment as a crossJoin
-against K literal centroids, update as one posexplode + groupBy((cluster,
-dim)) shuffle of the sample — for the case where the training sample
-itself must exceed driver memory; a parity test pins both trainers to the
-same output on the real tables.
+the engines' (see Cross-engine determinism). train_sample_for caps every
+sample at TRAIN_SAMPLE_CAP, so the sample always fits one process; the
+DuckDB CTE replays below are what the trained output is checked against.
 
 Cross-engine determinism (so the DuckDB oracle can REPLAY training and
 value-check the resulting index, not just row-count it):
@@ -75,11 +72,11 @@ def ivf_nlist_for(n_corpus: int) -> int:
 
 def train_sample_for(nlist: int) -> int:
     """Training-sample bound for a given nlist: ~39 points per centroid
-    (the faiss minimum before centroids starve), capped where a single
-    trainer process stops being the right tool — beyond the cap, use the
-    *_distributed trainers. At the floor nlist this returns exactly
-    TRAIN_SAMPLE_N, so auto-sized training reproduces the pinned registry
-    constants bit-for-bit at test scale."""
+    (the faiss minimum before centroids starve), capped at
+    TRAIN_SAMPLE_CAP so the in-process trainer always applies (past the
+    cap a larger nlist trains on fewer points per centroid). At the floor
+    nlist this returns exactly TRAIN_SAMPLE_N, so auto-sized training
+    reproduces the pinned registry constants bit-for-bit at test scale."""
     if nlist <= IVF_NLIST_FLOOR:
         return TRAIN_SAMPLE_N
     return min(39 * nlist, TRAIN_SAMPLE_CAP)
@@ -252,44 +249,6 @@ def _train_ivf_uncached(e: DataFrame, k: int, iters: int,
     return cents
 
 
-def train_ivf_centroids_distributed(
-        e: DataFrame, k: int | None = None, iters: int = IVF_TRAIN_ITERS,
-        sample_n: int | None = None) -> list[list[float]]:
-    """All-Spark Lloyd's for samples too large to collect: per-iteration
-    assignment against K literal centroids, decimal-mean update shuffle.
-    Same arithmetic as the in-process default (parity test pins them).
-    ``k=None`` auto-sizes exactly like train_ivf_centroids."""
-    if k is None:
-        k = ivf_nlist_for(e.count())
-        if sample_n is None:
-            sample_n = train_sample_for(k)
-    if sample_n is None:
-        sample_n = TRAIN_SAMPLE_N
-    sample = e.filter(F.col("vec_id") < sample_n).select(
-        "vec_id", F.col("demb").alias("vec"))
-    init = (e.filter(F.col("vec_id") < k).orderBy("vec_id")
-            .select("demb").collect())
-    cents = [[float(x) for x in r.demb] for r in init]
-    dim = len(cents[0])
-    for _ in range(iters):
-        scores = F.array(*[
-            sim.dot(F.col("vec"), sim.plane_lit(c))
-            / sim.norm(sim.plane_lit(c))
-            for c in cents
-        ])
-        assigned = sample.select(
-            "vec",
-            (F.array_position(scores, F.array_max(scores)) - 1)
-            .cast("int").alias("cent_id"),
-        )
-        rows = _dim_means(assigned, ["cent_id"]).collect()
-        new: dict[int, list[float]] = {}
-        for r in rows:
-            new.setdefault(r.cent_id, [0.0] * dim)[r.i] = float(r.m)
-        cents = [new.get(c, cents[c]) for c in range(k)]
-    return cents
-
-
 def ivf_train_cte_sql(k: int, iters: int = IVF_TRAIN_ITERS,
                       sample_n: int = TRAIN_SAMPLE_N,
                       dim: int = sim.EMBED_DIM, e_cte: str = "e") -> str:
@@ -366,52 +325,6 @@ def _train_pq_uncached(e: DataFrame, iters: int,
         means = _py_means(assigned, sub)
         cb = [
             [means.get((s, c), cb[s][c]) for c in range(kk)]
-            for s in range(m)
-        ]
-    return cb
-
-
-def train_pq_codebook_distributed(
-        e: DataFrame, iters: int = PQ_TRAIN_ITERS,
-        sample_n: int = TRAIN_SAMPLE_N) -> list[list[list[float]]]:
-    """All-Spark twin of train_pq_codebook for oversized samples (see
-    train_ivf_centroids_distributed)."""
-    m, sub, kk = sim.PQ_M, sim.PQ_SUB, sim.PQ_K
-    init = (e.filter(F.col("vec_id") < kk).orderBy("vec_id")
-            .select("demb").collect())
-    cb = sim.pq_codebook_from([[float(x) for x in r.demb] for r in init])
-    # one row per (vec, subspace): the unit the assignment works on
-    slices = e.filter(F.col("vec_id") < sample_n).select(
-        "vec_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(s).alias("s"),
-                     F.slice("demb", s * sub + 1, sub).alias("vec"))
-            for s in range(m)
-        ])).alias("sv"),
-    ).select("vec_id", "sv.s", "sv.vec")
-    for _ in range(iters):
-        # per-subspace argmin against that subspace's literal centroids
-        dists = F.array(*[
-            F.when(F.col("s") == s_ix,
-                   F.array(*[sim._l2_col(F.col("vec"), cb[s_ix][c])
-                             for c in range(kk)]))
-            for s_ix in range(m)
-        ])
-        # dists: per-row pick the branch for its subspace (array of arrays
-        # with one non-null entry); element_at(s+1) selects it
-        assigned = slices.select(
-            "s", "vec",
-            (F.array_position(
-                F.element_at(dists, F.col("s") + 1),
-                F.array_min(F.element_at(dists, F.col("s") + 1)))
-             - 1).cast("int").alias("c"),
-        )
-        rows = _dim_means(assigned, ["s", "c"]).collect()
-        new: dict[tuple[int, int], list[float]] = {}
-        for r in rows:
-            new.setdefault((r.s, r.c), [0.0] * sub)[r.i] = float(r.m)
-        cb = [
-            [new.get((s, c), cb[s][c]) for c in range(kk)]
             for s in range(m)
         ]
     return cb

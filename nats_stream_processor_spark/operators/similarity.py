@@ -209,14 +209,6 @@ def pq_codebook_from(vectors: list[list[float]]) -> list[list[list[float]]]:
     ]
 
 
-def _l2_col(a: Column, w: list[float]) -> Column:
-    """Squared L2 to a literal vector; left-to-right fold, same order as
-    the SQL twin."""
-    return F.aggregate(
-        F.zip_with(a, plane_lit(w), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, v: acc + v)
-
-
 def _dlit(w: float) -> str:
     """Exact double literal for Spark SQL: repr() is shortest-roundtrip and
     string->double cast is correctly rounded, so the value is bit-preserved."""
@@ -228,8 +220,9 @@ def _arr_lit(ws: list[float]) -> str:
 
 
 def _l2_fold_expr(a: str, b: str) -> str:
-    """Spark-SQL twin of _l2_col — same HOFs (zip_with + aggregate), same
-    left-to-right fold, hence bit-identical doubles."""
+    """Squared L2 as a Spark-SQL fold: zip_with + aggregate, left to right,
+    the op order of the DuckDB twin _l2_expr_sql and the in-process
+    kmeans._l2_py, hence bit-identical doubles."""
     return (f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
             f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
 

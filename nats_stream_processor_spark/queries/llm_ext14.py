@@ -454,27 +454,6 @@ def _ppm_rank_col(dot_col, den_col):
                    + F.lit(0.5)).cast("long")
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """Eagerly materialize a shared IVF frame and TRUNCATE its lineage
-    (localCheckpoint -> LogicalRDD leaf), mirroring the ``MATERIALIZED``
-    the oracle CTEs declare on the same relations.
-
-    Why not pin()/persist: Catalyst analyzes the full UNTRUNCATED tree
-    of every reference (cache substitution happens after analysis), and
-    the act receipts reference the assignment relation through enough
-    layers (act chain -> candidates -> receipts) that the analyzed tree
-    grows multiplicatively — the r16 before-profile rendered
-    sim_ivf_rebalance/merge as 12-14 MB formatted plans (~19k-23k
-    Exchange node renders) with build+exec dominated by plan handling,
-    not data. A checkpoint leaf collapses that to one subtree evaluated
-    once, exactly the computation the MATERIALIZED oracle twin
-    describes. Same discipline as connected_components' loop: local
-    (executor) checkpoint here; at cluster scale a reliable checkpoint
-    dir — or, per the module notes, the assignment IS a persisted table
-    and this frame is a scan of it."""
-    return df.localCheckpoint(eager=True)
-
-
 def _ivf_base_frames(spark: SparkSession, sf_dir: str):
     """Shared Spark-side base for the two IVF maintenance acts: pinned
     corpus-with-norms, broadcastable trained-centroid table, pinned
@@ -494,17 +473,30 @@ def _ivf_base_frames(spark: SparkSession, sf_dir: str):
     wasg = Window.partitionBy("vec_id").orderBy(
         F.col("ppm").desc(), "cent_id")
     # asg is MATERIALIZED on the oracle side and referenced by every
-    # downstream layer — checkpoint it (see _materialize) so each
-    # reference analyzes as a leaf instead of replaying the scan +
-    # broadcast-rank subtree through the whole receipt tree.
-    asg = _materialize(
+    # downstream layer — eagerly checkpoint it, truncating its lineage to
+    # a LogicalRDD leaf, so each reference analyzes as a leaf instead of
+    # replaying the scan + broadcast-rank subtree through the whole
+    # receipt tree. Why not pin()/persist: Catalyst analyzes the full
+    # UNTRUNCATED tree of every reference (cache substitution happens
+    # after analysis), and the act receipts reference the assignment
+    # relation through enough layers (act chain -> candidates ->
+    # receipts) that the analyzed tree grows multiplicatively — the r16
+    # before-profile rendered sim_ivf_rebalance/merge as 12-14 MB
+    # formatted plans (~19k-23k Exchange node renders) with build+exec
+    # dominated by plan handling, not data. Same discipline as
+    # connected_components' loop: local (executor) checkpoint here; at
+    # cluster scale a reliable checkpoint dir — or, per the module
+    # notes, the assignment IS a persisted table and this frame is a
+    # scan of it. nasg below is checkpointed for the same reason.
+    asg = (
         n.crossJoin(F.broadcast(cent))
         .select("vec_id", "demb", "nrm", "cent_id",
                 _ppm_rank_col(sim.dot(F.col("demb"), F.col("c_demb")),
                               F.col("nrm") * F.col("c_nrm")).alias("ppm"))
         .withColumn("rc", F.row_number().over(wasg))
         .filter(F.col("rc") == 1)
-        .select("vec_id", "demb", "nrm", "cent_id"))
+        .select("vec_id", "demb", "nrm", "cent_id")
+        .localCheckpoint(eager=True))
     sz = pin(cent.select("cent_id")
              .join(asg, "cent_id", "left")
              .groupBy("cent_id")
@@ -660,14 +652,15 @@ def _ivf_split_frames(spark: SparkSession, cent: DataFrame,
                     F.col("c_nrm").alias("s_nrm"))))
     # nasg is MATERIALIZED on the oracle side and read by both the
     # post-act candidates and the post-list sizes — checkpoint leaf
-    # (see _materialize).
-    nasg = _materialize(
+    # (see asg in _ivf_base_frames).
+    nasg = (
         fa.select((F.col("cent_id") * 2 + F.col("sub")).cast("long")
                   .alias("nl_id"), "vec_id", "demb", "nrm")
         .unionByName(
             asg.join(spl, "cent_id", "left_anti")
             .select((F.col("cent_id") * 2).cast("long").alias("nl_id"),
-                    "vec_id", "demb", "nrm")))
+                    "vec_id", "demb", "nrm"))
+        .localCheckpoint(eager=True))
     return newc, nasg
 
 
@@ -690,8 +683,8 @@ def q_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the <= 2*nlist sub-centroid table and one (list, sub, dim)-keyed
     partial+final aggregate; the sub-centroid table itself is
     K-bounded (<= 2*nlist rows), so reading it to the driver between
-    iterations is the same audited license as
-    km.train_ivf_centroids_distributed (never the members). Probe
+    iterations is as bounded as the trained centroids
+    km.train_ivf_centroids hands back (never the members). Probe
     panels broadcast ({IVR_NQ} queries); candidate joins are
     list-id-keyed against the assignment relation; receipts are 1-row
     aggregates crossJoined broadcast. Nothing here scans more than the
@@ -877,12 +870,13 @@ def _ivf_merge_frames(cent: DataFrame, asg: DataFrame, mrg: DataFrame):
              .filter(F.col("rc") == 1)
              .select("nl_id", "vec_id", "demb", "nrm"))
     # MATERIALIZED on the oracle side; multi-consumer — checkpoint leaf
-    # (see _materialize).
-    nasg = _materialize(
+    # (see asg in _ivf_base_frames).
+    nasg = (
         asg.join(mrg, "cent_id", "left_anti")
         .select(F.col("cent_id").cast("long").alias("nl_id"),
                 "vec_id", "demb", "nrm")
-        .unionByName(reasg))
+        .unionByName(reasg)
+        .localCheckpoint(eager=True))
     return newc, nasg
 
 

@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 from ..registry import REGISTRY, pin, register, spread, table
 
 from ..functions.text import tokens_col, tokens_sql
+from ..operators import kmeans as km
 from ..operators import similarity as sim
 
 # ------------------------------------------------ Flesch reading ease
@@ -293,34 +294,20 @@ def _pinned_qvec(q: int) -> list[float]:
             for d in range(sim.EMBED_DIM)]
 
 
-def _fold_norm(v: list[float]) -> float:
-    acc = 0.0
-    for w in v:
-        acc = acc + w * w
-    return math.sqrt(acc)
-
-
-def _fold_dot(a: list[float], b: list[float]) -> float:
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc
-
-
 def _qbuckets(v: list[float]) -> list[int]:
     planes = sim.hyperplanes(sim.LSH_TABLES * sim.LSH_PLANES)
     out = []
     for t in range(sim.LSH_TABLES):
         b = 0
         for p in range(sim.LSH_PLANES):
-            if _fold_dot(planes[t * sim.LSH_PLANES + p], v) >= 0.0:
+            if km._dot_py(planes[t * sim.LSH_PLANES + p], v) >= 0.0:
                 b += 1 << p
         out.append(b)
     return out
 
 
 XM_QVECS = [_pinned_qvec(q) for q in range(XM_NQ)]
-XM_QNORMS = [_fold_norm(v) for v in XM_QVECS]
+XM_QNORMS = [math.sqrt(km._dot_py(v, v)) for v in XM_QVECS]
 XM_QBUCKETS = [_qbuckets(v) for v in XM_QVECS]
 
 

@@ -213,8 +213,7 @@ def _estimated_scan_partitions(spark: SparkSession,
 # below this many INPUT bytes, so the fan-out caps at data_size/floor
 # locally; at real scale scan splits are >= maxPartitionBytes and the
 # spread gate is a no-op anyway, so the floor never binds.
-PY_MIN_SPLIT_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_PY_MIN_SPLIT_BYTES", str(64 * 1024)))
+PY_MIN_SPLIT_BYTES = 64 * 1024
 
 def spread(df: DataFrame, n: int | None = None,
            min_bytes_per_partition: int | None = None) -> DataFrame:

@@ -14,9 +14,10 @@ dependency beyond the stdlib is needed:
   active, the analog of the reference's nats_connected gauge,
   health.py:16-19)
 - ``/metrics`` -> Prometheus text format with the reference's metric
-  names (metrics.py:5-70): posts processed/published counters, batch
-  duration histogram, rate + lag gauges, and the last batch's state-store
-  rows, memory and commit time.
+  names (metrics.py:5-70): posts processed/published counters, the
+  empty-text, gate and dedup drop counters, batch duration histogram,
+  rate + lag gauges, and the last batch's state-store rows, memory and
+  commit time.
 
 Scale note: the listener runs on the driver and keeps running totals of
 fixed size, so a scrape is O(1) at any uptime and never touches
@@ -38,11 +39,19 @@ def snapshot(listener: MetricsListener, connected: bool = True) -> dict:
     """One coherent view of the pipeline's counters and gauges — the
     dict behind both /metrics and ad-hoc status queries."""
     with listener.lock:
+        obs = listener.observed
         return {
-            "posts_processed_total": listener.observed.get("n_processed", 0),
-            "posts_published_total": listener.observed.get("n_published", 0),
-            "posts_empty_text_total": listener.observed.get("n_empty_text", 0),
-            "posts_gated_total": listener.observed.get("n_gated", 0),
+            "posts_processed_total": obs.get("n_processed", 0),
+            "posts_published_total": obs.get("n_published", 0),
+            "posts_empty_text_total": obs.get("n_empty_text", 0),
+            # Drops are the differences between adjacent observations:
+            # start_enrichment_query observes rows after the gate, not the
+            # rows each stage removes.
+            "posts_gated_total": (obs.get("n_processed", 0)
+                                  - obs.get("n_empty_text", 0)
+                                  - obs.get("n_passed_gate", 0)),
+            "posts_deduplicated_total": (obs.get("n_passed_gate", 0)
+                                         - obs.get("n_published", 0)),
             "batches_total": listener.batches,
             "input_rows_total": listener.input_rows,
             "input_rows_per_second": listener.input_rows_per_second,
@@ -87,6 +96,9 @@ def prometheus_text(listener: MetricsListener, connected: bool = True) -> str:
     counter("posts_gated_total",
             "Posts dropped by the confidence gate",
             s["posts_gated_total"])
+    counter("posts_deduplicated_total",
+            "Posts dropped as (uri, cid) duplicates",
+            s["posts_deduplicated_total"])
     counter("batches_total", "Streaming micro-batches completed",
             s["batches_total"])
     counter("input_rows_total", "Total input rows across batches",

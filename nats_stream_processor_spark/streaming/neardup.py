@@ -60,8 +60,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (LSH_BANDS, minhash_signature_col,
-                               shingle_ids_tok_col, token_hashes_32_col)
+from ..operators.dedup import (LSH_BANDS, LSH_ROWS, band_buckets,
+                               minhash_signature_col, shingle_ids_tok_col,
+                               token_hashes_32_col)
 from ..queries.llm import NEAR_DUP_JACCARD
 from .stateful import keyed_state
 
@@ -163,28 +164,18 @@ def banded(df: DataFrame, id_col: str = "doc_id",
     the doc's shingle ids, and the bucket shard. Text never leaves the
     JVM; the exchange carries ids, buckets, and sid arrays only.
 
-    The band explode inlines minhash_band_explode's exact bucket
-    construction (band-slice of the signature, '_'-joined) instead of
-    calling it and joining sids back on — that join would be a
-    stream-stream self-join, which Structured Streaming rejects ahead
-    of a stateful operator. Bucket strings are asserted identical to
-    the certified builder's by tests/test_streaming.py's state check
-    (it recomputes the expected state THROUGH this function against
-    the batch operator's verdicts)."""
-    from ..operators.dedup import LSH_ROWS
+    The bands come from minhash_band_explode's bucket construction
+    (band_buckets) applied in place, carrying sids alongside, instead of
+    calling minhash_band_explode and joining sids back on — that join
+    would be a stream-stream self-join, which Structured Streaming
+    rejects ahead of a stateful operator."""
     sh = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         shingle_ids_tok_col(
             token_hashes_32_col(F.col(text_col))).alias("sids"))
     sig = sh.select("doc_id", "sids",
                     minhash_signature_col(F.col("sids")).alias("sig"))
-    bands = F.explode(F.transform(
-        F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
-        lambda b: F.struct(
-            b.alias("band"),
-            F.array_join(
-                F.slice(F.col("sig"), b * LSH_ROWS + 1, LSH_ROWS), "_"
-            ).alias("bucket"))))
+    bands = band_buckets("sig", LSH_BANDS, LSH_ROWS)
     return (sig.select("doc_id", "sids", bands.alias("bk"))
             .select("doc_id", "sids",
                     F.col("bk.band").alias("band"),

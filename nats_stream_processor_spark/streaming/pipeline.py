@@ -37,7 +37,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ..config import DEDUP_WINDOW_SECONDS
 from ..operators.enrich import enrich_posts
@@ -53,33 +52,29 @@ RAW_POST_SCHEMA = (
 )
 
 
-def decode_posts(raw: DataFrame, value_col: str = "value",
-                 schema: str | StructType = RAW_POST_SCHEMA) -> DataFrame:
-    """F1+F2: empty-payload filter, permissive JSON parse, null drop.
+def decode_posts(raw: DataFrame) -> DataFrame:
+    """F1+F2: empty-payload filter, permissive JSON parse of the ``value``
+    column against RAW_POST_SCHEMA, null drop.
     Malformed JSON becomes a NULL struct (PERMISSIVE) and is dropped —
     the reference acks-and-drops the same way."""
-    payload = F.col(value_col).cast("string")
+    payload = F.col("value").cast("string")
     return (
         raw.filter(F.length(F.trim(payload)) > 0)
-        .select(F.from_json(payload, schema).alias("p"))
+        .select(F.from_json(payload, RAW_POST_SCHEMA).alias("p"))
         .filter(F.col("p").isNotNull() & F.col("p.uri").isNotNull())
         .select("p.*")
     )
 
 
-def enrich_stream(
-    posts: DataFrame,
-    event_time_col: str | None = None,
-    dedup_window_s: int = DEDUP_WINDOW_SECONDS,
-) -> DataFrame:
-    """Streaming enrichment: the batch transform + watermarked dedup.
+def dedup_posts(enriched: DataFrame) -> DataFrame:
+    """D1: drop (uri, cid) duplicates of enriched posts — watermarked
+    state on a streaming frame, a plain dropDuplicates on a static one.
 
-    ``event_time_col=None`` stamps processing time (the reference has no
-    event-time logic; its dedup window is wall-clock at the broker).
+    The watermark runs on ``processed_at``: the reference has no
+    event-time logic; its dedup window is wall-clock at the broker.
     """
-    enriched = enrich_posts(posts, dedup=False)
-    ts = F.col(event_time_col) if event_time_col else F.col("processed_at")
-    enriched = enriched.withColumn("__event_ts", ts.cast("timestamp"))
+    enriched = enriched.withColumn(
+        "__event_ts", F.col("processed_at").cast("timestamp"))
     # The reference skips the Nats-Msg-Id header (i.e. does no dedup) when
     # cid is missing (src/nats_client.py:248-252; uri is never null past
     # decode_posts), so a keyed dedup must NOT treat NULL cid as equal —
@@ -103,10 +98,15 @@ def enrich_stream(
         return keyed.dropDuplicates(["uri", "__dedup_cid"]).drop(
             "__dedup_cid", "__event_ts")
     return (
-        keyed.withWatermark("__event_ts", f"{dedup_window_s} seconds")
+        keyed.withWatermark("__event_ts", f"{DEDUP_WINDOW_SECONDS} seconds")
         .dropDuplicatesWithinWatermark(["uri", "__dedup_cid"])
         .drop("__dedup_cid", "__event_ts")
     )
+
+
+def enrich_stream(posts: DataFrame) -> DataFrame:
+    """Streaming enrichment: the batch transform, then D1 dedup."""
+    return dedup_posts(enrich_posts(posts))
 
 
 @dataclass
@@ -128,9 +128,13 @@ def start_enrichment_query(
     """Wire decode -> enrich -> dedup -> routed publish and start it.
     The M1 counters ride along as ``df.observe`` metrics (summed by
     MetricsListener): processed and empty-text on the decoded input,
-    published on the rows handed to the sink."""
+    passed-gate between the confidence gate and dedup, published on the
+    rows handed to the sink (health.snapshot derives the gate and dedup
+    drops from them). The stages are enrich_stream's two halves."""
     posts = observe_pipeline_counters(posts_stream, "input")
-    published = enrich_stream(posts).observe(
+    gated = enrich_posts(posts).observe(
+        "gate", F.count(F.lit(1)).alias("n_passed_gate"))
+    published = dedup_posts(gated).observe(
         "published", F.count(F.lit(1)).alias("n_published"))
     writer = (
         published.writeStream.format("nats")
@@ -144,15 +148,11 @@ def start_enrichment_query(
     return writer.start()
 
 
-def dedup_against_store(
-    stream: DataFrame,
-    digest_store: DataFrame,
-    text_col: str = "text",
-    digest_col: str = "k",
-    dedup_window_s: int = DEDUP_WINDOW_SECONDS,
-) -> DataFrame:
-    """Incremental content dedup of a document stream against a static
-    digest store — the streaming face of the batch
+def dedup_against_store(stream: DataFrame,
+                        digest_store: DataFrame) -> DataFrame:
+    """Incremental content dedup of a document stream (its ``text``
+    column) against a static digest store (its md5 column ``k``) — the
+    streaming face of the batch
     ``dedup_incremental_batch`` query (queries/llm_ext.py): documents
     whose md5 content digest already exists in the store are dropped by a
     stream-static LEFT ANTI join, then within-stream duplicates are
@@ -166,15 +166,15 @@ def dedup_against_store(
     batch, with the watermark bounding only the within-stream dedup
     state. Works identically on a batch DataFrame (no watermark path),
     which is what the parity test exercises."""
-    keyed = stream.withColumn("__k", F.md5(F.col(text_col)))
-    store = digest_store.select(F.col(digest_col).alias("__k")).distinct()
+    keyed = stream.withColumn("__k", F.md5(F.col("text")))
+    store = digest_store.select(F.col("k").alias("__k")).distinct()
     fresh = keyed.join(store, "__k", "left_anti")
     if not fresh.isStreaming:
         return fresh.dropDuplicates(["__k"]).drop("__k")
     return (
         fresh.withColumn("__ingest_ts",
                          F.current_timestamp())
-        .withWatermark("__ingest_ts", f"{dedup_window_s} seconds")
+        .withWatermark("__ingest_ts", f"{DEDUP_WINDOW_SECONDS} seconds")
         .dropDuplicatesWithinWatermark(["__k"])
         .drop("__k", "__ingest_ts")
     )

@@ -170,15 +170,26 @@ def test_trained_centroids_are_deterministic(clustered):
 
 
 def test_inprocess_and_distributed_trainers_agree(clustered):
-    """The in-process default trainer and the all-Spark distributed twin
-    must be fold-for-fold arithmetic-identical (bit-equal floats), so the
-    oracle CTE replay covers both."""
-    _, df = clustered
+    """The in-process trainers and their DuckDB CTE replays (the form the
+    registry oracles run) must be fold-for-fold arithmetic-identical:
+    bit-equal centroids and codebooks on the planted-cluster corpus."""
+    import duckdb
+    import pyarrow as pa
+
+    V, df = clustered
+    e = pa.table({  # noqa: F841 — DuckDB scans it by name
+        "vec_id": pa.array(range(N_VECS), pa.int64()),
+        "demb": pa.array([[float(x) for x in v] for v in V],
+                         pa.list_(pa.float64()))})
+    con = duckdb.connect()
+    ivf_ctes = km.ivf_train_cte_sql(8, iters=2, sample_n=128, dim=DIM)
+    cents = con.sql(f"WITH {ivf_ctes} SELECT c_demb FROM tcent "
+                    "ORDER BY cent_id").fetchall()
     assert (km.train_ivf_centroids(df, 8, iters=2, sample_n=128)
-            == km.train_ivf_centroids_distributed(df, 8, iters=2,
-                                                  sample_n=128))
-    assert (km.train_pq_codebook(df, iters=1, sample_n=128)
-            == km.train_pq_codebook_distributed(df, iters=1, sample_n=128))
+            == [r[0] for r in cents])
+    pq_ctes = km.pq_train_cb_cte_sql(iters=1, sample_n=128)
+    cb3 = con.sql(f"WITH {pq_ctes} SELECT cb3 FROM cbrow").fetchone()[0]
+    assert km.train_pq_codebook(df, iters=1, sample_n=128) == cb3
 
 
 def test_ivf_sizing_functions():

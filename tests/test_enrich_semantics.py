@@ -18,6 +18,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from nats_stream_processor_spark.operators.enrich import enrich_posts
+from nats_stream_processor_spark.streaming.pipeline import enrich_stream
 
 RAW_SCHEMA = (
     "uri string, cid string, author string, text string, "
@@ -120,14 +121,13 @@ def test_dedup_on_uri_cid(spark):
         base_row(uri="a", cid="1", text="great day"),   # exact duplicate
         base_row(uri="a", cid="2", text="great day"),   # different cid kept
         base_row(uri="b", cid=None, text="great day"),  # null cid kept
-        base_row(uri="b", cid=None, text="great day"),  # dropDuplicates treats
+        base_row(uri="b", cid=None, text="great day"),  # null cid kept
     ])
-    out = enrich_posts(df, id_cols=("uri", "cid")).select("uri", "cid").collect()
+    out = enrich_stream(df).select("uri", "cid").collect()
     pairs = sorted((r["uri"], r["cid"] or "") for r in out)
-    # (a,1) deduped to one; (a,2) kept; (b,null) deduped to one (batch
-    # dropDuplicates matches null keys; the reference's JetStream dedup
-    # skips null cid — streaming path documents this divergence).
-    assert pairs == [("a", "1"), ("a", "2"), ("b", "")]
+    # (a,1) deduped to one; (a,2) kept; both (b,null) kept: the reference
+    # sets no Nats-Msg-Id without a cid, so JetStream dedups neither.
+    assert pairs == [("a", "1"), ("a", "2"), ("b", ""), ("b", "")]
 
 
 def test_passthrough_unknown_fields(spark):

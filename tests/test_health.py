@@ -38,11 +38,11 @@ def _listener() -> MetricsListener:
     lst = MetricsListener()
     lst.onQueryProgress(_progress(100, 50.0, 48.0, 120, {"pipeline": {
         "n_processed": 100, "n_empty_text": 3,
-        "n_gated": 17, "n_published": 80}}, states=[(80, 40_000, 300)]))
+        "n_passed_gate": 82, "n_published": 80}}, states=[(80, 40_000, 300)]))
     # two stateful operators in the last batch: gauges sum them
     lst.onQueryProgress(_progress(60, 30.0, 29.0, 80, {"pipeline": {
         "n_processed": 60, "n_empty_text": 1,
-        "n_gated": 9, "n_published": 50}},
+        "n_passed_gate": 53, "n_published": 50}},
         states=[(130, 65_000, 250), (7, 2_048, 4)]))
     return lst
 
@@ -52,7 +52,10 @@ def test_snapshot_totals():
     assert s["posts_processed_total"] == 160
     assert s["posts_published_total"] == 130
     assert s["posts_empty_text_total"] == 4
-    assert s["posts_gated_total"] == 26
+    # gate drops = processed - empty - passed gate; dedup drops = passed
+    # gate - published
+    assert s["posts_gated_total"] == 21
+    assert s["posts_deduplicated_total"] == 5
     assert s["batches_total"] == 2
     assert s["input_rows_total"] == 160
     assert s["input_rows_per_second"] == 30.0
@@ -66,6 +69,9 @@ def test_prometheus_exposition_format():
     assert "# TYPE stream_processor_posts_processed_total counter" in text
     assert "stream_processor_posts_processed_total 160" in text
     assert "stream_processor_posts_published_total 130" in text
+    assert "stream_processor_posts_gated_total 21\n" in text
+    assert "# TYPE stream_processor_posts_deduplicated_total counter" in text
+    assert "stream_processor_posts_deduplicated_total 5\n" in text
     assert "# TYPE stream_processor_nats_connected gauge" in text
     assert "stream_processor_nats_connected 1" in text
     # histogram: 0.08s and 0.12s both <= 0.2; only 0.08 <= 0.1

@@ -136,7 +136,7 @@ def test_format_nats_end_to_end_enrichment(spark, mem_broker, tmp_path):
         .load()
     )
     ensure_output_stream(mem_broker, OUTPUT_STREAM)
-    q = start_enrichment_query(decode_posts(raw, value_col="value"),
+    q = start_enrichment_query(decode_posts(raw),
                                NatsSink(mem_broker, OUTPUT_STREAM),
                                str(tmp_path / "nats_ckpt"))
     q.processAllAvailable()

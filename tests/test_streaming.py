@@ -247,10 +247,9 @@ def test_service_counters_exact_on_mem_broker(spark, posts_dir, mem_broker,
     """The service's /metrics post counters, end to end: the query
     start_enrichment_query wires carries its own observe() counters, so
     a known corpus through the mem:// broker yields exact totals — 6
-    decoded posts processed, 1 of them empty-text, and published equal
-    to the messages that reached the output stream (the gated post and
-    the duplicate are dropped). posts_gated_total has no observation
-    yet and reads 0."""
+    decoded posts processed, 1 of them empty-text, 1 gated, 1 dropped
+    as a duplicate, and published equal to the messages that reached
+    the output stream."""
     listener = MetricsListener()
     spark.streams.addListener(listener)
     try:
@@ -270,8 +269,8 @@ def test_service_counters_exact_on_mem_broker(spark, posts_dir, mem_broker,
     n_out = len(published(mem_broker))
     assert n_out == 3
     assert (s["posts_processed_total"], s["posts_empty_text_total"],
-            s["posts_published_total"], s["posts_gated_total"]) == \
-        (6, 1, n_out, 0)
+            s["posts_published_total"], s["posts_gated_total"],
+            s["posts_deduplicated_total"]) == (6, 1, n_out, 1, 1)
 
 
 def test_streaming_tumbling_window_append(spark, tmp_path):
