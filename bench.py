@@ -3,7 +3,9 @@
 JSON line:
 
     {"metric": "headline_total_sec", "value": N, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": "...", "rows_per_sec": {...}}
+     "queries": {name: sec, ...}, "sf": "...", "rows_per_sec": {...},
+     "stream_state_partitions": N, "default_parallelism": N,
+     "master": "local[N]"}
 
 Execution is forced with the noop sink (full computation, no driver-side
 materialization) so timings reflect the distributed plan, not collect().
@@ -240,6 +242,10 @@ def main() -> int:
         # dedup state shards of the streaming passes (one per core): the
         # streaming figures depend on it across hosts
         "stream_state_partitions": stream["stream_state_partitions"],
+        # the batch session's parallelism: figures compare across hosts
+        # only at equal parallelism
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }
     print(json.dumps(out))
     spark.stop()

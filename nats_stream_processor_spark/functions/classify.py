@@ -15,6 +15,15 @@ architecture, where both models are opaque per-message functions
 Spark mapping called for in SURVEY.md §2A (U1/U2: per-executor state inside
 a pandas_udf, Arrow batches replacing per-message calls).
 
+The enrichment pipeline runs both stages through ONE UDF, ``enrich_udf``:
+its kernel ``enrich_batch`` replays the reference's per-message order
+(src/service.py:100-150) over a whole Arrow batch — F4 blank text, U1
+sentiment, F5 confidence gate, U2 topics on the passing rows only — so a
+micro-batch crosses into Python once. Each crossing costs a fixed
+~70-110 ms per batch whatever its row count, which dominates a small
+streaming batch. ``sentiment_udf`` / ``topics_udf`` stay for the
+single-stage registry queries, which classify every row ungated.
+
 Values are bit-identical to the SQL twins (floats rounded to
 FLOAT_ROUND_DP on both engines), which the oracle checks assert.
 """
@@ -34,7 +43,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..config import FLOAT_ROUND_DP
+from ..config import FLOAT_ROUND_DP, SENTIMENT_CONFIDENCE_THRESHOLD
 from .sentiment import NEGATIVE_WORDS, NEUTRAL_BIAS, POSITIVE_WORDS
 from .text import TOKEN_RE
 from .topics import LABELS, SCORE_OFFSET, TOPIC_KEYWORDS
@@ -53,6 +62,11 @@ TOPICS_SCHEMA = StructType([
     StructField("topics", ArrayType(StringType())),
     StructField("top_topic", StringType()),
     StructField("top_confidence", DoubleType()),
+])
+
+ENRICH_SCHEMA = StructType([
+    StructField("sentiment", SENTIMENT_SCHEMA),
+    StructField("topics", TOPICS_SCHEMA),
 ])
 
 _TOKEN = re.compile(TOKEN_RE)
@@ -142,6 +156,34 @@ def topics_batch(texts: pd.Series, dp: int = FLOAT_ROUND_DP) -> pd.DataFrame:
     )
 
 
+def enrich_batch(texts: pd.Series) -> pd.DataFrame:
+    """F4 -> U1 -> F5 -> U2 over one batch, in the reference's stage order
+    (src/service.py:110-127), as ``sentiment`` / ``topics`` columns of
+    dicts.
+
+    - NULL or blank text (F4: empty after trimming spaces, like Spark's
+      ``trim`` in ``non_empty_text``) reaches neither kernel and gets NULL
+      for both fields;
+    - ``sentiment_batch`` runs on the remaining rows;
+    - ``topics_batch`` runs only on the rows whose confidence passes the
+      F5 gate; gated rows get NULL ``topics``.
+
+    The gate that drops rows stays a Column filter after the UDF
+    (``confidence_gate``); this one only spares gated rows the topic
+    stage."""
+    n = len(texts)
+    sentiment = np.full(n, None, dtype=object)
+    topics = np.full(n, None, dtype=object)
+    live = np.flatnonzero(texts.fillna("").str.strip(" ").str.len().to_numpy() > 0)
+    if live.size:
+        s = sentiment_batch(texts.iloc[live])
+        sentiment[live] = s.to_dict("records")
+        passed = live[s["confidence"].to_numpy() >= SENTIMENT_CONFIDENCE_THRESHOLD]
+        if passed.size:
+            topics[passed] = topics_batch(texts.iloc[passed]).to_dict("records")
+    return pd.DataFrame({"sentiment": sentiment, "topics": topics})
+
+
 @F.pandas_udf(SENTIMENT_SCHEMA)
 def _sentiment_udf_raw(texts: pd.Series) -> pd.DataFrame:
     return sentiment_batch(texts)
@@ -152,14 +194,23 @@ def _topics_udf_raw(texts: pd.Series) -> pd.DataFrame:
     return topics_batch(texts)
 
 
-# Marked non-deterministic as an OPTIMIZER FENCE, not because values vary:
-# without it, Catalyst pushes the F5 confidence gate (which references the
-# sentiment struct) below the pre-UDF repartition and re-evaluates the UDF
-# on the filter path — the model then runs twice per row, and the first run
-# lands on the scan's (possibly single) input partitions instead of the
-# spread ones. Non-deterministic expressions are never duplicated or moved
-# across Exchange/Filter boundaries, so each classifier runs exactly once,
-# after the repartition — the reference's stage ordering (service.py
-# short-circuit) preserved by construction.
+@F.pandas_udf(ENRICH_SCHEMA)
+def _enrich_udf_raw(texts: pd.Series) -> pd.DataFrame:
+    return enrich_batch(texts)
+
+
+# Marked non-deterministic as an OPTIMIZER FENCE, not because values vary.
+# The F5 confidence gate is a Filter on the fused struct, ABOVE the UDF;
+# a deterministic UDF would let Catalyst push that filter below the
+# classifier's input projection (and any repartition under it) by
+# re-evaluating the UDF on the filter path — the models would then run
+# twice per row, the first run on the scan's (possibly single) input
+# partitions instead of the spread ones. Non-deterministic expressions are
+# never duplicated or moved across Exchange/Filter boundaries, so each
+# classifier runs exactly once per row, and the gate can only run after
+# it. Since no filter sits below ``enrich_udf``, Catalyst also has no text
+# probe to push into the JSON decode, which then parses each payload once
+# for the row and once for its ``uri`` guard.
 sentiment_udf = _sentiment_udf_raw.asNondeterministic()
 topics_udf = _topics_udf_raw.asNondeterministic()
+enrich_udf = _enrich_udf_raw.asNondeterministic()

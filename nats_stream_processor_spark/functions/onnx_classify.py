@@ -18,8 +18,12 @@ Architecture (the Spark mapping of L1, SURVEY.md §2A):
   (the reference uses 0 = all cores because it is one process per pod,
   src/sentiment.py:67-69 — copying that here would thrash).
 
-onnxruntime/transformers are NOT in this container, so the factories
-raise ImportError with guidance; the deterministic lexicon classifiers
+The two UDFs are standalone: a caller applies them to a text column
+itself. Nothing swaps them into ``operators/enrich.enrich_posts``, whose
+one fused step (``classify.enrich_udf``) runs the lexicon kernels.
+
+When onnxruntime/transformers are not installed, the factories raise
+ImportError with guidance; the deterministic lexicon classifiers
 (functions/classify.py) are the default execution path and are what the
 DuckDB oracle verifies. Outputs here are rows-only checkable by design
 (model floats are not SQL-reproducible).

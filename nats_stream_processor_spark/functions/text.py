@@ -45,6 +45,7 @@ def extract_text_col(available: set[str] | None = None) -> Column:
 
 def non_empty_text(text: Column | str) -> Column:
     """F4: keep rows whose extracted text is non-empty after trim
-    (reference: src/service.py:110-113)."""
+    (reference: src/service.py:110-113). Spark's ``trim`` strips spaces
+    only; classify.enrich_batch applies the same test in pandas."""
     c = F.col(text) if isinstance(text, str) else text
     return F.length(F.trim(c)) > 0

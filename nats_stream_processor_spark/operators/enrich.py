@@ -4,10 +4,11 @@ DataFrame expression.
 Reference orchestration: src/service.py:100-150 (_process_message), stages
 F1..F5, P1..P3, U1, U2, D1 per SURVEY.md §2A. Operator order is semantic:
 the confidence gate sits BETWEEN the sentiment and topic stages so the topic
-classifier never evaluates gated rows (reference: src/service.py:115-127) —
-expressed here by placing the filter between the two projections, which
-Catalyst will not reorder past the (deterministic, but explicitly staged)
-classifier expressions.
+classifier never evaluates gated rows (reference: src/service.py:115-127).
+Both stages run in ONE Arrow UDF (functions/classify.enrich_udf), so each
+micro-batch crosses into Python once; its kernel keeps the order inside the
+batch (blank text reaches no classifier, gated rows reach no topic stage),
+and one Column filter after it drops the blank and gated rows.
 """
 
 from __future__ import annotations
@@ -16,9 +17,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import OUTPUT_SUBJECT_PREFIX, PROCESSOR_NAME
-from ..functions.classify import sentiment_udf, topics_udf
+from ..functions.classify import enrich_udf
 from ..functions.sentiment import confidence_gate
-from ..functions.text import extract_text_col, non_empty_text
+from ..functions.text import extract_text_col
 
 
 def route_subject(sentiment: Column, top_topic: Column,
@@ -33,8 +34,13 @@ def enrich_posts(df: DataFrame, text_col: str | None = None) -> DataFrame:
 
     - ``text_col=None`` applies the reference's 5-way coalesce (P1) over
       whichever candidate fields exist; otherwise uses the named column.
-    - Rows with empty text (F4) or gated confidence (F5) are dropped, exactly
-      like the reference acks-without-publishing.
+    - One Python crossing, ``enrich_udf``, runs the reference's stage order
+      per row: empty text (F4) gets no classification, the rest get
+      sentiment (U1), and only rows that pass the confidence gate (F5) get
+      topics (U2).
+    - One filter after it, ``confidence_gate``, drops the empty-text rows
+      (NULL confidence) and the gated ones, exactly like the reference
+      acks-without-publishing.
     - No D1 dedup here: the (uri, cid) idempotency key is applied by
       streaming/pipeline.dedup_posts, on static and streaming frames alike.
 
@@ -44,18 +50,17 @@ def enrich_posts(df: DataFrame, text_col: str | None = None) -> DataFrame:
     """
     text = F.col(text_col) if text_col else extract_text_col(set(df.columns))
     return (
-        df.withColumn("__text", text)
-        .filter(non_empty_text(F.col("__text")))                       # F1/F4
-        .withColumn("sentiment", sentiment_udf(F.col("__text")))      # U1
-        .filter(confidence_gate("sentiment"))                          # F5
-        .withColumn("topics", topics_udf(F.col("__text")))             # U2
-        .withColumn("processed_at", F.current_timestamp())             # P2
+        df.withColumn("__e", enrich_udf(text))                 # F4, U1, U2
+        .filter(confidence_gate("__e.sentiment"))              # F4/F5
+        .withColumn("sentiment", F.col("__e.sentiment"))
+        .withColumn("topics", F.col("__e.topics"))
+        .withColumn("processed_at", F.current_timestamp())     # P2
         .withColumn("processor", F.lit(PROCESSOR_NAME))
         .withColumn(
             "route_subject",
             route_subject(F.col("sentiment.sentiment"), F.col("topics.top_topic")),
         )
-        .drop("__text")
+        .drop("__e")
     )
 
 

@@ -30,12 +30,12 @@ from ..functions.text import extract_text_col, non_empty_text
 DURATION_BUCKETS = [0.01, 0.05, 0.1, 0.2, 0.5, 1.0, 2.0, 5.0]
 
 
-def observe_pipeline_counters(df: DataFrame, name: str = "pipeline") -> DataFrame:
+def observe_pipeline_counters(df: DataFrame) -> DataFrame:
     """Attach the M1 input counters (processed, empty text — the same
-    extracted text enrich_posts filters on) to a decoded post frame;
-    values arrive in QueryProgress.observedMetrics[name]."""
+    extracted text enrich_posts classifies) to a decoded post frame;
+    values arrive in QueryProgress.observedMetrics["input"]."""
     has_text = non_empty_text(extract_text_col(set(df.columns)))
-    return df.observe(name, F.count(F.lit(1)).alias("n_processed"),
+    return df.observe("input", F.count(F.lit(1)).alias("n_processed"),
                       F.count(F.when(~has_text, 1)).alias("n_empty_text"))
 
 

@@ -61,7 +61,7 @@ def decode_posts(raw: DataFrame) -> DataFrame:
     return (
         raw.filter(F.length(F.trim(payload)) > 0)
         .select(F.from_json(payload, RAW_POST_SCHEMA).alias("p"))
-        .filter(F.col("p").isNotNull() & F.col("p.uri").isNotNull())
+        .filter(F.col("p.uri").isNotNull())
         .select("p.*")
     )
 
@@ -131,7 +131,7 @@ def start_enrichment_query(
     passed-gate between the confidence gate and dedup, published on the
     rows handed to the sink (health.snapshot derives the gate and dedup
     drops from them). The stages are enrich_stream's two halves."""
-    posts = observe_pipeline_counters(posts_stream, "input")
+    posts = observe_pipeline_counters(posts_stream)
     gated = enrich_posts(posts).observe(
         "gate", F.count(F.lit(1)).alias("n_passed_gate"))
     published = dedup_posts(gated).observe(

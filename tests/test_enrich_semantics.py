@@ -99,6 +99,53 @@ def test_confidence_gate_between_stages(spark):
     assert rows["kept"]["sentiment"]["confidence"] >= 0.4
 
 
+def test_enrich_batch_stage_order_per_row(monkeypatch):
+    """The fused kernel keeps the reference's stage order inside one
+    batch (src/service.py:110-127), no Spark needed: NULL and blank text
+    (F4) reach neither classifier, the sentiment kernel sees exactly the
+    non-blank rows, and the topic kernel exactly the rows that pass the
+    F5 gate. Gated rows come back with NULL topics, blank ones with NULL
+    for both fields."""
+    import pandas as pd
+
+    from nats_stream_processor_spark.config import SENTIMENT_CONFIDENCE_THRESHOLD
+    from nats_stream_processor_spark.functions import classify
+
+    seen = {}
+
+    def spy(name):
+        kernel = getattr(classify, name)
+
+        def wrapped(texts, *a, **kw):
+            seen.setdefault(name, []).extend(texts.tolist())
+            return kernel(texts, *a, **kw)
+        monkeypatch.setattr(classify, name, wrapped)
+
+    spy("sentiment_batch")
+    spy("topics_batch")
+    texts = ["", "great day", "   ", "love hate", None, "\tgreat", "love hate",
+             "zzz qqq"]
+    out = classify.enrich_batch(pd.Series(texts))
+
+    assert seen["sentiment_batch"] == [
+        "great day", "love hate", "\tgreat", "love hate", "zzz qqq"]
+    assert seen["topics_batch"] == ["great day", "\tgreat", "zzz qqq"]
+    assert len(out) == len(texts)
+    for i, t in enumerate(texts):
+        s, tp = out["sentiment"][i], out["topics"][i]
+        if t is None or not t.strip(" "):
+            assert s is None and tp is None, t
+        elif t == "love hate":
+            assert s["confidence"] < SENTIMENT_CONFIDENCE_THRESHOLD
+            assert tp is None
+        else:
+            assert s["confidence"] >= SENTIMENT_CONFIDENCE_THRESHOLD
+            assert tp["top_topic"] in tp["topics"]
+    # the unfused kernels give the same values on the rows they see
+    assert out["sentiment"][1] == classify.sentiment_batch(
+        pd.Series(["great day"])).to_dict("records")[0]
+
+
 def test_top_topic_always_included_and_shape(spark):
     # Text with zero topic-keyword hits: every label scores sigmoid(-0.5)
     # < 0.5, so `topics` would be empty — U2d forces top_topic in.

@@ -1609,3 +1609,26 @@ def test_ivf_drift_psi_one_scan_bucket_table_windows(spark):
     assert "CartesianProduct" not in p
     assert "InMemoryTableScan" in p, p[:400]
     assert len(re.findall(r"\(\d+\) Scan parquet", p)) <= 1, p[:600]
+
+
+def test_enrich_posts_one_python_crossing_two_json_parses(spark):
+    """enrich_posts over decoded payloads crosses into Python once per
+    batch (one fused ArrowEvalPython for U1 -> F5 -> U2) and parses each
+    JSON payload at most twice: the full struct plus the ``uri`` guard.
+    A Filter between the classifiers, or F4 as a Column filter below
+    them, brings back the second crossing or the per-field from_json
+    probes Catalyst pushes into the decode filter."""
+    import json
+
+    from nats_stream_processor_spark.operators.enrich import enrich_posts
+    from nats_stream_processor_spark.streaming.pipeline import decode_posts
+
+    raw = spark.createDataFrame(
+        [(json.dumps({"uri": "u1", "cid": "c", "text": "great day"}),),
+         (json.dumps({"uri": "u2", "content": "love hate"}),),
+         ("not json",)], "value string")
+    df = enrich_posts(decode_posts(raw))
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert p.count("ArrowEvalPython") == 1, p
+    assert 1 <= p.count("from_json(") <= 2, p
+    assert [r["uri"] for r in df.collect()] == ["u1"]

@@ -222,7 +222,7 @@ def test_observe_counters_and_listener(spark, posts_dir, tmp_path):
     try:
         raw = spark.readStream.format("text").load(str(posts_dir))
         posts = decode_posts(raw)
-        observed = observe_pipeline_counters(posts, "pipeline")
+        observed = observe_pipeline_counters(posts)
         q = (observed.writeStream.format("memory")
              .queryName("obs_test").outputMode("append")
              .option("checkpointLocation", str(tmp_path / "ckpt3"))

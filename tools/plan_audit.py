@@ -21,11 +21,13 @@ SF = "/root/testdata/sf0.001"
 # query -> the scale property worth reading the plan for
 NOTES = {
     "enrich_flagship": (
-        "Classifier UDFs are optimizer-fenced (asNondeterministic): each "
-        "ArrowEvalPython runs exactly once, after the round-robin spread, "
-        "with the F5 gate between the two stages (reference short-circuit "
-        "ordering). Base-column text filter still reaches the scan; the "
-        "aggregate is partial+final."
+        "One fused classifier UDF, optimizer-fenced (asNondeterministic): "
+        "a single ArrowEvalPython runs it once per row, with the reference's "
+        "short-circuit order inside the batch (blank text skips both "
+        "classifiers, gated rows skip the topic stage); the F5 gate Filter "
+        "reads its output. The spread adds a round-robin exchange only when "
+        "the input carries enough bytes per Python partition (none at this "
+        "scale); the aggregate is partial+final."
     ),
     "agg_pricing_summary": (
         "Partial HashAggregate before the exchange, final after — map-side "
