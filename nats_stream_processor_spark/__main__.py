@@ -22,7 +22,9 @@ import os
 import signal
 import sys
 
-from .config import MAX_OFFSETS_PER_TRIGGER
+from .config import (
+    INPUT_STREAM, INPUT_SUBJECT_PREFIX, MAX_OFFSETS_PER_TRIGGER, OUTPUT_STREAM,
+)
 from .logging_setup import configure_logging, get_logger
 from .session import get_spark
 from .sources import nats as nats_src
@@ -37,11 +39,11 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="nats_stream_processor_spark")
     ap.add_argument("--servers", default=env("NATS_URL", "mem://default"))
     ap.add_argument("--input-stream",
-                    default=env("INPUT_STREAM", "bluesky-posts"))
+                    default=env("INPUT_STREAM", INPUT_STREAM))
     ap.add_argument("--output-stream",
-                    default=env("OUTPUT_STREAM", "bluesky-posts-enriched"))
+                    default=env("OUTPUT_STREAM", OUTPUT_STREAM))
     ap.add_argument("--subject-prefix",
-                    default=env("INPUT_SUBJECT", "bluesky.posts") + ".")
+                    default=env("INPUT_SUBJECT", INPUT_SUBJECT_PREFIX) + ".")
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--trigger-seconds", type=float, default=None)
     ap.add_argument("--max-batch", type=int,

@@ -12,8 +12,6 @@ from dataclasses import dataclass, field
 
 # Reference: src/config.py:33 (SENTIMENT_CONFIDENCE_THRESHOLD, dev default 0.4)
 SENTIMENT_CONFIDENCE_THRESHOLD: float = 0.4
-# Reference: src/config.py:40 (TOPIC_SIGMOID_THRESHOLD)
-TOPIC_SIGMOID_THRESHOLD: float = 0.5
 # Reference: src/config.py:27 (duplicate window, seconds) / src/nats_client.py:99
 DEDUP_WINDOW_SECONDS: int = 600
 # Reference: src/config.py:19 (service name stamped on every enriched post)

@@ -29,6 +29,14 @@ value-check the resulting index, not just row-count it):
 
 The SQL generators below emit the same fixpoint as chained CTEs, one block
 per iteration, so the oracle string stays static across scale factors.
+
+The coarse quantizer lives here too, once per engine: ``centroid_table``
+(the trained centroids as a broadcastable frame) and ``rank_lists`` (every
+inverted list ranked per vector, rc = 1 the assignment, rc <= nprobe the
+probe set) are the Spark side of every IVF query and of the streaming
+list-size monitor; ``ivf_train_cte_sql`` plus the oracles' ``row_number()
+OVER (PARTITION BY vec_id ORDER BY <cosine> DESC, cent_id)`` is the DuckDB
+replay they are checked against.
 """
 
 from __future__ import annotations
@@ -36,7 +44,7 @@ from __future__ import annotations
 import math
 from decimal import ROUND_HALF_UP, Decimal, localcontext
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import similarity as sim
@@ -49,7 +57,8 @@ PQ_TRAIN_ITERS = 2
 # static per scale factor; the functions below are the production sizing —
 # at the test corpora (500-5,000 vectors) they evaluate exactly to these
 # floors, so pinned queries and auto-sized calls agree at every tested sf.
-IVF_NLIST_FLOOR = 16
+IVF_NLIST = 16
+IVF_NPROBE = 2  # lists probed per query
 TRAIN_SAMPLE_N = 256
 TRAIN_SAMPLE_CAP = 1 << 18  # 256k vectors: the sample must fit one process
 
@@ -57,17 +66,17 @@ TRAIN_SAMPLE_CAP = 1 << 18  # 256k vectors: the sample must fit one process
 def ivf_nlist_for(n_corpus: int) -> int:
     """Coarse-quantizer size as a function of corpus count — the faiss
     sizing rule (nlist ~ sqrt(N), >= ~39 training points per centroid),
-    snapped to a power of two and floored at IVF_NLIST_FLOOR so small/test
+    snapped to a power of two and floored at IVF_NLIST so small/test
     corpora keep the pinned registry constant:
 
         N = 5e3   -> 16 (floor)     N = 1e9  -> 4096
         N = 1e6   -> 128            N = 4e10 (100 TB of 2.5 kB docs) -> 16384
     """
     if n_corpus <= 0:
-        return IVF_NLIST_FLOOR
+        return IVF_NLIST
     target = math.sqrt(n_corpus / 39.0)
     nlist = 1 << max(int(target).bit_length() - 1, 0)  # pow2 <= target
-    return max(IVF_NLIST_FLOOR, min(nlist, 1 << 16))
+    return max(IVF_NLIST, min(nlist, 1 << 16))
 
 
 def train_sample_for(nlist: int) -> int:
@@ -77,7 +86,7 @@ def train_sample_for(nlist: int) -> int:
     cap a larger nlist trains on fewer points per centroid). At the floor
     nlist this returns exactly TRAIN_SAMPLE_N, so auto-sized training
     reproduces the pinned registry constants bit-for-bit at test scale."""
-    if nlist <= IVF_NLIST_FLOOR:
+    if nlist <= IVF_NLIST:
         return TRAIN_SAMPLE_N
     return min(39 * nlist, TRAIN_SAMPLE_CAP)
 
@@ -289,6 +298,44 @@ def ivf_train_cte_sql(k: int, iters: int = IVF_TRAIN_ITERS,
     parts.append(
         f"tcent AS (SELECT cent_id, c_demb FROM tc{iters})")
     return ",\n".join(parts)
+
+
+def centroid_table(spark: SparkSession, e: DataFrame) -> DataFrame:
+    """The trained coarse quantizer over the (vec_id, demb) corpus ``e``
+    as the broadcastable (cent_id, c_demb, c_nrm) frame — the Spark side
+    of the oracles' ``tcent``/``cent`` CTEs. Only the IVF_NLIST trained
+    centroids are collected (the audited kmeans license)."""
+    cents = train_ivf_centroids(e, IVF_NLIST)
+    return spark.createDataFrame(
+        [(i, cents[i]) for i in range(IVF_NLIST)],
+        "cent_id int, c_demb array<double>",
+    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
+
+
+def rank_lists(n: DataFrame, cent: DataFrame, ppm: bool = False) -> DataFrame:
+    """Every inverted list ranked per vector: ``n`` (vec_id, demb, nrm,
+    ...) crossed with the broadcast ``cent``, returning n's columns +
+    cent_id + the rank key + ``rc`` = row_number() OVER (PARTITION BY
+    vec_id ORDER BY key DESC, cent_id). Callers keep ``rc = 1`` (the
+    assignment) or ``rc <= nprobe`` (the probe set); columns they do not
+    select are pruned through the window.
+
+    The key is the cosine ``c_cos``, or with ``ppm`` the int64 ``ppm`` =
+    floor(cos * 1e6 + 0.5) for the oracles that rank on it: a raw double
+    cosine on a near-tie between two centroids can differ by 1 ulp
+    across engines and flip the assignment; the quantized key is exact on
+    both sides. Ties go to the lower cent_id, as in the oracles."""
+    cos = (sim.dot(F.col("demb"), F.col("c_demb"))
+           / (F.col("nrm") * F.col("c_nrm")))
+    if ppm:
+        name = "ppm"
+        key = F.floor(cos * F.lit(1000000.0) + F.lit(0.5)).cast("long")
+    else:
+        name, key = "c_cos", cos
+    w = Window.partitionBy("vec_id").orderBy(F.col(name).desc(), "cent_id")
+    return (n.crossJoin(F.broadcast(cent))
+            .select(*n.columns, "cent_id", key.alias(name))
+            .withColumn("rc", F.row_number().over(w)))
 
 
 def train_pq_codebook(e: DataFrame, iters: int = PQ_TRAIN_ITERS,

@@ -11,7 +11,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.classify import sentiment_udf, topics_udf
-from ..functions.sentiment import sentiment_count_sql_defs, sentiment_sql_columns
+from ..functions.sentiment import (
+    confidence_gate, sentiment_count_sql_defs, sentiment_sql_columns,
+)
 from ..functions.text import tokens_sql
 from ..functions.topics import topic_count_sql_defs, topics_sql_columns
 from ..operators.enrich import enrich_posts, enriched_route_counts, mean_6dp_sql
@@ -131,7 +133,7 @@ def q_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _docs(spark, sf_dir)
         .withColumn("s", sentiment_udf(F.col("text")))
-        .filter(F.col("s.confidence") >= 0.4)
+        .filter(confidence_gate("s"))
         .select(
             "doc_id",
             F.col("s.sentiment").alias("sentiment"),

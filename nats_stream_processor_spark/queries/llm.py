@@ -37,6 +37,7 @@ from ..operators.dedup import (
     token_hashes_duck_sql,
     token_hashes_spark_sql,
 )
+from ..operators.kmeans import IVF_NLIST, IVF_NPROBE
 from ..operators.multimodal import media_metadata, sample_frames, with_payload
 from ..operators.textstats import (
     fingerprint_col,
@@ -49,6 +50,7 @@ from ..operators.textstats import (
     token_stats_sql,
 )
 from ..registry import PY_MIN_SPLIT_BYTES, pin, register, spread, table
+from .knn_shared import lsh_probe
 
 NEAR_DUP_JACCARD = 0.5
 EMB_NEAR_DUP_COS = 0.4
@@ -863,36 +865,14 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table LSH ANN: L={sim.LSH_TABLES} sign-random-projection hash
     tables of {sim.LSH_PLANES} planes each; candidates = collision in any
     table (posexplode -> equi-join on (table, bucket) -> distinct), exact
-    cosine rerank on candidates only. Recall ~0.65 at the test corpus vs
-    0.14 single-table (asserted in test_ann_recall); the shuffle unit is
-    the (table, bucket) row, never the corpus pairwise.
-
-    The exploded signature table ``x`` feeds BOTH join sides (query probe
-    and corpus), so it is pinned: without the persist each side recomputes
-    the L x P hyperplane sign folds over the whole corpus — the dominant
-    cost of this query (observed ~15 s -> ~2 s at sf0.01)."""
+    cosine rerank on candidates only (knn_shared.lsh_probe). Recall ~0.65
+    at the test corpus vs 0.14 single-table (asserted in test_ann_recall);
+    the shuffle unit is the (table, bucket) row, never the corpus
+    pairwise."""
     e = spread(table(spark, sf_dir, "embeddings")).select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"),
-                 sim.lsh_buckets_multi(F.col("demb")).alias("buckets"))
-    x = pin(n.select("vec_id", "demb", "nrm",
-                     F.posexplode("buckets").alias("tbl", "bucket")))
-    q = x.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("demb").alias("q_demb"),
-        F.col("nrm").alias("q_nrm"), F.col("tbl").alias("q_tbl"),
-        F.col("bucket").alias("q_bucket"))
-    scored = (
-        F.broadcast(q)
-        .join(x, (F.col("tbl") == F.col("q_tbl"))
-              & (F.col("bucket") == F.col("q_bucket"))
-              & (F.col("vec_id") != F.col("query_id")))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"),
-            sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                       F.col("q_nrm"), F.col("nrm")).alias("cosine"),
-        )
-        .distinct()
-    )
+    scored = lsh_probe(
+        e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm")))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -993,15 +973,6 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(d).orderBy("doc_id", "frame_idx")
 
 
-# Coarse-quantizer size, pinned to operators.kmeans.IVF_NLIST_FLOOR so the
-# oracle strings (which replay training CTE-for-CTE) stay static per sf. In
-# production, size from the corpus instead: km.ivf_nlist_for(N) ~ sqrt(N/39)
-# snapped to a power of two (16 at every tested sf, 4096 at N=1e9), with the
-# training-sample bound km.train_sample_for(nlist) — train_ivf_centroids(e)
-# with no explicit k does exactly that.
-IVF_NLIST = 16   # == km.IVF_NLIST_FLOOR (asserted in tests)
-IVF_NPROBE = 2   # lists probed per query
-
 _IVF_CTE = f"""
 WITH e AS (SELECT vec_id, {sim.as_double_sql('embedding')} AS demb
            FROM embeddings),
@@ -1064,12 +1035,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
     n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    cents = km.train_ivf_centroids(e, IVF_NLIST)
-    cent = spark.createDataFrame(
-        [(i, cents[i]) for i in range(IVF_NLIST)],
-        "cent_id int, c_demb array<double>",
-    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
-    # NOTE (r16, losing A/B — do not retry): replacing this rank-1
+    # NOTE (r16, losing A/B — do not retry): replacing rank_lists' rank-1
     # window with a lexicographic struct-max groupBy (max(struct(c_cos,
     # -cent_id, cent_id, demb, nrm))) measured CONSISTENTLY slower
     # (1.62-1.66 s vs 1.28 s in adjacent driver windows at sf0.1): an
@@ -1079,16 +1045,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffles struct-wrapped vectors through partial+final too. The
     # streaming twin uses the struct-max shape because streaming cannot
     # run a non-time window at all, not because it is faster.
-    scored_cent = (
-        n.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id", "demb", "nrm", "cent_id",
-            (sim.dot(F.col("demb"), F.col("c_demb"))
-             / (F.col("nrm") * F.col("c_nrm"))).alias("c_cos"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), "cent_id")
-    ranked = scored_cent.withColumn("rc", F.row_number().over(w))
+    ranked = km.rank_lists(n, km.centroid_table(spark, e))
     assign = ranked.filter(F.col("rc") == 1).select("vec_id", "demb", "nrm", "cent_id")
     probes = (ranked.filter((F.col("rc") <= IVF_NPROBE) & (F.col("vec_id") < 10))
               .select(F.col("vec_id").alias("query_id"),
@@ -1203,19 +1160,7 @@ def ivf_pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
     n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    cents = km.train_ivf_centroids(e, IVF_NLIST)
-    cent = spark.createDataFrame(
-        [(i, cents[i]) for i in range(IVF_NLIST)],
-        "cent_id int, c_demb array<double>",
-    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
-    ranked = (
-        n.crossJoin(F.broadcast(cent))
-        .select("vec_id", "demb", "nrm", "cent_id",
-                (sim.dot(F.col("demb"), F.col("c_demb"))
-                 / (F.col("nrm") * F.col("c_nrm"))).alias("c_cos"))
-        .withColumn("rc", F.row_number().over(
-            Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), "cent_id")))
-    )
+    ranked = km.rank_lists(n, km.centroid_table(spark, e))
     cb = km.train_pq_codebook(e)
     assign = (ranked.filter(F.col("rc") == 1)
               .select("vec_id", "cent_id",
@@ -1321,20 +1266,7 @@ def q_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
     n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    cents = km.train_ivf_centroids(e, IVF_NLIST)
-    cent = spark.createDataFrame(
-        [(i, cents[i]) for i in range(IVF_NLIST)],
-        "cent_id int, c_demb array<double>",
-    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
-    ranked = (
-        n.crossJoin(F.broadcast(cent))
-        .select("vec_id", "cent_id",
-                (sim.dot(F.col("demb"), F.col("c_demb"))
-                 / (F.col("nrm") * F.col("c_nrm"))).alias("c_cos"))
-        .withColumn("rc", F.row_number().over(
-            Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(),
-                                                 "cent_id")))
-    )
+    ranked = km.rank_lists(n, km.centroid_table(spark, e))
     assigned = ranked.filter(F.col("rc") == 1).select(
         "vec_id", "cent_id", sim.round6_stable(F.col("c_cos")).alias("cos6"))
     return (
@@ -1409,23 +1341,10 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
     n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    cents = km.train_ivf_centroids(e, IVF_NLIST)
-    cent = spark.createDataFrame(
-        [(i, cents[i]) for i in range(IVF_NLIST)],
-        "cent_id int, c_demb array<double>",
-    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
-    ranked = (
-        n.crossJoin(F.broadcast(cent))
-        .select("vec_id", "demb", "nrm", "cent_id",
-                (sim.dot(F.col("demb"), F.col("c_demb"))
-                 / (F.col("nrm") * F.col("c_nrm"))).alias("cscore"))
-        .withColumn("rc", F.row_number().over(
-            Window.partitionBy("vec_id").orderBy(F.col("cscore").desc(),
-                                                 "cent_id")))
-    )
+    ranked = km.rank_lists(n, km.centroid_table(spark, e))
     assign = pin(ranked.filter(F.col("rc") == 1).select(
         "vec_id", "demb", "nrm", "cent_id",
-        sim.round6_stable(F.col("cscore")).alias("ccos6")))
+        sim.round6_stable(F.col("c_cos")).alias("ccos6")))
     a, b = assign.alias("a"), assign.alias("b")
     dominated = (
         F.col("b.ccos6") < F.col("a.ccos6")
@@ -2047,26 +1966,8 @@ def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     what dedup-style callers (find EVERYTHING near this vector) need."""
     e = spread(table(spark, sf_dir, "embeddings")).select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"),
-                 sim.lsh_buckets_multi(F.col("demb")).alias("buckets"))
-    x = pin(n.select("vec_id", "demb", "nrm",
-                     F.posexplode("buckets").alias("tbl", "bucket")))
-    q = x.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("demb").alias("q_demb"),
-        F.col("nrm").alias("q_nrm"), F.col("tbl").alias("q_tbl"),
-        F.col("bucket").alias("q_bucket"))
-    hits = (
-        F.broadcast(q)
-        .join(x, (F.col("tbl") == F.col("q_tbl"))
-              & (F.col("bucket") == F.col("q_bucket"))
-              & (F.col("vec_id") != F.col("query_id")))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"),
-            sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                       F.col("q_nrm"), F.col("nrm")).alias("cosine"),
-        )
-        .distinct()
-    )
+    hits = lsh_probe(
+        e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm")))
     return (
         hits.filter(F.col("cosine") >= RANGE_SEARCH_TAU)
         .orderBy("query_id", "neighbor_id")
@@ -2173,20 +2074,7 @@ def q_quality_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
     n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    cents = km.train_ivf_centroids(e, IVF_NLIST)
-    cent = spark.createDataFrame(
-        [(i, cents[i]) for i in range(IVF_NLIST)],
-        "cent_id int, c_demb array<double>",
-    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
-    ranked = (
-        n.crossJoin(F.broadcast(cent))
-        .select("vec_id", "cent_id",
-                (sim.dot(F.col("demb"), F.col("c_demb"))
-                 / (F.col("nrm") * F.col("c_nrm"))).alias("c_cos"))
-        .withColumn("rc", F.row_number().over(
-            Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(),
-                                                 "cent_id")))
-    )
+    ranked = km.rank_lists(n, km.centroid_table(spark, e))
     assign = ranked.filter(F.col("rc") == 1).select("vec_id", "cent_id")
     d = spread(table(spark, sf_dir, "documents"))
     q = d.select("doc_id",

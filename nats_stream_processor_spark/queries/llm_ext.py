@@ -32,7 +32,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash32_sql_duck, minhash_params
+from ..operators import kmeans as km
 from ..operators import similarity as sim
+from ..operators.kmeans import IVF_NLIST, IVF_NPROBE
 from ..operators.multimodal import media_metadata, with_payload
 from ..operators.dedup import (
     LSH_BANDS,
@@ -1961,6 +1963,7 @@ from .knn_shared import (  # noqa: E402  (shared with llm_ext2)
     _KNN_CTE,
     _knn_graph_df,
     KNN_GRAPH_K,
+    lsh_probe,
 )
 
 
@@ -2411,9 +2414,6 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------- diversity coreset (cluster medoids)
 
-from ..operators import kmeans as _km  # noqa: E402
-from .llm import IVF_NLIST as _IVF_NLIST  # noqa: E402
-
 
 @register(
     "sample_cluster_medoids",
@@ -2421,7 +2421,7 @@ from .llm import IVF_NLIST as _IVF_NLIST  # noqa: E402
     WITH e AS (SELECT vec_id, {sim.as_double_sql('embedding')} AS demb
                FROM embeddings),
     n AS (SELECT vec_id, demb, {sim.norm_sql('demb')} AS nrm FROM e),
-    {_km.ivf_train_cte_sql(_IVF_NLIST)},
+    {km.ivf_train_cte_sql(IVF_NLIST)},
     cent AS (SELECT cent_id, c_demb, {sim.norm_sql('c_demb')} AS c_nrm
              FROM tcent),
     assign AS (
@@ -2462,26 +2462,10 @@ def q_cluster_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: K centroids broadcast against one corpus scan; the
     per-cluster argmax is a K-bounded window on the assignment table
     (shuffle carries vec_id, cluster id, one rounded cosine)."""
-    from ..operators import kmeans as km
-    from ..queries.llm import IVF_NLIST
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
     n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    cents = km.train_ivf_centroids(e, IVF_NLIST)
-    cent = spark.createDataFrame(
-        [(i, cents[i]) for i in range(IVF_NLIST)],
-        "cent_id int, c_demb array<double>",
-    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
-    ranked = (
-        n.crossJoin(F.broadcast(cent))
-        .select("vec_id", "cent_id",
-                (sim.dot(F.col("demb"), F.col("c_demb"))
-                 / (F.col("nrm") * F.col("c_nrm"))).alias("c_cos"))
-        .withColumn("rc", F.row_number().over(
-            Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(),
-                                                 "cent_id")))
-    )
+    ranked = km.rank_lists(n, km.centroid_table(spark, e))
     assigned = ranked.filter(F.col("rc") == 1).select(
         "vec_id", "cent_id", sim.round6_stable(F.col("c_cos")).alias("cos6"))
     wm = Window.partitionBy("cent_id").orderBy(F.col("cos6").desc(),
@@ -2731,7 +2715,6 @@ def q_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------- IVF + int8 composition
 
 from .llm import _IVF_CTE as _IVF_BASE_CTE  # noqa: E402
-from .llm import IVF_NPROBE as _IVF_NPROBE  # noqa: E402
 
 
 @register(
@@ -2774,7 +2757,7 @@ from .llm import IVF_NPROBE as _IVF_NPROBE  # noqa: E402
     tags=("llm", "ann-ivf-int8"),
 )
 def q_ann_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF + int8 composed ANN: probe the query's {_IVF_NPROBE} nearest
+    """IVF + int8 composed ANN: probe the query's IVF_NPROBE nearest
     trained inverted lists (same value-checked k-means coarse quantizer
     as sim_ann_ivf), then score ONLY the probed lists' vectors with
     exact int64 code dots and dequantized ranking (sim_ann_int8_topk's
@@ -2786,29 +2769,15 @@ def q_ann_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: centroids broadcast; the corpus shuffles once on its
     list id; the probe join is list-bucketed (never corpus-wide); the
     code table joins on vec_id within probed lists only."""
-    from .llm import IVF_NLIST
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
     n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    cents = _km.train_ivf_centroids(e, IVF_NLIST)
-    cent = spark.createDataFrame(
-        [(i, cents[i]) for i in range(IVF_NLIST)],
-        "cent_id int, c_demb array<double>",
-    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
-    scored_cent = (
-        n.crossJoin(F.broadcast(cent))
-        .select("vec_id", "cent_id",
-                (sim.dot(F.col("demb"), F.col("c_demb"))
-                 / (F.col("nrm") * F.col("c_nrm"))).alias("c_cos")))
-    w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(),
-                                             "cent_id")
-    ranked = scored_cent.withColumn("rc", F.row_number().over(w))
+    ranked = km.rank_lists(n, km.centroid_table(spark, e))
     qc = pin(_int8_codes_df(spark, sf_dir))  # vec_id, mx, codes
     assign = (ranked.filter(F.col("rc") == 1)
               .select("vec_id", "cent_id")
               .join(qc, "vec_id"))
-    probes = (ranked.filter((F.col("rc") <= _IVF_NPROBE)
+    probes = (ranked.filter((F.col("rc") <= IVF_NPROBE)
                             & (F.col("vec_id") < 10))
               .select(F.col("vec_id").alias("query_id"),
                       F.col("cent_id").alias("p_cent_id"))
@@ -3178,23 +3147,7 @@ def q_index_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cosine").desc(), F.col("neighbor_id"))
     bt = (bs.withColumn("rn", F.row_number().over(wq))
           .filter(F.col("rn") <= 5).select("query_id", "neighbor_id"))
-    x = pin(n.select(
-        "vec_id", "demb", "nrm",
-        F.posexplode(sim.lsh_buckets_multi(F.col("demb")))
-         .alias("tbl", "bucket")))
-    lq = x.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("demb").alias("q_demb"),
-        F.col("nrm").alias("q_nrm"), F.col("tbl").alias("q_tbl"),
-        F.col("bucket").alias("q_bucket"))
-    ls = (F.broadcast(lq)
-          .join(x, (F.col("tbl") == F.col("q_tbl"))
-                & (F.col("bucket") == F.col("q_bucket"))
-                & (F.col("vec_id") != F.col("query_id")))
-          .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                  sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                             F.col("q_nrm"), F.col("nrm")).alias("cosine"))
-          .distinct())
-    lt = (ls.withColumn("rn", F.row_number().over(wq))
+    lt = (lsh_probe(n).withColumn("rn", F.row_number().over(wq))
           .filter(F.col("rn") <= 5)
           .select(F.col("query_id").alias("l_query"),
                   F.col("neighbor_id").alias("l_neighbor")))

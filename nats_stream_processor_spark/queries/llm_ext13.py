@@ -57,6 +57,7 @@ from ..registry import pin, register, spread, table
 from ..operators import kmeans as km
 from ..operators import logreg as lg
 from ..operators import similarity as sim
+from ..operators.kmeans import IVF_NLIST
 from ..operators.textstats import quality_cols, quality_sql
 from ..operators.textstats import token_stats_cols, token_stats_sql
 
@@ -72,7 +73,6 @@ IVB_OVERLOAD_X1000 = 2000
 
 
 def _ivf_balance_oracle() -> str:
-    from .llm import IVF_NLIST
     return f"""
     WITH e AS (SELECT vec_id, {sim.as_double_sql('embedding')} AS demb
                FROM embeddings),
@@ -128,31 +128,13 @@ def q_ivf_list_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     size — the dashboard is read BEFORE queries pay for the skew.
     Magnitude license: n_vecs * 1e6 needs n_vecs <= 9.2e12 per list —
     int64-safe for any real corpus."""
-    from .llm import IVF_NLIST
-    from pyspark.sql import Window
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
     n = spread(e).select("vec_id", "demb",
                          sim.norm(F.col("demb")).alias("nrm"))
-    cents = km.train_ivf_centroids(e, IVF_NLIST)
-    cent = spark.createDataFrame(
-        [(i, cents[i]) for i in range(IVF_NLIST)],
-        "cent_id int, c_demb array<double>",
-    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
-    # ppm-quantized rank key (the graph-family discipline): a raw
-    # double cosine on a near-tie between two centroids can differ by
-    # 1 ulp across engines and flip the assignment; floor(cos*1e6+0.5)
-    # as int64 makes the rank key exact on both sides.
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("c_cos_ppm").desc(), "cent_id")
-    assign = (n.crossJoin(F.broadcast(cent))
-              .select("vec_id", "cent_id",
-                      F.floor(sim.dot(F.col("demb"), F.col("c_demb"))
-                              / (F.col("nrm") * F.col("c_nrm"))
-                              * F.lit(1000000.0) + F.lit(0.5))
-                      .cast("long").alias("c_cos_ppm"))
-              .withColumn("rc", F.row_number().over(w))
+    cent = km.centroid_table(spark, e)
+    # ranked on the ppm-quantized key, as the oracle (see km.rank_lists)
+    assign = (km.rank_lists(n, cent, ppm=True)
               .filter(F.col("rc") == 1)
               .select("vec_id", "cent_id"))
     # pinned: sizes feeds BOTH the report rows and the 1-row total —

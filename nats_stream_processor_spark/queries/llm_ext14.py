@@ -75,6 +75,7 @@ from ..registry import pin, register, spread, table
 
 from ..operators import kmeans as km
 from ..operators import similarity as sim
+from ..operators.kmeans import IVF_NLIST
 
 # ------------------------------- drop-plan execute (the act step)
 
@@ -221,7 +222,6 @@ def _ivf_base_ctes_sql(mat: bool = False) -> str:
     rebalance text. The default stays un-hinted because the round-13
     certified rebalance/merge oracle texts are md5-pinned byte-for-byte
     (tests/test_llm_ext15.py)."""
-    from .llm import IVF_NLIST
     k = IVF_NLIST
     m = " MATERIALIZED" if mat else ""
     return f"""
@@ -404,7 +404,6 @@ def _ivf_split_act_ctes_sql(out: str = "") -> str:
 
 
 def _ivf_rebalance_oracle() -> str:
-    from .llm import IVF_NLIST
     from .llm_ext13 import IVB_OVERLOAD_X1000
     k = IVF_NLIST
     return _ivf_base_ctes_sql() + f""",
@@ -459,19 +458,11 @@ def _ivf_base_frames(spark: SparkSession, sf_dir: str):
     corpus-with-norms, broadcastable trained-centroid table, pinned
     ppm-ranked assignment, per-list sizes, guarded total, load factors.
     The Spark twin of _ivf_base_ctes_sql."""
-    from .llm import IVF_NLIST
-    k = IVF_NLIST
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
     n = pin(spread(e).select(
         "vec_id", "demb", sim.norm(F.col("demb")).alias("nrm")))
-    cents = km.train_ivf_centroids(e, k)
-    cent = spark.createDataFrame(
-        [(i, cents[i]) for i in range(k)],
-        "cent_id int, c_demb array<double>",
-    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
-    wasg = Window.partitionBy("vec_id").orderBy(
-        F.col("ppm").desc(), "cent_id")
+    cent = km.centroid_table(spark, e)
     # asg is MATERIALIZED on the oracle side and referenced by every
     # downstream layer — eagerly checkpoint it, truncating its lineage to
     # a LogicalRDD leaf, so each reference analyzes as a leaf instead of
@@ -489,11 +480,7 @@ def _ivf_base_frames(spark: SparkSession, sf_dir: str):
     # notes, the assignment IS a persisted table and this frame is a
     # scan of it. nasg below is checkpointed for the same reason.
     asg = (
-        n.crossJoin(F.broadcast(cent))
-        .select("vec_id", "demb", "nrm", "cent_id",
-                _ppm_rank_col(sim.dot(F.col("demb"), F.col("c_demb")),
-                              F.col("nrm") * F.col("c_nrm")).alias("ppm"))
-        .withColumn("rc", F.row_number().over(wasg))
+        km.rank_lists(n, cent, ppm=True)
         .filter(F.col("rc") == 1)
         .select("vec_id", "demb", "nrm", "cent_id")
         .localCheckpoint(eager=True))
@@ -505,7 +492,7 @@ def _ivf_base_frames(spark: SparkSession, sf_dir: str):
                             F.lit(1).cast("long")).alias("nn"))
     ld = pin(sz.crossJoin(F.broadcast(tot))
              .select("cent_id", "n_vecs",
-                     F.expr(f"n_vecs * {k} * 1000 div nn")
+                     F.expr(f"n_vecs * {IVF_NLIST} * 1000 div nn")
                      .alias("load_x1000")))
     return n, cent, asg, sz, tot, ld
 
@@ -689,7 +676,6 @@ def q_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     list-id-keyed against the assignment relation; receipts are 1-row
     aggregates crossJoined broadcast. Nothing here scans more than the
     corpus twice (parent assignment + post-split candidates)."""
-    from .llm import IVF_NLIST
     from .llm_ext13 import IVB_OVERLOAD_X1000
     k = IVF_NLIST
 
@@ -806,7 +792,6 @@ def _ivf_merge_act_ctes_sql(out: str = "") -> str:
 
 
 def _ivf_merge_oracle() -> str:
-    from .llm import IVF_NLIST
     k = IVF_NLIST
     return _ivf_base_ctes_sql() + f""",
     und AS (SELECT CAST(count(*) AS BIGINT) AS n_under
@@ -903,7 +888,6 @@ def q_ivf_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     already licensed); receipts and recall reuse the audited rebalance
     panels (broadcast queries, list-id-keyed candidate joins, 1-row
     broadcast crossJoins)."""
-    from .llm import IVF_NLIST
     k = IVF_NLIST
 
     n, cent, asg, sz, tot, ld = _ivf_base_frames(spark, sf_dir)

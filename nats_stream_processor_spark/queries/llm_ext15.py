@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 from ..registry import pin, register, table  # noqa: F401
 
 from ..operators import similarity as sim
+from ..operators.kmeans import IVF_NLIST
 
 from .llm_ext14 import (  # noqa: E402
     IVR_NPROBE,
@@ -77,7 +78,6 @@ from .llm_ext14 import (  # noqa: E402
 
 
 def _ivf_insert_oracle() -> str:
-    from .llm import IVF_NLIST
     from .llm_ext13 import IVB_OVERLOAD_X1000
     k = IVF_NLIST
     # Slot note: the shared recall builder hardwires (cent, asg) as its
@@ -164,7 +164,6 @@ def q_ivf_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate joins are list-id-keyed; receipts are 1-row broadcast
     crossJoins. At scale only the batch slice is newly assigned (the
     corpus assignment is a persisted table — see the module note)."""
-    from .llm import IVF_NLIST
     from .llm_ext13 import IVB_OVERLOAD_X1000
     k = IVF_NLIST
 
@@ -245,7 +244,6 @@ _render_ivf_insert_oracle()
 
 
 def _ivf_lifecycle_oracle() -> str:
-    from .llm import IVF_NLIST
     from .llm_ext13 import IVB_OVERLOAD_X1000
     from .llm_ext14 import (IVM_MIN_MERGES, IVM_UNDER_X1000,
                             IVR_MIN_SPLITS, _ivf_merge_act_ctes_sql,
@@ -364,7 +362,6 @@ def q_ivf_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows); the oracle replays the same decision as a scalar CASE over
     the identical integer load counts, with the non-chosen branches'
     CTEs guarded empty. Spark builds only the chosen branch."""
-    from .llm import IVF_NLIST
     from .llm_ext13 import IVB_OVERLOAD_X1000
     from .llm_ext14 import (IVM_MIN_MERGES, IVM_UNDER_X1000,
                             IVR_MIN_SPLITS, _ivf_merge_frames,

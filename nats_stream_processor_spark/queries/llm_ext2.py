@@ -38,8 +38,10 @@ from ..registry import pin, register, spread, table
 
 from ..functions.hashing import hash32_col, hash32_sql_duck
 from ..functions.text import tokens_col
+from ..operators import kmeans as km
 from ..operators import similarity as sim
 from ..operators.dedup import connected_components, jaccard_sql
+from ..operators.kmeans import IVF_NLIST
 from .llm import NEAR_DUP_JACCARD
 
 # --------------------------------------------- PCA via power iteration
@@ -798,7 +800,6 @@ def q_knn_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_distortion_oracle() -> str:
-    from ..operators import kmeans as km
     from ..operators.similarity import PQ_K, PQ_M, PQ_SUB, _l2_expr_sql
     r6 = sim.round6_stable_sql
     errs = []
@@ -842,7 +843,6 @@ def q_pq_distortion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan against the broadcast codebook, per-(vector, subspace) errors
     quantized to an int64 grid, 8 exact sums + a count. The oracle
     replays codebook training CTE-for-CTE like the other PQ queries."""
-    from ..operators import kmeans as km
     from ..operators.similarity import (
         PQ_K,
         PQ_M,
@@ -886,8 +886,6 @@ _SWEEP_NQ = 10  # query vectors (vec_id < 10, matching sim_ann_ivf)
 
 
 def _nprobe_sweep_oracle() -> str:
-    from ..operators import kmeans as km
-    from .llm import IVF_NLIST
     nps = ", ".join(str(x) for x in NPROBE_SWEEP)
     maxp = max(NPROBE_SWEEP)
     return f"""
@@ -960,23 +958,11 @@ def q_ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized candidate table — the corpus is scanned once for all
     sweep points, and the brute-force reference once. recall_ppm is
     integer arithmetic over exact hit counts."""
-    from ..operators import kmeans as km
-    from .llm import IVF_NLIST
-
     maxp = max(NPROBE_SWEEP)
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
     n = pin(e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm")))
-    cents = km.train_ivf_centroids(e, IVF_NLIST)
-    cent = spark.createDataFrame(
-        [(i, cents[i]) for i in range(IVF_NLIST)],
-        "cent_id int, c_demb array<double>",
-    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
-    w = Window.partitionBy("vec_id").orderBy(
-        (sim.dot(F.col("demb"), F.col("c_demb"))
-         / (F.col("nrm") * F.col("c_nrm"))).desc(), "cent_id")
-    ranked = (n.crossJoin(F.broadcast(cent))
-              .withColumn("rc", F.row_number().over(w)))
+    ranked = km.rank_lists(n, km.centroid_table(spark, e))
     assign = ranked.filter(F.col("rc") == 1).select(
         "vec_id", "demb", "nrm", "cent_id")
     probes = (ranked.filter((F.col("rc") <= maxp)

@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 from ..functions.classify import sentiment_udf, topics_udf
 from ..functions.sentiment import confidence_gate
 from ..functions.text import non_empty_text
-from ..registry import register, spread, table
-from .enrich import CLASSIFIER_CTE, _S, _T
+from ..registry import register
+from .enrich import CLASSIFIER_CTE, _S, _T, _docs
 
 
 @register(
@@ -42,7 +42,7 @@ from .enrich import CLASSIFIER_CTE, _S, _T
 def q_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1: the processed/published counter split. One pass, conditional
     aggregation — no per-label shuffle."""
-    d = spread(table(spark, sf_dir, "documents"))
+    d = _docs(spark, sf_dir)
     s = sentiment_udf(F.coalesce(F.col("text"), F.lit("")))
     df = d.select(
         non_empty_text(F.coalesce(F.col("text"), F.lit(""))).alias("has_text"),
@@ -72,7 +72,7 @@ def q_conf_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M2: fixed-bucket confidence histogram (0.1-wide buckets, reference:
     src/metrics.py:28-41). A width_bucket-style CASE over the confidence —
     single aggregation, 10 output rows regardless of input scale."""
-    d = spread(table(spark, sf_dir, "documents"))
+    d = _docs(spark, sf_dir)
     conf = sentiment_udf(F.coalesce(F.col("text"), F.lit("")))["confidence"]
     bucket = F.least(F.floor(conf * 10).cast("int"), F.lit(9))
     return (
@@ -99,7 +99,7 @@ def q_conf_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_top5_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M4: global top-5 topics by prediction count (reference:
     src/service.py:205-217). explode -> count -> TakeOrderedAndProject."""
-    d = spread(table(spark, sf_dir, "documents"))
+    d = _docs(spark, sf_dir)
     return (
         d.filter(non_empty_text(F.coalesce(F.col("text"), F.lit(""))))
         .select(F.explode(topics_udf(F.col("text"))["topics"]).alias("topic"))
@@ -122,7 +122,7 @@ def q_top5_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sentiment_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M5: per-label sentiment counts (reference: src/service.py:200-203)."""
-    d = spread(table(spark, sf_dir, "documents"))
+    d = _docs(spark, sf_dir)
     return (
         d.filter(non_empty_text(F.coalesce(F.col("text"), F.lit(""))))
         .select(sentiment_udf(F.col("text"))["sentiment"].alias("sentiment"))

@@ -60,7 +60,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..config import INPUT_STREAM, OUTPUT_STREAM, OUTPUT_SUBJECT_PREFIX
+from ..config import (
+    INPUT_STREAM, MAX_OFFSETS_PER_TRIGGER, OUTPUT_STREAM, OUTPUT_SUBJECT_PREFIX,
+)
 from .nats_transport import FetchedMessage, open_transport
 
 NATS_SCHEMA = StructType([
@@ -70,8 +72,6 @@ NATS_SCHEMA = StructType([
     StructField("ts", TimestampType()),
     StructField("headers", MapType(StringType(), StringType())),
 ])
-
-DEFAULT_MAX_BATCH = 100_000
 
 
 def ensure_output_stream(
@@ -125,7 +125,8 @@ class NatsPartitionedStreamReader(DataSourceStreamReader):
         self.server = options.get("servers", "mem://default")
         self.stream = options.get("stream", INPUT_STREAM)
         self.subject_prefix = options.get("subjectprefix") or None
-        self.max_batch = int(options.get("maxbatchsize", DEFAULT_MAX_BATCH))
+        self.max_batch = int(
+            options.get("maxbatchsize", MAX_OFFSETS_PER_TRIGGER))
         self.num_partitions = int(options.get("numpartitions", 8))
         self._transport = None
         self._prev_end: int | None = None

@@ -50,11 +50,12 @@ import threading
 import time
 from dataclasses import dataclass, field
 
-DUPLICATE_WINDOW_SECONDS = 600  # reference: src/config.py DUPLICATE_WINDOW_SECONDS
+from ..config import (
+    DEDUP_WINDOW_SECONDS, PUBLISH_MAX_RETRIES, PUBLISH_RETRY_DELAY_S,
+)
+
 OUTPUT_MAX_MSGS = 5_000_000  # reference: src/nats_client.py:94
 PUBLISH_TIMEOUT_S = 5.0  # reference: src/nats_client.py:254
-MAX_PUBLISH_RETRIES = 3  # reference: src/config.py MAX_RETRIES
-RETRY_DELAY_S = 1.0  # reference: src/config.py RETRY_DELAY
 FETCH_TIMEOUT_S = 5.0
 MEM_BROKER_DIR = os.environ.get(
     "SPARK_GRAFT_MEM_BROKER_DIR", "/tmp/spark_graft_mem_broker")
@@ -147,7 +148,7 @@ class JetStreamTransport:
             discard=api.DiscardPolicy.OLD,
             max_msgs=OUTPUT_MAX_MSGS,
             storage=api.StorageType.FILE,
-            duplicate_window=DUPLICATE_WINDOW_SECONDS,
+            duplicate_window=DEDUP_WINDOW_SECONDS,
         ))
 
     def last_seq(self, stream: str) -> int:
@@ -224,7 +225,7 @@ class JetStreamTransport:
         each message by its subject, so JetStream needs no more than the
         subject."""
         return self._run(self._publish_many(items),
-                         timeout=PUBLISH_TIMEOUT_S * (MAX_PUBLISH_RETRIES + 1)
+                         timeout=PUBLISH_TIMEOUT_S * (PUBLISH_MAX_RETRIES + 1)
                          * max(len(items), 1) + 30)
 
     async def _publish_many(self, items):
@@ -244,9 +245,9 @@ class JetStreamTransport:
                     break
                 except asyncio.TimeoutError:
                     attempt += 1
-                    if attempt > MAX_PUBLISH_RETRIES:
+                    if attempt > PUBLISH_MAX_RETRIES:
                         raise
-                    await asyncio.sleep(RETRY_DELAY_S * attempt)
+                    await asyncio.sleep(PUBLISH_RETRY_DELAY_S * attempt)
         return n_pub, n_dup
 
 

@@ -14,6 +14,11 @@ as per-shard state, and each micro-batch emits one row per touched
 list with its running size — the statestore holds the full histogram
 at every point in time.
 
+The centroids are the batch queries' coarse quantizer,
+``operators.kmeans.centroid_table``, trained on a STATIC corpus frame
+before the stream starts (the production shape: the index exists first);
+``assigned`` is the streaming form of its ``rank_lists`` ppm rank.
+
 This is deliberately the LIGHT twin: state is K-bounded (nlist
 counters split over shards — bytes, not vectors), which is exactly why
 list-size monitoring is the part of IVF maintenance that belongs in a
@@ -33,7 +38,7 @@ encoding (``stateful.pairs_encode``), checked through the
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import similarity as sim
@@ -93,23 +98,6 @@ def assigned(df: DataFrame, cent: DataFrame,
                      .cast("long").alias("cent_id"))
             .withColumn("shard",
                         (F.col("cent_id") % shards).cast("long")))
-
-
-def centroid_table(spark: SparkSession, corpus: DataFrame,
-                   k: int | None = None) -> DataFrame:
-    """Train the coarse quantizer on a STATIC corpus frame (the index
-    exists before the stream starts — the production shape) and return
-    the broadcastable (cent_id, c_demb, c_nrm) table."""
-    from ..operators import kmeans as km
-    from ..queries.llm import IVF_NLIST
-    k = k or IVF_NLIST
-    e = corpus.select("vec_id",
-                      sim.as_double(F.col("embedding")).alias("demb"))
-    cents = km.train_ivf_centroids(e, k)
-    return spark.createDataFrame(
-        [(i, cents[i]) for i in range(k)],
-        "cent_id int, c_demb array<double>",
-    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
 
 
 def list_counts_stream(df: DataFrame, cent: DataFrame,

@@ -197,19 +197,56 @@ def test_ivf_sizing_functions():
     the pinned registry constant for every tested corpus, and grows at
     real scale — so pinned oracles and auto-sized training agree at test
     sf while a 100 TB corpus still gets a sane quantizer."""
-    from nats_stream_processor_spark.queries.llm import IVF_NLIST
-    assert km.IVF_NLIST_FLOOR == IVF_NLIST
     for n in (0, 500, 5_000, 38_000):  # every tested sf lands on the floor
-        assert km.ivf_nlist_for(n) == km.IVF_NLIST_FLOOR
+        assert km.ivf_nlist_for(n) == km.IVF_NLIST
     assert km.ivf_nlist_for(1_000_000) == 128
     assert km.ivf_nlist_for(1_000_000_000) == 4096
     assert km.ivf_nlist_for(40_000_000_000) == 16384
     assert km.ivf_nlist_for(10**14) == 1 << 16  # capped
     # sample bound: >= 39 per centroid, floored and capped
-    assert km.train_sample_for(km.IVF_NLIST_FLOOR) == km.TRAIN_SAMPLE_N
-    assert km.train_sample_for(km.IVF_NLIST_FLOOR) == km.TRAIN_SAMPLE_N
+    assert km.train_sample_for(km.IVF_NLIST) == km.TRAIN_SAMPLE_N
     assert km.train_sample_for(128) == 39 * 128
     assert km.train_sample_for(1 << 16) == km.TRAIN_SAMPLE_CAP
+
+
+def test_one_ivf_quantizer_in_the_package():
+    """The Spark coarse quantizer is built in one place,
+    operators/kmeans.py (centroid_table + rank_lists): no other package
+    module trains IVF centroids or declares the centroid table."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(km.__file__).resolve().parents[1]
+    trainers, schemas = set(), 0
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        schemas += src.count("cent_id int, c_demb array<double>")
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Call) and (
+                    getattr(node.func, "attr", None)
+                    or getattr(node.func, "id", None)) == "train_ivf_centroids":
+                trainers.add(path.relative_to(root).as_posix())
+    assert trainers == {"operators/kmeans.py"}
+    assert schemas == 1
+
+
+@pytest.mark.parametrize("ppm", [False, True])
+def test_rank_lists_ties_go_to_the_lower_cent_id(spark, ppm):
+    """Two identical centroids tie on every vector; the oracles'
+    ORDER BY <key> DESC, cent_id gives each vector rc = 1 on the lower
+    cent_id, so rank_lists must too, with either rank key."""
+    cent = spark.createDataFrame(
+        [(7, [1.0, 2.0]), (3, [1.0, 2.0])],
+        "cent_id int, c_demb array<double>",
+    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
+    n = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [-1.0, 2.0]),
+         (3, [0.3, -0.7]), (4, [1.0, 2.0])],
+        "vec_id long, demb array<double>",
+    ).withColumn("nrm", sim.norm(F.col("demb")))
+    rows = km.rank_lists(n, cent, ppm=ppm).collect()
+    assert sorted((r.vec_id, r.rc, r.cent_id) for r in rows) == [
+        (v, rc, c) for v in range(5) for rc, c in ((1, 3), (2, 7))]
 
 
 def test_ivf_auto_sizing_matches_pinned_at_test_scale(clustered):
@@ -218,7 +255,7 @@ def test_ivf_auto_sizing_matches_pinned_at_test_scale(clustered):
     production auto-sized path are the same index here."""
     _, df = clustered
     auto = km.train_ivf_centroids(df)
-    pinned = km.train_ivf_centroids(df, km.IVF_NLIST_FLOOR)
+    pinned = km.train_ivf_centroids(df, km.IVF_NLIST)
     assert auto == pinned
 
 

@@ -17,13 +17,13 @@ import pytest
 
 from tests.fake_nats import FakeBroker, StreamConfig
 
+from nats_stream_processor_spark.config import DEDUP_WINDOW_SECONDS
 from nats_stream_processor_spark.sources.nats import (
     NatsPartitionedStreamReader,
     NatsStreamWriter,
     ensure_output_stream,
 )
 from nats_stream_processor_spark.sources.nats_transport import (
-    DUPLICATE_WINDOW_SECONDS,
     OUTPUT_MAX_MSGS,
     JetStreamTransport,
     MemTransport,
@@ -49,7 +49,7 @@ def test_ensure_stream_creates_reference_config(fake_nats):
     assert cfg.discard.name == "OLD"
     assert cfg.storage.name == "FILE"
     assert cfg.max_msgs == OUTPUT_MAX_MSGS == 5_000_000
-    assert cfg.duplicate_window == DUPLICATE_WINDOW_SECONDS == 600
+    assert cfg.duplicate_window == DEDUP_WINDOW_SECONDS == 600
 
 
 def test_fetch_by_start_sequence_and_filter(fake_nats):

@@ -1277,12 +1277,15 @@ def test_streaming_ivf_list_counts_match_batch_index(spark, tmp_path):
     import shutil
 
     from nats_stream_processor_spark import registry
+    from nats_stream_processor_spark.operators import kmeans as km
+    from nats_stream_processor_spark.operators import similarity as sim
     from nats_stream_processor_spark.streaming import ivf as si
 
     sf = "/root/testdata/sf0.001"
     emb = registry.table(spark, sf, "embeddings") \
         .select("vec_id", "embedding")
-    cent = si.centroid_table(spark, emb)
+    cent = km.centroid_table(spark, emb.select(
+        "vec_id", sim.as_double(F.col("embedding")).alias("demb")))
     cent.persist().count()
     cut = math.floor(
         emb.agg({"vec_id": "max"}).collect()[0][0] * 0.8)
