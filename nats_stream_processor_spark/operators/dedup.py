@@ -17,9 +17,19 @@ Four tiers, all shuffle-safe and expressed as DataFrame programs:
 
 Everything is deterministic (md5-derived hashes, pinned permutation
 parameters — functions/hashing.py), so each stage has an exact DuckDB twin.
+
+The token-hash n-gram front end is built once, here: ``token_ngram_frame``
+(per-token hashes -> distinct n-gram shingle ids), ``span_ids_col``
+(positioned k-token span ids), ``minhash_band_explode`` and
+``band_pairs`` (LSH candidates). Their DuckDB twins are the ``*_sql``
+helpers below, composed once into ``queries/llm.py:_SH_CTE``. The batch
+near-dup queries and the streaming near-dup index
+(``streaming/neardup.banded``) share this one front end.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -82,6 +92,11 @@ SHINGLE_COMB = 65599
 # hot-span tests exercise the capped path.
 SPAN_DF_CAP = 64
 
+# Tokens per substring span: the one granularity of every span operator
+# (dedup_substring_spans, dedup_containment, text_novelty_score, and the
+# duplicated-run, coverage and removal families).
+SPAN_K = 16
+
 
 def token_hashes_32_col(text: Column, fast: bool = False) -> Column:
     """One 32-bit hash per token: md5-derived (portable, oracle-checkable)
@@ -103,13 +118,9 @@ def shingle_ids_tok_col(hs: Column, n: int = 3) -> Column:
     they still carry one shingle. Ids land in [0, 2^31-1), satisfying the
     minhash permutation bound (< 2^32).
 
-    Formulated as chained zip_with over n shifted slices — each slice
-    references `hs` exactly once. The element_at-in-a-lambda formulation
-    was QUADRATIC whenever the optimizer inlined the token-hash transform
-    into `hs` (CollapseProject duplicates the transform per reference, and
-    per-gram element_at then re-evaluated every token's md5: measured 95 s
-    vs 1 s at sf0.1 on the 8-gram decontamination query, r2). With slices
-    the worst case is n linear evaluations."""
+    Formulated as chained zip_with over n shifted slices, each of which
+    reads ``hs`` once; :func:`token_ngram_frame` is the one caller and
+    hands it a projected ``hs``."""
     cnt = F.size(hs) - (n - 1)
     grams = F.slice(hs, 1, cnt)
     for j in range(1, n):
@@ -122,6 +133,46 @@ def shingle_ids_tok_col(hs: Column, n: int = 3) -> Column:
         lambda acc, h: (acc * SHINGLE_COMB + h) % MERSENNE_P)
     return F.array_distinct(
         F.when(F.size(hs) >= n, grams).otherwise(F.array(whole)))
+
+
+def token_ngram_frame(df: DataFrame, keys: Sequence[str | Column],
+                      n: int | None = 3, fast: bool = False,
+                      out: str = "sids") -> DataFrame:
+    """The Spark front end of every token-hash n-gram stage: ``keys``
+    (column names or Columns, carried through) plus ``out``, the doc's
+    distinct n-gram shingle-id set (:func:`shingle_ids_tok_col`) over
+    the ``text`` column. With ``n=None`` the frame stops at the
+    per-token hashes ``hs``, which :func:`span_ids_col` reads.
+
+    ``hs`` is projected as a NAMED column before anything reads it.
+    Catalyst cannot share a subexpression that holds a lambda, so every
+    reference to an inline token-hash transform re-runs md5 over every
+    token: the shingle fold reads ``hs`` 2n times, the span fold once per
+    span (the r2 8-gram decontamination stage took 95 s vs 1 s at sf0.1
+    for this reason). Inline vs named, sf0.1 documents (5,000 rows), 4 cores, noop
+    sink, warm median of 3: 1.00 s vs 0.32 s at n=3, 2.44 s vs 0.35 s at
+    n=16, 3.28 s vs 0.35 s for 16-token spans."""
+    h = df.select(*keys,
+                  token_hashes_32_col(F.col("text"), fast).alias("hs"))
+    if n is None:
+        return h
+    return h.select(*h.columns[:-1],
+                    shingle_ids_tok_col(F.col("hs"), n).alias(out))
+
+
+def span_ids_col(hs: Column, k: int) -> Column:
+    """Rolling-hash id of every k-token span in token order, duplicates
+    kept (a posexplode position p is the span starting at token p);
+    empty below k tokens. ``hs`` must be the projected column of
+    :func:`token_ngram_frame` — the fold reads it once per span. Same
+    polynomial as :func:`shingle_ids_tok_col`, so the distinct span ids
+    of a doc with >= k tokens are its k-gram shingle ids."""
+    spans = F.transform(
+        F.sequence(F.lit(1), F.size(hs) - k + 1),
+        lambda i: F.aggregate(
+            F.slice(hs, i, k), F.lit(0).cast("long"),
+            lambda acc, x: (acc * SHINGLE_COMB + x) % MERSENNE_P))
+    return F.when(F.size(hs) >= k, spans).otherwise(F.array())
 
 
 def token_hashes_32_duck_sql(toks_expr: str) -> str:
@@ -199,13 +250,19 @@ def minhash_signature_sql(sids_expr: str) -> str:
     return f"[{mins}]"
 
 
-def band_buckets(sig_col: str, bands_n: int, rows_n: int) -> Column:
-    """Generator column: one struct<band, bucket> per band, the bucket
-    being the band's slice of the signature '_'-joined. The one bucket
-    construction of both the batch LSH operators and the streaming
-    near-dup band index (streaming/neardup.banded), so their bucket
-    strings — and the streaming state bytes — agree."""
-    return F.explode(F.transform(
+def minhash_band_explode(df: DataFrame, keys: Sequence[str], sig_col: str,
+                         bands_n: int = LSH_BANDS,
+                         rows_n: int = LSH_ROWS) -> DataFrame:
+    """One row per (doc, band): the ``keys`` columns carried through, plus
+    the band and its bucket key — the band's slice of the signature
+    '_'-joined. This is the unit that shuffles: equal (band, bucket) =>
+    candidate pair. band/row counts are the recall knob: fewer rows per
+    band => more candidates => higher recall at lower Jaccard thresholds
+    (P[candidate] = 1-(1-j^r)^b). The batch LSH operators and the
+    streaming near-dup band index (streaming/neardup.banded) both band
+    here, so their bucket strings — and the streaming state bytes —
+    agree."""
+    bands = F.explode(F.transform(
         F.sequence(F.lit(0), F.lit(bands_n - 1)),
         lambda b: F.struct(
             b.alias("band"),
@@ -213,19 +270,24 @@ def band_buckets(sig_col: str, bands_n: int, rows_n: int) -> Column:
                 F.slice(F.col(sig_col), b * rows_n + 1, rows_n), "_"
             ).alias("bucket"),
         )))
+    return df.select(*keys, bands.alias("bk")).select(
+        *keys, F.col("bk.band").alias("band"),
+        F.col("bk.bucket").alias("bucket"))
 
 
-def minhash_band_explode(df: DataFrame, id_col: str, sig_col: str,
-                         bands_n: int = LSH_BANDS,
-                         rows_n: int = LSH_ROWS) -> DataFrame:
-    """One row per (doc, band) with the band's bucket key — the unit that
-    shuffles. Equal (band, bucket) => candidate pair. band/row counts are
-    the recall knob: fewer rows per band => more candidates => higher
-    recall at lower Jaccard thresholds (P[candidate] = 1-(1-j^r)^b)."""
-    bands = band_buckets(sig_col, bands_n, rows_n)
-    return df.select(F.col(id_col), bands.alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket")
-    )
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct LSH candidate pairs (doc_a, doc_b), doc_a < doc_b: the
+    doc_id self-join of :func:`minhash_band_explode` rows on (band,
+    bucket) — a shuffle on the bucket key, never all-pairs. The Spark
+    twin of _SH_CTE's ``cand``."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.bucket") == F.col("b.bucket"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"))
+        .distinct())
 
 
 def jaccard(a_ids: Column, b_ids: Column) -> Column:

@@ -328,8 +328,7 @@ def rank_lists(n: DataFrame, cent: DataFrame, ppm: bool = False) -> DataFrame:
     cos = (sim.dot(F.col("demb"), F.col("c_demb"))
            / (F.col("nrm") * F.col("c_nrm")))
     if ppm:
-        name = "ppm"
-        key = F.floor(cos * F.lit(1000000.0) + F.lit(0.5)).cast("long")
+        name, key = "ppm", sim.ppm(cos)
     else:
         name, key = "c_cos", cos
     w = Window.partitionBy("vec_id").orderBy(F.col(name).desc(), "cent_id")

@@ -142,6 +142,14 @@ def round6_stable_sql(expr: str) -> str:
     return f"(CAST(floor(({expr}) * 1e6 + 0.5) AS DOUBLE) / 1e6)"
 
 
+def ppm(col: Column) -> Column:
+    """floor(x * 1e6 + 0.5) as an int64: the round6_stable quantization
+    kept as an exact integer — the rank key of the IVF assignment and
+    probe orders, where a raw double cosine can differ by 1 ulp across
+    engines on a near-tie and flip the rank."""
+    return F.floor(col * F.lit(1000000.0) + F.lit(0.5)).cast("long")
+
+
 def plane_lit(weights: list[float]) -> Column:
     return F.array(*[F.lit(w) for w in weights])
 

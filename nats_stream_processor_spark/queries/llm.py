@@ -21,6 +21,8 @@ from ..operators.dedup import (
     LSH_ROWS,
     SIMHASH_CHUNK_BITS,
     SIMHASH_CHUNKS,
+    SPAN_K,
+    band_pairs,
     connected_components,
     exact_dedup,
     jaccard,
@@ -28,14 +30,14 @@ from ..operators.dedup import (
     minhash_band_explode,
     minhash_signature_col,
     minhash_signature_sql,
-    shingle_ids_tok_col,
     shingle_ids_tok_sql,
     simhash_duck_sql,
     simhash_spark_sql,
-    token_hashes_32_col,
+    span_ids_col,
     token_hashes_32_duck_sql,
     token_hashes_duck_sql,
     token_hashes_spark_sql,
+    token_ngram_frame,
 )
 from ..operators.kmeans import IVF_NLIST, IVF_NPROBE
 from ..operators.multimodal import media_metadata, sample_frames, with_payload
@@ -244,14 +246,9 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas/arrow fetches, so a dtype-faithful hasher sees "1234.0" vs
     Spark's int64 "1234" (the r3 driver hash mismatch on this query)."""
     d = spread(table(spark, sf_dir, "documents"))
-    hs = token_hashes_32_col(F.col("text"))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(hs) - 1),
-        lambda i: (F.element_at(hs, i) * _SHINGLE_COMB
-                   + F.element_at(hs, i + 1)) % _MERSENNE_P,
-    )
-    g = (d.select("doc_id", F.explode(
-            F.when(F.size(hs) >= 2, grams).otherwise(F.array())).alias("gram")))
+    g = (token_ngram_frame(d, ["doc_id"], n=None)
+         .select("doc_id", F.explode(span_ids_col(F.col("hs"), 2))
+                 .alias("gram")))
     r = (g.groupBy("doc_id", "gram").agg(F.count("*").alias("n"))
          .groupBy("doc_id")
          .agg(sim.round6_stable(F.max("n") / F.sum("n").cast("double"))
@@ -506,27 +503,11 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str, fast: bool,
     The shingle-id set feeds three plan branches (banding + both sides of
     the verify join); without persist Spark evaluates the hash-heavy
     shingling 3x — at cluster scale this would be a checkpoint/cached
-    table between the signature and verify stages. ``hs`` is projected as
-    a NAMED column before shingling: element_at in the shingle fold would
-    otherwise re-evaluate the whole inline token-hash transform per access
-    (no CSE across HOFs) — measured 3x the stage cost (r2)."""
+    table between the signature and verify stages."""
     d = table(spark, sf_dir, "documents")
-    sh = (spread(d)
-          .select("doc_id",
-                  token_hashes_32_col(F.col("text"), fast=fast).alias("hs"))
-          .select("doc_id",
-                  shingle_ids_tok_col(F.col("hs")).alias("sids")))
-    sh = pin(sh)
+    sh = pin(token_ngram_frame(spread(d), ["doc_id"], fast=fast))
     sig = sh.select("doc_id", "sids", minhash_signature_col(F.col("sids")).alias("sig"))
-    bands = minhash_band_explode(sig, "doc_id", "sig")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = band_pairs(minhash_band_explode(sig, ["doc_id"], "sig"))
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sids").alias("sids_a"))
     sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sids").alias("sids_b"))
     return (
@@ -696,22 +677,11 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — never all-pairs within any block. The oracle replays the exact
     banding, so the approximate candidate set is value-checked too."""
     d = table(spark, sf_dir, "documents")
-    g = (spread(d)
-         .select("doc_id", token_hashes_32_col(F.col("text")).alias("hs"))
-         .select("doc_id",
-                 shingle_ids_tok_col(F.col("hs"), 2).alias("grams")))
-    g = pin(g)  # feeds banding + both verify sides
+    # pinned: feeds banding + both verify sides
+    g = pin(token_ngram_frame(spread(d), ["doc_id"], n=2, out="grams"))
     sig = g.select("doc_id", minhash_signature_col(F.col("grams")).alias("sig"))
-    bands = minhash_band_explode(sig, "doc_id", "sig",
-                                 bands_n=NGRAM_BANDS, rows_n=NGRAM_ROWS)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = band_pairs(minhash_band_explode(
+        sig, ["doc_id"], "sig", bands_n=NGRAM_BANDS, rows_n=NGRAM_ROWS))
     ga = g.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("grams_a"))
     gb = g.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("grams_b"))
     return (
@@ -723,22 +693,19 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SUBSTR_SPAN_K = 16  # tokens per span for substring-level dedup
-
-
 @register(
     "dedup_substring_spans",
     oracle=f"""
     WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
                FROM documents),
     h AS (SELECT doc_id, {token_hashes_32_duck_sql('toks')} AS hs FROM t
-          WHERE len(toks) >= {SUBSTR_SPAN_K}),
+          WHERE len(toks) >= {SPAN_K}),
     g AS (SELECT doc_id,
                  unnest(list_transform(
-                     range(1, len(hs) - {SUBSTR_SPAN_K} + 2),
+                     range(1, len(hs) - {SPAN_K} + 2),
                      i -> list_reduce(
                          list_prepend(CAST(0 AS BIGINT),
-                                      list_slice(hs, i, i + {SUBSTR_SPAN_K} - 1)),
+                                      list_slice(hs, i, i + {SPAN_K} - 1)),
                          (acc, x) -> (acc * {_SHINGLE_COMB} + x)
                                      % {_MERSENNE_P}))) AS gram
           FROM h)
@@ -765,16 +732,9 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation; the downstream removal join (not materialized here)
     would broadcast the flagged span ids back against the corpus."""
     d = spread(table(spark, sf_dir, "documents"))
-    hs = token_hashes_32_col(F.col("text"))
-    k = SUBSTR_SPAN_K
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(hs) - k + 1),
-        lambda i: F.aggregate(
-            F.slice(hs, i, k), F.lit(0).cast("long"),
-            lambda acc, x: (acc * _SHINGLE_COMB + x) % _MERSENNE_P),
-    )
-    g = (d.select("doc_id", F.explode(
-            F.when(F.size(hs) >= k, grams).otherwise(F.array())).alias("gram")))
+    g = (token_ngram_frame(d, ["doc_id"], n=None)
+         .select("doc_id", F.explode(span_ids_col(F.col("hs"), SPAN_K))
+                 .alias("gram")))
     return (
         g.groupBy(F.col("gram").alias("span_id"))
         .agg(F.count_distinct("doc_id").alias("n_docs"),
@@ -1512,11 +1472,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (already-distinct) gram array — one scan of the corpus, zero
     shuffles, no explode of corpus grams."""
     d = table(spark, sf_dir, "documents")
-    sh = (spread(d)
-          .select("doc_id", token_hashes_32_col(F.col("text")).alias("hs"))
-          .select("doc_id",
-                  shingle_ids_tok_col(F.col("hs"), n=DECON_NGRAM)
-                  .alias("g8")))
+    sh = token_ngram_frame(spread(d), ["doc_id"], n=DECON_NGRAM, out="g8")
     ev = (sh.filter(F.col("doc_id") < EVAL_SET_MAX_ID)
           .select(F.explode("g8").alias("g"))
           .agg(F.collect_set("g").alias("evg")))

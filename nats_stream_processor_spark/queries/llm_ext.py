@@ -41,14 +41,17 @@ from ..operators.dedup import (
     LSH_ROWS,
     MINHASH_K,
     SPAN_DF_CAP,
+    SPAN_K,
+    band_pairs,
     connected_components,
+    jaccard,
     jaccard_sql,
+    minhash_band_explode,
     minhash_signature_col,
     minhash_signature_sql,
-    shingle_ids_tok_col,
     shingle_ids_tok_sql,
-    token_hashes_32_col,
     token_hashes_32_duck_sql,
+    token_ngram_frame,
 )
 from ..operators.textstats import (
     quality_cols,
@@ -179,11 +182,7 @@ def q_corpus_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs and would be dropped at real scale — kept here because it makes
     the sketch error visible and the whole query oracle-checkable."""
     d = spread(table(spark, sf_dir, "documents"))
-    sh = (d.select("source", "doc_id",
-                   token_hashes_32_col(F.col("text")).alias("hs"))
-          .select("source", "doc_id",
-                  shingle_ids_tok_col(F.col("hs")).alias("sids")))
-    sh = pin(sh)
+    sh = pin(token_ngram_frame(d, ["source", "doc_id"]))
 
     sig = sh.select(
         "source", minhash_signature_col(F.col("sids")).alias("sig"))
@@ -1671,7 +1670,6 @@ def q_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cardinality even over a small vocabulary — unlike token-set blocking,
 # which degenerates to near-all-pairs on tiny-vocab corpora).
 CONTAIN_TAU = 0.9
-CONTAIN_SPAN_K = 16
 
 
 @register(
@@ -1682,7 +1680,7 @@ CONTAIN_SPAN_K = 16
                FROM documents),
     h AS (SELECT doc_id, {token_hashes_32_duck_sql('toks')} AS hs FROM t),
     g AS (SELECT doc_id,
-                 {shingle_ids_tok_sql('hs', CONTAIN_SPAN_K)} AS spans
+                 {shingle_ids_tok_sql('hs', SPAN_K)} AS spans
           FROM h),
     ns AS (SELECT doc_id, len(spans) AS n_spans FROM g),
     sp AS (SELECT doc_id, unnest(spans) AS span FROM g),
@@ -1714,11 +1712,11 @@ CONTAIN_SPAN_K = 16
 )
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Excerpt/containment dedup: pairs where >= {CONTAIN_TAU} of the
-    smaller document's distinct {CONTAIN_SPAN_K}-token spans appear in
+    smaller document's distinct {SPAN_K}-token spans appear in
     the larger document — the doc-pair-level view of exact-substring
     dedup (dedup_substring_spans finds the repeated spans themselves;
     this query names which documents are excerpts of which). Documents
-    shorter than {CONTAIN_SPAN_K} tokens carry one whole-text span, so a
+    shorter than {SPAN_K} tokens carry one whole-text span, so a
     verbatim short dup still registers as containment 1.0.
 
     Scale shape: span ids are the blocking key AND the measure, so there
@@ -1733,13 +1731,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_span_df_stats. Numerators count only surviving shared spans;
     denominators (n_spans) stay uncapped, so a doc made entirely of
     boilerplate can no longer reach tau — by design."""
-    from ..functions.hashing import hash32_col  # noqa: F401 (via dedup ops)
-
     d = spread(table(spark, sf_dir, "documents"))
-    hs = token_hashes_32_col(F.col("text"))
-    g = pin(d.select(
-        "doc_id",
-        shingle_ids_tok_col(hs, CONTAIN_SPAN_K).alias("spans")))
+    g = pin(token_ngram_frame(d, ["doc_id"], n=SPAN_K, out="spans"))
     ns = g.select("doc_id", F.size("spans").alias("n_spans"))
     sp = g.select("doc_id", F.explode("spans").alias("span"))
     # DF cap BEFORE pairing (operators/dedup.py SPAN_DF_CAP comment):
@@ -1962,7 +1955,6 @@ def q_score_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .knn_shared import (  # noqa: E402  (shared with llm_ext2)
     _KNN_CTE,
     _knn_graph_df,
-    KNN_GRAPH_K,
     lsh_probe,
 )
 
@@ -2186,17 +2178,11 @@ def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus bands, so the pair space is |eval| x collisions, never
     corpus x corpus. At real scale the eval side is a broadcast-sized
     relation and the corpus is scanned once."""
-    from ..operators.dedup import LSH_BANDS as _b  # noqa: F401 (doc parity)
-    from ..operators.dedup import jaccard, minhash_band_explode
-
     d = table(spark, sf_dir, "documents")
-    sh = (spread(d)
-          .select("doc_id", token_hashes_32_col(F.col("text")).alias("hs"))
-          .select("doc_id", shingle_ids_tok_col(F.col("hs")).alias("sids")))
-    sh = pin(sh)
+    sh = pin(token_ngram_frame(spread(d), ["doc_id"]))
     sig = sh.select("doc_id",
                     minhash_signature_col(F.col("sids")).alias("sig"))
-    bands = minhash_band_explode(sig, "doc_id", "sig")
+    bands = minhash_band_explode(sig, ["doc_id"], "sig")
     ev = (bands.filter(F.col("doc_id") < _EVAL_MAX)
           .select(F.col("doc_id").alias("eval_doc"), "band", "bucket"))
     cand = (
@@ -2822,7 +2808,7 @@ def q_ann_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM documents),
     h AS (SELECT doc_id, {token_hashes_32_duck_sql('toks')} AS hs FROM t),
     g AS (SELECT doc_id,
-                 {shingle_ids_tok_sql('hs', CONTAIN_SPAN_K)} AS spans
+                 {shingle_ids_tok_sql('hs', SPAN_K)} AS spans
           FROM h),
     sp AS (SELECT doc_id, unnest(spans) AS span FROM g),
     df AS (SELECT span, count(DISTINCT doc_id) AS n_docs
@@ -2840,7 +2826,7 @@ def q_ann_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document novelty: the fraction of a document's distinct
-    {CONTAIN_SPAN_K}-token spans that occur in NO other document — the
+    {SPAN_K}-token spans that occur in NO other document — the
     inverse-redundancy signal soft-dedup weighting and mixture design
     consume (novelty 1.0 = entirely original; near 0 = assembled from
     corpus boilerplate). Same span relation as dedup_substring_spans /
@@ -2849,9 +2835,7 @@ def q_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     width carry one whole-text span, so a verbatim short dup scores 0
     novelty against its copy."""
     d = spread(table(spark, sf_dir, "documents"))
-    hs = token_hashes_32_col(F.col("text"))
-    g = d.select("doc_id",
-                 shingle_ids_tok_col(hs, CONTAIN_SPAN_K).alias("spans"))
+    g = token_ngram_frame(d, ["doc_id"], n=SPAN_K, out="spans")
     sp = pin(g.select("doc_id", F.explode("spans").alias("span")))
     df = sp.groupBy("span").agg(F.countDistinct("doc_id").alias("n_docs"))
     per = (sp.join(df, "span")
@@ -3493,22 +3477,10 @@ def q_minhash_estimate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash_lsh — never all-pairs; the signature join carries
     K-int arrays for candidate pairs only."""
     d = table(spark, sf_dir, "documents")
-    sh = (spread(d)
-          .select("doc_id", token_hashes_32_col(F.col("text")).alias("hs"))
-          .select("doc_id", shingle_ids_tok_col(F.col("hs")).alias("sids")))
-    sh = pin(sh)
-    from ..operators.dedup import jaccard, minhash_band_explode
+    sh = pin(token_ngram_frame(spread(d), ["doc_id"]))
     sig = pin(sh.select("doc_id",
                         minhash_signature_col(F.col("sids")).alias("sig")))
-    bands = minhash_band_explode(sig, "doc_id", "sig")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct())
+    cand = band_pairs(minhash_band_explode(sig, ["doc_id"], "sig"))
     sa = sh.select(F.col("doc_id").alias("doc_a"),
                    F.col("sids").alias("sids_a"))
     sb = sh.select(F.col("doc_id").alias("doc_b"),

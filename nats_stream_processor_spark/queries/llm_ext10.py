@@ -48,8 +48,10 @@ from ..operators.dedup import (
     MERSENNE_P as _P,
     SHINGLE_COMB as _COMB,
     SPAN_DF_CAP,
-    token_hashes_32_col,
+    SPAN_K,
+    span_ids_col,
     token_hashes_32_duck_sql,
+    token_ngram_frame,
 )
 from ..functions.text import tokens_col
 
@@ -57,15 +59,14 @@ from ..functions.text import tokens_col
 
 # Same span construction as dedup_substring_spans (K consecutive token
 # hashes folded by the exact-int64 rolling polynomial), but keeping the
-# span's POSITION: span p of doc d covers tokens [p, p + MR_K). Two
+# span's POSITION: span p of doc d covers tokens [p, p + SPAN_K). Two
 # docs sharing spans at positions (pa, pb) and (pa+1, pb+1) share a
 # K+1-token run — consecutive matches on the diagonal pa - pb — so the
 # maximal duplicated run in TOKENS is (longest island of consecutive pa
-# per (pair, diagonal)) + K - 1. Docs shorter than MR_K tokens carry no
+# per (pair, diagonal)) + K - 1. Docs shorter than SPAN_K tokens carry no
 # spans and cannot participate (a sub-K duplicate is below the
 # granularity this operator is defined at — dedup_ngram_jaccard covers
 # that regime).
-MR_K = 16  # tokens per span (= SUBSTR_SPAN_K; same dedup granularity)
 
 
 # Shared oracle CTE chain: tokens -> per-token hashes -> positioned
@@ -85,13 +86,13 @@ def span_ctes_sql(src: str = "documents", tag: str = "",
     {lead}t{tag} AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
                FROM {src}),
     h{tag} AS (SELECT doc_id, {token_hashes_32_duck_sql('toks')} AS hs FROM t{tag}
-          WHERE len(toks) >= {MR_K}),
+          WHERE len(toks) >= {SPAN_K}),
     g{tag} AS (SELECT doc_id,
                  list_transform(
-                     range(1, len(hs) - {MR_K} + 2),
+                     range(1, len(hs) - {SPAN_K} + 2),
                      i -> list_reduce(
                          list_prepend(CAST(0 AS BIGINT),
-                                      list_slice(hs, i, i + {MR_K} - 1)),
+                                      list_slice(hs, i, i + {SPAN_K} - 1)),
                          (acc, x) -> (acc * {_COMB} + x) % {_P})) AS spans
           FROM h{tag}),
     sp{tag} AS (SELECT doc_id, unnest(range(0, len(spans))) AS pos,
@@ -134,17 +135,9 @@ def _positioned_spans(d: DataFrame) -> DataFrame:
     """(doc_id, pos, span_id): the rolling-hash span at each 0-based
     token position — the shared relation every operator in this module
     matches on."""
-    hs = token_hashes_32_col(F.col("text"))
-    k = MR_K
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(hs) - k + 1),
-        lambda i: F.aggregate(
-            F.slice(hs, i, k), F.lit(0).cast("long"),
-            lambda acc, x: (acc * _COMB + x) % _P),
-    )
-    return d.select(
+    return token_ngram_frame(d, ["doc_id"], n=None).select(
         "doc_id",
-        F.posexplode(F.when(F.size(hs) >= k, grams).otherwise(F.array()))
+        F.posexplode(span_ids_col(F.col("hs"), SPAN_K))
         .alias("pos", "span_id"))
 
 
@@ -153,7 +146,7 @@ def _span_counts(d: DataFrame) -> DataFrame:
     the token COUNT (len - K + 1), no second md5 pass over the corpus.
     The Spark twin of the ns CTE."""
     return (d.select("doc_id",
-                     (F.size(tokens_col(F.col("text"))) - MR_K + 1)
+                     (F.size(tokens_col(F.col("text"))) - SPAN_K + 1)
                      .cast("long").alias("n_spans"))
             .filter(F.col("n_spans") >= 1))
 
@@ -169,7 +162,7 @@ def span_pairs_from(d: DataFrame) -> DataFrame:
     """_span_pairs over an explicit documents frame — so llm_ext14's
     drop-plan EXECUTE can re-run the identical pair plan on the
     survivor corpus (the Spark twin of run_ctes_sql(src=..., tag=...))."""
-    k = MR_K
+    k = SPAN_K
     sp = _positioned_spans(d)
     ns = _span_counts(d)
     # DF cap BEFORE pairing (operators/dedup.py SPAN_DF_CAP comment):
@@ -208,7 +201,7 @@ def span_pairs_from(d: DataFrame) -> DataFrame:
     "dedup_max_duplicated_run",
     oracle=_RUN_CTES + f"""
     SELECT p.doc_a, p.doc_b, p.n_shared_positions, p.max_run_spans,
-           CAST(p.max_run_spans + {MR_K} - 1 AS BIGINT) AS max_run_tokens,
+           CAST(p.max_run_spans + {SPAN_K} - 1 AS BIGINT) AS max_run_tokens,
            p.max_run_spans = least(na.n_spans, nb.n_spans)
                AS full_containment
     FROM pairs p JOIN ns na ON na.doc_id = p.doc_a
@@ -219,7 +212,7 @@ def span_pairs_from(d: DataFrame) -> DataFrame:
 )
 def q_max_duplicated_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal duplicated token run per document pair (module comment
-    above): one row per pair sharing at least one {MR_K}-token span,
+    above): one row per pair sharing at least one {SPAN_K}-token span,
     with the total shared span matches, the longest consecutive run in
     spans and in tokens, and the superstring-extract flag — TRUE when
     the maximal run covers the smaller document's ENTIRE span sequence
@@ -246,7 +239,7 @@ def q_max_duplicated_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (_span_pairs(spark, sf_dir)
             .select("doc_a", "doc_b", "n_shared_positions",
                     "max_run_spans",
-                    (F.col("max_run_spans") + MR_K - 1).cast("long")
+                    (F.col("max_run_spans") + SPAN_K - 1).cast("long")
                     .alias("max_run_tokens"),
                     (F.col("max_run_spans")
                      == F.least("n_spans_a", "n_spans_b"))
@@ -275,7 +268,7 @@ def q_max_duplicated_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AS rk
              FROM drops)
     SELECT b.doc_id, b.container AS kept_in, ns.n_spans,
-           CAST(ns.n_spans + {MR_K} - 1 AS BIGINT) AS tokens_saved
+           CAST(ns.n_spans + {SPAN_K} - 1 AS BIGINT) AS tokens_saved
     FROM best b JOIN ns ON ns.doc_id = b.doc_id
     WHERE b.rk = 1
     ORDER BY b.doc_id
@@ -314,7 +307,7 @@ def q_containment_drop_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rk") == 1)
             .select("doc_id", F.col("container").alias("kept_in"),
                     "n_spans",
-                    (F.col("n_spans") + MR_K - 1).cast("long")
+                    (F.col("n_spans") + SPAN_K - 1).cast("long")
                     .alias("tokens_saved"))
             .orderBy("doc_id"))
 
@@ -667,13 +660,13 @@ def _looping_oracle() -> str:
     WITH t AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
                FROM documents),
     h AS (SELECT doc_id, {token_hashes_32_duck_sql('toks')} AS hs FROM t
-          WHERE len(toks) >= {MR_K}),
+          WHERE len(toks) >= {SPAN_K}),
     g AS (SELECT doc_id,
                  list_transform(
-                     range(1, len(hs) - {MR_K} + 2),
+                     range(1, len(hs) - {SPAN_K} + 2),
                      i -> list_reduce(
                          list_prepend(CAST(0 AS BIGINT),
-                                      list_slice(hs, i, i + {MR_K} - 1)),
+                                      list_slice(hs, i, i + {SPAN_K} - 1)),
                          (acc, x) -> (acc * {_COMB} + x) % {_P})) AS spans
           FROM h),
     sp AS (SELECT doc_id, unnest(range(0, len(spans))) AS pos,
@@ -704,7 +697,7 @@ def _looping_oracle() -> str:
                         AS rk
              FROM runs)
     SELECT b.doc_id, CAST(b.run_len AS BIGINT) AS max_run_spans,
-           CAST(b.run_len + {MR_K} - 1 AS BIGINT) AS max_run_tokens,
+           CAST(b.run_len + {SPAN_K} - 1 AS BIGINT) AS max_run_tokens,
            CAST(b.diag AS BIGINT) AS period_tokens,
            CAST(b.start AS BIGINT) AS run_start_pos,
            tot.n_loop_positions
@@ -763,7 +756,7 @@ def q_looping_run_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (best.join(tot, "doc_id")
             .select("doc_id",
                     F.col("run_len").cast("long").alias("max_run_spans"),
-                    (F.col("run_len") + MR_K - 1).cast("long")
+                    (F.col("run_len") + SPAN_K - 1).cast("long")
                     .alias("max_run_tokens"),
                     F.col("diag").cast("long").alias("period_tokens"),
                     F.col("start").cast("long").alias("run_start_pos"),

@@ -75,12 +75,12 @@ from ..registry import pin, register, spread, table
 
 from ..operators import kmeans as km
 from ..operators import similarity as sim
+from ..operators.dedup import SPAN_K
 from ..operators.kmeans import IVF_NLIST
 
 # ------------------------------- drop-plan execute (the act step)
 
 from .llm_ext10 import (  # noqa: E402
-    MR_K,
     _span_counts,
     run_ctes_sql,
     span_pairs_from,
@@ -102,7 +102,7 @@ def _drop_execute_oracle() -> str:
             FROM documents),
     nd AS (SELECT CAST(count(*) AS BIGINT) AS n_dropped FROM drops),
     na0 AS (SELECT CAST(count(*) AS BIGINT) AS n_docs_after FROM surv),
-    tr AS (SELECT coalesce(CAST(sum(ns.n_spans + {MR_K} - 1) AS BIGINT),
+    tr AS (SELECT coalesce(CAST(sum(ns.n_spans + {SPAN_K} - 1) AS BIGINT),
                            0) AS tokens_removed
            FROM ns JOIN drops USING (doc_id)),
     rp AS (SELECT CAST(count(*) AS BIGINT) AS surviving_pair_count,
@@ -163,7 +163,7 @@ def q_drop_plan_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = drops.agg(F.count("*").cast("long").alias("n_dropped"))
     na0 = surv.agg(F.count("*").cast("long").alias("n_docs_after"))
     tr = (_span_counts(d).join(F.broadcast(drops), "doc_id")
-          .agg(F.coalesce(F.sum(F.col("n_spans") + MR_K - 1).cast("long"),
+          .agg(F.coalesce(F.sum(F.col("n_spans") + SPAN_K - 1).cast("long"),
                           F.lit(0).cast("long")).alias("tokens_removed")))
     rp = p2.agg(
         F.count("*").cast("long").alias("surviving_pair_count"),
@@ -448,11 +448,6 @@ def _ivf_rebalance_oracle() -> str:
     """
 
 
-def _ppm_rank_col(dot_col, den_col):
-    return F.floor(dot_col / den_col * F.lit(1000000.0)
-                   + F.lit(0.5)).cast("long")
-
-
 def _ivf_base_frames(spark: SparkSession, sf_dir: str):
     """Shared Spark-side base for the two IVF maintenance acts: pinned
     corpus-with-norms, broadcastable trained-centroid table, pinned
@@ -521,9 +516,9 @@ def _ivf_recall_frames(n, cent, asg, newc, nasg):
         F.col("qppm").desc(), "cent_id")
     prb1 = (qv.crossJoin(F.broadcast(cent))
             .select("query_id", "q_demb", "q_nrm", "cent_id",
-                    _ppm_rank_col(
-                        sim.dot(F.col("q_demb"), F.col("c_demb")),
-                        F.col("q_nrm") * F.col("c_nrm")).alias("qppm"))
+                    sim.ppm(
+                        sim.dot(F.col("q_demb"), F.col("c_demb"))
+                        / (F.col("q_nrm") * F.col("c_nrm"))).alias("qppm"))
             .withColumn("r", F.row_number().over(wp1))
             .filter(F.col("r") <= IVR_NPROBE)
             .select("query_id", "q_demb", "q_nrm", "cent_id"))
@@ -541,9 +536,9 @@ def _ivf_recall_frames(n, cent, asg, newc, nasg):
         F.col("qppm").desc(), "nl_id")
     prb2 = (qv.crossJoin(F.broadcast(newc))
             .select("query_id", "q_demb", "q_nrm", "nl_id",
-                    _ppm_rank_col(
-                        sim.dot(F.col("q_demb"), F.col("s_demb")),
-                        F.col("q_nrm") * F.col("s_nrm")).alias("qppm"))
+                    sim.ppm(
+                        sim.dot(F.col("q_demb"), F.col("s_demb"))
+                        / (F.col("q_nrm") * F.col("s_nrm"))).alias("qppm"))
             .withColumn("r", F.row_number().over(wp2))
             .filter(F.col("r") <= IVR_NPROBE)
             .select("query_id", "q_demb", "q_nrm", "nl_id"))
@@ -610,9 +605,9 @@ def _ivf_split_frames(spark: SparkSession, cent: DataFrame,
     def sub_assign(sdf):
         return (mem.join(F.broadcast(sdf), "cent_id")
                 .select("cent_id", "vec_id", "demb", "nrm", "sub",
-                        _ppm_rank_col(
-                            sim.dot(F.col("demb"), F.col("s_demb")),
-                            F.col("nrm") * F.col("s_nrm")).alias("sppm"))
+                        sim.ppm(
+                            sim.dot(F.col("demb"), F.col("s_demb"))
+                            / (F.col("nrm") * F.col("s_nrm"))).alias("sppm"))
                 .withColumn("r", F.row_number().over(wsub))
                 .filter(F.col("r") == 1))
 
@@ -848,9 +843,9 @@ def _ivf_merge_frames(cent: DataFrame, asg: DataFrame, mrg: DataFrame):
         F.col("rppm").desc(), "nl_id")
     reasg = (movers.crossJoin(F.broadcast(newc))
              .select("vec_id", "demb", "nrm", "nl_id",
-                     _ppm_rank_col(
-                         sim.dot(F.col("demb"), F.col("s_demb")),
-                         F.col("nrm") * F.col("s_nrm")).alias("rppm"))
+                     sim.ppm(
+                         sim.dot(F.col("demb"), F.col("s_demb"))
+                         / (F.col("nrm") * F.col("s_nrm"))).alias("rppm"))
              .withColumn("rc", F.row_number().over(wre))
              .filter(F.col("rc") == 1)
              .select("nl_id", "vec_id", "demb", "nrm"))
@@ -1064,22 +1059,15 @@ def q_inc_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import (connected_components, jaccard,
                                    minhash_band_explode,
                                    minhash_signature_col,
-                                   shingle_ids_tok_col,
-                                   token_hashes_32_col)
+                                   token_ngram_frame)
 
     d = spread(table(spark, sf_dir, "documents"))
     cut = d.agg(F.floor(F.max("doc_id") * 0.8).cast("long").alias("c"))
-    sh = pin(d.crossJoin(F.broadcast(cut))
-             .select("doc_id", "c",
-                     token_hashes_32_col(F.col("text")).alias("hs"))
-             .select("doc_id", "c",
-                     shingle_ids_tok_col(F.col("hs")).alias("sids")))
-    sig = sh.select("doc_id", "c", "sids",
+    sh = pin(token_ngram_frame(d.crossJoin(F.broadcast(cut)),
+                               ["doc_id", "c"]))
+    sig = sh.select("doc_id", "c",
                     minhash_signature_col(F.col("sids")).alias("sig"))
-    bands = pin(minhash_band_explode(
-        sig.select("doc_id", "c", "sig"), "doc_id", "sig")
-        .join(sh.select("doc_id", "c").distinct(), ["doc_id"])
-        .select("doc_id", "c", "band", "bucket"))
+    bands = pin(minhash_band_explode(sig, ["doc_id", "c"], "sig"))
     corp_b = bands.filter(F.col("doc_id") <= F.col("c")) \
                   .select(F.col("doc_id").alias("cid"), "band", "bucket")
     bat_b = bands.filter(F.col("doc_id") > F.col("c")) \

@@ -59,13 +59,11 @@ from pyspark.sql import functions as F
 
 # Registry import FIRST among intra-package imports (worker re-import
 # ordering; see llm_ext2.py's header note).
-from ..registry import pin, register, table  # noqa: F401
+from ..registry import pin, register
 
-from ..operators import similarity as sim
 from ..operators.kmeans import IVF_NLIST
 
 from .llm_ext14 import (  # noqa: E402
-    IVR_NPROBE,
     IVR_TOPK,
     _ivf_base_ctes_sql,
     _ivf_base_frames,

@@ -64,7 +64,6 @@ from .llm_ext14 import (  # noqa: E402
     IVR_TOPK,
     _ivf_base_ctes_sql,
     _ivf_base_frames,
-    _ppm_rank_col,
     _ppm_rank_sql,
     _PPM,
 )
@@ -180,9 +179,9 @@ def q_rank_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qppm").desc(), "cent_id")
     prb = (qv.crossJoin(F.broadcast(cent))
            .select("query_id", "q_demb", "q_nrm", "cent_id",
-                   _ppm_rank_col(
-                       sim.dot(F.col("q_demb"), F.col("c_demb")),
-                       F.col("q_nrm") * F.col("c_nrm")).alias("qppm"))
+                   sim.ppm(
+                       sim.dot(F.col("q_demb"), F.col("c_demb"))
+                       / (F.col("q_nrm") * F.col("c_nrm"))).alias("qppm"))
            .withColumn("r", F.row_number().over(wp))
            .filter(F.col("r") <= IVR_NPROBE)
            .select("query_id", "q_demb", "q_nrm", "cent_id"))
@@ -329,16 +328,12 @@ def q_band_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import (LSH_BANDS, LSH_ROWS, jaccard,
                                    minhash_band_explode,
                                    minhash_signature_col,
-                                   shingle_ids_tok_col,
-                                   token_hashes_32_col)
+                                   token_ngram_frame)
     d = spread(table(spark, sf_dir, "documents"))
-    sh = pin(d.select("doc_id",
-                      shingle_ids_tok_col(
-                          token_hashes_32_col(F.col("text")))
-                      .alias("sids")))
+    sh = pin(token_ngram_frame(d, ["doc_id"]))
     sig = sh.select("doc_id",
                     minhash_signature_col(F.col("sids")).alias("sig"))
-    bands = pin(minhash_band_explode(sig, "doc_id", "sig"))
+    bands = pin(minhash_band_explode(sig, ["doc_id"], "sig"))
     a = bands.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
     cand = (a.join(b, ["band", "bucket"])

@@ -428,9 +428,6 @@ def q_minhash_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------- exact-substring removal impact per doc
 
-_SPAN_K = 16  # llm.SUBSTR_SPAN_K — K-token spans, kept in sync
-
-
 def _span_cov_ctes(max_doc_tokens: int | None = None) -> str:
     """The span-coverage CTE chain (t..a), shared by the removal-plan and
     quality-vs-dup oracles: per-doc duplicated K-token span positions and
@@ -438,8 +435,9 @@ def _span_cov_ctes(max_doc_tokens: int | None = None) -> str:
     ``max_doc_tokens`` excludes over-length docs from ``t`` outright —
     the substring-APPLY oracle's single-row-size guard (its Spark twin
     filters identically); the plan/quality oracles pass None."""
-    from ..operators.dedup import MERSENNE_P, SHINGLE_COMB, token_hashes_32_duck_sql
-    k = _SPAN_K
+    from ..operators.dedup import (MERSENNE_P, SHINGLE_COMB, SPAN_K,
+                                   token_hashes_32_duck_sql)
+    k = SPAN_K
     guard = ("" if max_doc_tokens is None else
              f"\n               WHERE len(regexp_extract_all(lower(text),"
              f" '[a-z0-9]+')) < {max_doc_tokens}")
@@ -508,24 +506,13 @@ def q_span_removal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _span_coverage_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of :func:`_span_cov_ctes` + the final projection:
     (doc_id, n_dup_spans, tokens_covered, n_tokens, coverage_ppm)."""
-    from ..operators.dedup import (
-        MERSENNE_P,
-        SHINGLE_COMB,
-        token_hashes_32_col,
-    )
-    k = _SPAN_K
+    from ..operators.dedup import SPAN_K, span_ids_col, token_ngram_frame
+    k = SPAN_K
     d = spread(table(spark, sf_dir, "documents"))
-    h = pin(d.select(
-        "doc_id", token_hashes_32_col(F.col("text")).alias("hs")))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("hs") - k + 1),
-        lambda i: F.aggregate(
-            F.slice("hs", i, k), F.lit(0).cast("long"),
-            lambda acc, x: (acc * SHINGLE_COMB + x) % MERSENNE_P))
+    h = pin(token_ngram_frame(d, ["doc_id"], n=None))
     s = (h.select(
             "doc_id",
-            F.posexplode(F.when(F.size("hs") >= k, grams)
-                         .otherwise(F.array())).alias("pos0", "gram"))
+            F.posexplode(span_ids_col(F.col("hs"), k)).alias("pos0", "gram"))
          .select("doc_id", (F.col("pos0") + 1).alias("pos"), "gram"))
     s = pin(s)
     dup = (s.groupBy("gram").agg(F.count_distinct("doc_id").alias("nd"))

@@ -32,6 +32,7 @@ from ..registry import REGISTRY, pin, register, spread, table
 from ..functions.hashing import hash32_col, hash32_sql_duck
 from ..functions.text import TOKEN_RE, tokens_col
 from ..operators import similarity as sim
+from ..operators.dedup import token_ngram_frame
 from ..operators.textstats import (
     lang_id_cols,
     lang_id_sql,
@@ -460,15 +461,10 @@ def q_decon_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hash join on position ids (the oracle-checkable rendering
     of the same semantics); corpus grams never shuffle — the only wide
     op is the per-doc count aggregation keyed by doc_id."""
-    from ..operators.dedup import shingle_ids_tok_col, token_hashes_32_col
     from .llm import DECON_NGRAM, EVAL_SET_MAX_ID
 
     d = spread(table(spark, sf_dir, "documents"))
-    sh = pin(d.select(
-        "doc_id",
-        shingle_ids_tok_col(
-            token_hashes_32_col(F.col("text")).alias("hs"),
-            n=DECON_NGRAM).alias("sids")))
+    sh = pin(token_ngram_frame(d, ["doc_id"], n=DECON_NGRAM))
     ev_grams = (sh.filter(F.col("doc_id") < EVAL_SET_MAX_ID)
                 .select(F.explode("sids").alias("sid")).distinct())
     ev_bits = (ev_grams.select(F.explode(F.array(
@@ -934,19 +930,11 @@ def q_lsh_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One aggregation keyed by (band, bucket) — identical partitioning to
     the candidate join itself — then an 8-row rollup per band."""
-    from ..operators.dedup import (
-        minhash_band_explode,
-        minhash_signature_col,
-        shingle_ids_tok_col,
-        token_hashes_32_col,
-    )
+    from ..operators.dedup import minhash_band_explode, minhash_signature_col
     d = spread(table(spark, sf_dir, "documents"))
-    sig = (d.select("doc_id",
-                    token_hashes_32_col(F.col("text")).alias("hs"))
-           .select("doc_id", shingle_ids_tok_col(F.col("hs")).alias("sids"))
-           .select("doc_id",
-                   minhash_signature_col(F.col("sids")).alias("sig")))
-    bands = minhash_band_explode(sig, "doc_id", "sig")
+    sig = token_ngram_frame(d, ["doc_id"]).select(
+        "doc_id", minhash_signature_col(F.col("sids")).alias("sig"))
+    bands = minhash_band_explode(sig, ["doc_id"], "sig")
     bk = (bands.groupBy("band", "bucket")
           .agg(F.count("*").cast("bigint").alias("sz")))
     return (bk.groupBy("band")
@@ -1141,14 +1129,9 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     removal pass would use; the affected-docs rollup re-joins doc ids
     against the boilerplate ids per source. Output is one row per
     source: phrase count, affected docs, affected ppm."""
-    from ..operators.dedup import shingle_ids_tok_col, token_hashes_32_col
-
     d = spread(table(spark, sf_dir, "documents"))
-    ex = pin(d.select(
-        "source", "doc_id",
-        F.explode(shingle_ids_tok_col(
-            token_hashes_32_col(F.col("text")).alias("hs"),
-            n=BOILER_N)).alias("sid")))
+    ex = pin(token_ngram_frame(d, ["source", "doc_id"], n=BOILER_N)
+             .select("source", "doc_id", F.explode("sids").alias("sid")))
     boiler = (ex.groupBy("source", "sid")
               .agg(F.count_distinct("doc_id").alias("nd"))
               .filter(F.col("nd") >= BOILER_MIN_DOCS)
@@ -1946,21 +1929,18 @@ def q_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shuffles carry int64 shingle ids keyed by sid (first-decile = min
     aggregate) — never text; the decile histogram is a 10-row result."""
-    from ..operators.dedup import shingle_ids_tok_col, token_hashes_32_col
     from .llm import DECON_NGRAM
 
     d = spread(table(spark, sf_dir, "documents"))
     mx = d.agg(F.max("doc_id").alias("max_id"))
     # Integer `div`, matching the oracle's `//` floor exactly — the
     # double-division-then-cast shape diverges past 2^53-scale ids.
-    ex = (d.crossJoin(F.broadcast(mx))
-          .select(F.least(F.lit(NOVELTY_DECILES - 1),
-                          F.expr(f"doc_id * {NOVELTY_DECILES} "
-                                 "div (max_id + 1)").cast("int"))
-                  .alias("decile"),
-                  F.explode(shingle_ids_tok_col(
-                      token_hashes_32_col(F.col("text")).alias("hs"),
-                      n=DECON_NGRAM)).alias("sid")))
+    decile = F.least(F.lit(NOVELTY_DECILES - 1),
+                     F.expr(f"doc_id * {NOVELTY_DECILES} "
+                            "div (max_id + 1)").cast("int")).alias("decile")
+    ex = (token_ngram_frame(d.crossJoin(F.broadcast(mx)), [decile],
+                            n=DECON_NGRAM)
+          .select("decile", F.explode("sids").alias("sid")))
     ex = pin(ex.distinct())
     per = ex.groupBy("decile").agg(F.count("*").cast("bigint")
                                    .alias("n_distinct_grams"))
@@ -2593,15 +2573,10 @@ def q_contamination_by_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side into the distinct (doc, bench) hit set; per-source totals
     join at |sources| x |benchmarks| cardinality. Shuffles carry int64
     shingle ids and doc ids, never text."""
-    from ..operators.dedup import shingle_ids_tok_col, token_hashes_32_col
     from .llm import DECON_NGRAM, EVAL_SET_MAX_ID
 
     d = spread(table(spark, sf_dir, "documents"))
-    sh = pin(d.select(
-        "source", "doc_id",
-        shingle_ids_tok_col(
-            token_hashes_32_col(F.col("text")).alias("hs"),
-            n=DECON_NGRAM).alias("sids")))
+    sh = pin(token_ngram_frame(d, ["source", "doc_id"], n=DECON_NGRAM))
     ev_grams = (sh.filter(F.col("doc_id") < EVAL_SET_MAX_ID)
                 .select((F.col("doc_id") % CONTAM_BENCHES).cast("int")
                         .alias("bench"),

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 # Registry import FIRST among intra-package imports (worker re-import
 # ordering; see llm_ext2.py's header note).
-from ..registry import REGISTRY, pin, register, spread, table
+from ..registry import REGISTRY, register, spread, table
 
 from ..operators import similarity as sim
 

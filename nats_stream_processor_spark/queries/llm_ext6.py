@@ -195,27 +195,15 @@ def q_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pos, token) structs, never a window over text; single-row size is
     bounded by the SUBSTR_MAX_DOC_TOKENS exclusion (see the constant
     block)."""
-    from ..operators.dedup import (
-        MERSENNE_P,
-        SHINGLE_COMB,
-        token_hashes_32_col,
-    )
-    from .llm_ext2 import _SPAN_K
-    k = _SPAN_K
+    from ..operators.dedup import SPAN_K, span_ids_col, token_ngram_frame
+    k = SPAN_K
     d = spread(table(spark, sf_dir, "documents"))
-    h = pin(d.select("doc_id",
-                     tokens_col(F.col("text")).alias("toks"),
-                     token_hashes_32_col(F.col("text")).alias("hs"))
-            .filter(F.size("toks") < SUBSTR_MAX_DOC_TOKENS))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("hs") - k + 1),
-        lambda i: F.aggregate(
-            F.slice("hs", i, k), F.lit(0).cast("long"),
-            lambda acc, x: (acc * SHINGLE_COMB + x) % MERSENNE_P))
+    h = pin(token_ngram_frame(
+        d, ["doc_id", tokens_col(F.col("text")).alias("toks")], n=None)
+        .filter(F.size("toks") < SUBSTR_MAX_DOC_TOKENS))
     s = pin(h.select(
         "doc_id",
-        F.posexplode(F.when(F.size("hs") >= k, grams)
-                     .otherwise(F.array())).alias("pos0", "gram"))
+        F.posexplode(span_ids_col(F.col("hs"), k)).alias("pos0", "gram"))
         .select("doc_id", (F.col("pos0") + 1).alias("pos"), "gram"))
     dup = (s.groupBy("gram").agg(F.count_distinct("doc_id").alias("nd"))
            .filter(F.col("nd") >= 2).select("gram"))
@@ -245,8 +233,9 @@ def q_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _substring_apply_oracle() -> str:
-    from .llm_ext2 import _SPAN_K, _span_cov_ctes
-    k = _SPAN_K
+    from ..operators.dedup import SPAN_K
+    from .llm_ext2 import _span_cov_ctes
+    k = SPAN_K
     return f"""
     {_span_cov_ctes(max_doc_tokens=SUBSTR_MAX_DOC_TOKENS)},
     cov AS (SELECT DISTINCT doc_id, pos + o AS cpos

@@ -85,12 +85,11 @@ def assigned(df: DataFrame, cent: DataFrame,
     ).withColumn("nrm", sim.norm(F.col("demb")))
     scored = F.array(*[
         F.struct(
-            F.floor(sim.dot(F.col("demb"),
+            sim.ppm(sim.dot(F.col("demb"),
                             F.array(*[F.lit(float(x))
                                       for x in r.c_demb]))
-                    / (F.col("nrm") * F.lit(float(r.c_nrm)))
-                    * F.lit(1000000.0) + F.lit(0.5))
-            .cast("long").alias("ppm"),
+                    / (F.col("nrm") * F.lit(float(r.c_nrm))))
+            .alias("ppm"),
             F.lit(-int(r.cent_id)).cast("long").alias("ncid"))
         for r in rows])
     return (n.select("vec_id",

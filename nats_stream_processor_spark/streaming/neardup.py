@@ -60,9 +60,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (LSH_BANDS, LSH_ROWS, band_buckets,
-                               minhash_signature_col, shingle_ids_tok_col,
-                               token_hashes_32_col)
+from ..operators.dedup import (minhash_band_explode, minhash_signature_col,
+                               token_ngram_frame)
 from ..queries.llm import NEAR_DUP_JACCARD
 from .stateful import keyed_state
 
@@ -164,22 +163,15 @@ def banded(df: DataFrame, id_col: str = "doc_id",
     the doc's shingle ids, and the bucket shard. Text never leaves the
     JVM; the exchange carries ids, buckets, and sid arrays only.
 
-    The bands come from minhash_band_explode's bucket construction
-    (band_buckets) applied in place, carrying sids alongside, instead of
-    calling minhash_band_explode and joining sids back on — that join
-    would be a stream-stream self-join, which Structured Streaming
-    rejects ahead of a stateful operator."""
-    sh = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        shingle_ids_tok_col(
-            token_hashes_32_col(F.col(text_col))).alias("sids"))
+    minhash_band_explode carries sids through the explode: joining them
+    back on would be a stream-stream self-join, which Structured
+    Streaming rejects ahead of a stateful operator."""
+    sh = token_ngram_frame(
+        df.select(F.col(id_col).cast("long").alias("doc_id"),
+                  F.col(text_col).alias("text")), ["doc_id"])
     sig = sh.select("doc_id", "sids",
                     minhash_signature_col(F.col("sids")).alias("sig"))
-    bands = band_buckets("sig", LSH_BANDS, LSH_ROWS)
-    return (sig.select("doc_id", "sids", bands.alias("bk"))
-            .select("doc_id", "sids",
-                    F.col("bk.band").alias("band"),
-                    F.col("bk.bucket").alias("bucket"))
+    return (minhash_band_explode(sig, ["doc_id", "sids"], "sig")
             .withColumn("shard",
                         (F.crc32(F.col("bucket")) % shards).cast("long")))
 

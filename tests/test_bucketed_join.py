@@ -5,9 +5,6 @@ SortMergeJoin with NO Exchange on either side."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from nats_stream_processor_spark.registry import table
 
 SF = "/root/testdata/sf0.001"

@@ -13,7 +13,6 @@ These pin the behaviors the oracle queries can't see in isolation:
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 

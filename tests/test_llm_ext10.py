@@ -20,6 +20,7 @@ import random
 import pytest
 
 from nats_stream_processor_spark import registry
+from nats_stream_processor_spark.operators.dedup import SPAN_K
 from nats_stream_processor_spark.queries import llm_ext10 as x10
 
 
@@ -77,7 +78,7 @@ def _vocab_texts():
     mutated = list(base)
     mutated[29] = "zzz"
     novel = [f"n{i:03d}" for i in range(40)]          # doc 4: no overlap
-    short = [f"s{i:03d}" for i in range(x10.MR_K - 1)]  # doc 5: sub-K, excluded
+    short = [f"s{i:03d}" for i in range(SPAN_K - 1)]  # doc 5: sub-K, excluded
     rng.shuffle(novel)
     return [" ".join(t) for t in
             (base, nested, partial, mutated, novel, short)]
@@ -90,7 +91,7 @@ def test_max_run_matches_diagonal_scan_reference(spark, tmp_path):
            registry.REGISTRY["dedup_max_duplicated_run"].fn(
                spark, sf_dir).collect()}
     toks = [_toks(t) for t in texts]
-    k = x10.MR_K
+    k = SPAN_K
     expect = {}
     for a, b in itertools.combinations(range(len(toks)), 2):
         if len(toks[a]) < k or len(toks[b]) < k:
@@ -144,7 +145,7 @@ def test_span_df_cap_drops_boilerplate_pairs(spark, tmp_path):
     prevent — and dedup_span_df_stats must report the hot span's
     dropped occurrence mass and avoided pair mass (no silent caps)."""
     from nats_stream_processor_spark.operators.dedup import SPAN_DF_CAP
-    k = x10.MR_K
+    k = SPAN_K
     boiler = " ".join(f"bw{j}" for j in range(k))
     texts = [boiler + " " + " ".join(f"u{i}x{j}" for j in range(8))
              for i in range(80)]
@@ -182,7 +183,7 @@ def test_fixture_corpus_has_planted_duplicate_runs(spark):
     rows = registry.REGISTRY["dedup_max_duplicated_run"].fn(
         spark, "/root/testdata/sf0.001").collect()
     assert rows, "no duplicated runs found at sf0.001 — vacuous row"
-    assert all(r.max_run_tokens >= x10.MR_K for r in rows)
+    assert all(r.max_run_tokens >= SPAN_K for r in rows)
     assert all(r.max_run_spans <= r.n_shared_positions for r in rows)
 
 
@@ -223,7 +224,7 @@ def test_drop_plan_matches_containment_reference(spark, tmp_path):
            registry.REGISTRY["dedup_containment_drop_plan"].fn(
                spark, sf_dir).collect()}
     toks = [_toks(t) for t in texts]
-    expect = _expected_drop_plan(toks, x10.MR_K)
+    expect = _expected_drop_plan(toks, SPAN_K)
     assert got == expect
     # the planted regimes land as designed: the nested extract (1), the
     # exact duplicate (6, kept in 0 by the id tie-break), and the chain
@@ -470,7 +471,7 @@ def test_looping_run_planted_periods(spark, tmp_path):
                spark, sf_dir).collect()}
     toks = [_toks(t) for t in texts]
     for i, t in enumerate(toks):
-        e = _loop_reference(t, x10.MR_K, x10.LP_D)
+        e = _loop_reference(t, SPAN_K, x10.LP_D)
         if e is None:
             assert i not in got, i
             continue
@@ -498,7 +499,7 @@ def test_looping_run_binned_join_equals_unbinned(spark, tmp_path):
            registry.REGISTRY["text_looping_run_report"].fn(
                spark, sf_dir).collect()}
     for i, t in enumerate(_toks(x) for x in texts):
-        e = _loop_reference(t, x10.MR_K, x10.LP_D)
+        e = _loop_reference(t, SPAN_K, x10.LP_D)
         r = got[i]
         assert (r.max_run_spans, r.max_run_tokens, r.period_tokens,
                 r.run_start_pos, r.n_loop_positions) == e, i

@@ -16,10 +16,10 @@
 from __future__ import annotations
 
 import duckdb
-import pytest
 
 from nats_stream_processor_spark import registry
 from nats_stream_processor_spark.operators import similarity as sim
+from nats_stream_processor_spark.operators.dedup import SPAN_K
 from nats_stream_processor_spark.queries import llm_ext10 as x10
 from nats_stream_processor_spark.queries import llm_ext14 as x14
 
@@ -61,7 +61,7 @@ def test_drop_execute_planted_containment_chain(spark, tmp_path):
     doc: executing drops B and C (both contained in A), the survivor
     set is {A, unrelated}, tokens_removed is the dropped docs' token
     counts, and the recount is 0."""
-    k = x10.MR_K
+    k = SPAN_K
     base = [f"w{i:03d}" for i in range(3 * k)]
     a = " ".join(base)                       # doc 0: the container
     b = " ".join(base[k // 2: 2 * k])        # doc 1: contiguous in A
@@ -88,7 +88,7 @@ def test_drop_execute_cap_masked_corpus_still_zero(spark, tmp_path):
     dropping docs never reveals a cap-masked containment, because the
     hot span keeps its full carrier set among survivors."""
     from nats_stream_processor_spark.operators.dedup import SPAN_DF_CAP
-    k = x10.MR_K
+    k = SPAN_K
     boiler = " ".join(f"bw{j}" for j in range(k))
     texts = [boiler + " " + " ".join(f"u{i}x{j}" for j in range(8))
              for i in range(80)]
@@ -109,7 +109,7 @@ def test_drop_execute_oracle_parity_on_planted_corpus(spark, tmp_path):
     """The registered oracle replays the execute on the planted chain
     corpus value-for-value (the same side-by-side the driver runs, on
     a corpus where every receipt column is nonzero)."""
-    k = x10.MR_K
+    k = SPAN_K
     base = [f"w{i:03d}" for i in range(3 * k)]
     texts = [" ".join(base), " ".join(base[k // 2: 2 * k]),
              " ".join(f"n{i:03d}" for i in range(2 * k))]

@@ -94,8 +94,8 @@ def test_substring_apply_matches_python_reference(spark):
     from nats_stream_processor_spark.operators.dedup import (
         MERSENNE_P,
         SHINGLE_COMB,
+        SPAN_K as K,
     )
-    from nats_stream_processor_spark.queries.llm_ext2 import _SPAN_K as K
     docs = _docs(spark)
     toks = {r.doc_id: _toks(r.text) for r in docs}
     hs = {d: [_h32(t) for t in ts] for d, ts in toks.items()}

@@ -33,7 +33,6 @@ from nats_stream_processor_spark.streaming.stateful import (
     pairs_encode,
 )
 from nats_stream_processor_spark.streaming.pipeline import (
-    RAW_POST_SCHEMA,
     NatsSink,
     decode_posts,
     enrich_stream,
