@@ -1,8 +1,19 @@
-"""Shared k-NN graph construction (Spark builder + DuckDB CTE), used by
-sim_knn_graph / graph_pagerank_knn (queries/llm_ext.py) and
-graph_knn_hubness (queries/llm_ext2.py), and the multi-table LSH query
-probe (``lsh_probe``) of sim_ann_lsh, sim_ann_range_search
-(queries/llm.py) and sim_index_recall_report (queries/llm_ext.py).
+"""The exact-kNN scoring stage: how a neighbour is scored and ranked,
+in Spark next to its SQL twin ``_EMB_CTE``.
+
+- ``vectors``: the (vec_id, *carry, demb, nrm) vector frame — the twin of
+  ``_EMB_CTE``'s ``e`` and ``n``.
+- ``query_side`` + ``candidates``: the broadcast, self-excluding
+  candidate join (``c.vec_id != q.vec_id`` in the oracles), scored by
+  cosine unless the caller brings its own score.
+- ``neighbor_rank`` / ``top_k``: the per-query rank, ties to the lower
+  ``neighbor_id`` (the oracles' ``ORDER BY score, neighbor_id``).
+- ``exact_top_k``: the three composed — the brute-force top-k of
+  sim_cosine_topk and the ground truth of every recall query.
+- ``two_phase_top_k``: the same exact top-k ranked per (query,
+  input partition) first, then globally.
+- ``lsh_pairs`` and ``lsh_probe``: the multi-table LSH self-pairs of the
+  k-NN graph (``_KNN_CTE``/``_knn_graph_df``) and the LSH query probe.
 
 Lives in its own module so consumers never import each other: a Python
 WORKER that unpickles a UDF from llm_ext re-imports that module first,
@@ -27,10 +38,18 @@ from ..operators import similarity as sim
 # via ``import knn_shared`` first (fresh worker interpreter) raised
 # ImportError before _KNN_CTE existed. Constants are defined up front
 # with only cycle-free imports above them; the registry helpers (needed
-# only by _knn_graph_df, which runs long after import time) are resolved
-# lazily inside the function.
+# only by the builders, which run long after import time) are resolved
+# lazily inside them.
 
 KNN_GRAPH_K = 3
+TOP_K = 5  # neighbours kept by every exact top-k
+
+
+_EMB_CTE = f"""
+WITH e AS (SELECT vec_id, label, {sim.as_double_sql('embedding')} AS demb
+           FROM embeddings),
+n AS (SELECT vec_id, label, demb, {sim.norm_sql('demb')} AS nrm FROM e)
+"""
 
 
 _KNN_CTE = f"""
@@ -61,30 +80,122 @@ knn AS MATERIALIZED (SELECT src, dst, cosine, rn FROM (
 """
 
 
-def _knn_graph_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(src, dst, cosine, rn<=K): the directed approximate k-NN graph —
-    shared by sim_knn_graph, the PageRank centrality query and the
-    hubness histogram."""
-    from ..registry import pin, spread, table
+def vectors(emb: DataFrame, carry: tuple[str, ...] = (),
+            fan_out: bool = False) -> DataFrame:
+    """(vec_id, *carry, demb, nrm) over the ``embeddings`` frame ``emb``:
+    the array<float> embedding widened to doubles, then its L2 norm — the
+    Spark twin of ``_EMB_CTE``'s ``e`` and ``n``. Callers that fan the
+    corpus out spread ``emb``; with ``fan_out`` the widened (vec_id, demb)
+    rows are spread instead, so the norms run after the exchange."""
+    e = emb.select("vec_id", *carry,
+                   sim.as_double(F.col("embedding")).alias("demb"))
+    if fan_out:
+        from ..registry import spread
+        e = spread(e)
+    return e.select("vec_id", *carry, "demb",
+                    sim.norm(F.col("demb")).alias("nrm"))
 
-    e = spread(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = pin(e.select("vec_id", "demb",
-                     sim.norm(F.col("demb")).alias("nrm")))
+
+def query_side(n: DataFrame, *extra) -> DataFrame:
+    """The probe side of a candidate join: ``n``'s rows as (query_id,
+    q_demb, q_nrm, *extra). Callers pick the query rows."""
+    return n.select(F.col("vec_id").alias("query_id"),
+                    F.col("demb").alias("q_demb"),
+                    F.col("nrm").alias("q_nrm"), *extra)
+
+
+def query_cosine():
+    """``cosine``: the 6-dp cosine of the query side's (q_demb, q_nrm)
+    and the corpus's (demb, nrm)."""
+    return sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
+                      F.col("q_nrm"), F.col("nrm")).alias("cosine")
+
+
+def candidates(probe: DataFrame, corpus: DataFrame, on=None,
+               score=None) -> DataFrame:
+    """(query_id, neighbor_id, *score): the broadcast ``probe`` (with
+    ``query_id``) joined to the ``corpus`` (with ``vec_id``) on ``on``
+    and on ``vec_id != query_id`` — a query is never its own neighbour.
+    ``score`` defaults to ``[query_cosine()]``."""
+    cond = F.col("vec_id") != F.col("query_id")
+    if score is None:
+        score = [query_cosine()]
+    return (F.broadcast(probe)
+            .join(corpus, cond if on is None else on & cond)
+            .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                    *score))
+
+
+def neighbor_rank(order=None, by=("query_id",)):
+    """row_number() per ``by`` over ``order`` (default: cosine
+    descending), ties to the lower neighbor_id."""
+    if order is None:
+        order = [F.col("cosine").desc()]
+    return F.row_number().over(
+        Window.partitionBy(*by).orderBy(*order, "neighbor_id"))
+
+
+def top_k(scored: DataFrame, k: int, order=None,
+          by=("query_id",)) -> DataFrame:
+    """``scored`` with ``rn`` = ``neighbor_rank(order, by)``, kept to
+    rn <= k."""
+    return (scored.withColumn("rn", neighbor_rank(order, by))
+            .filter(F.col("rn") <= k))
+
+
+def exact_top_k(probe: DataFrame, n: DataFrame) -> DataFrame:
+    """Brute-force cosine top-TOP_K of every ``probe`` query
+    (``query_side``) over the whole vector frame ``n``: the broadcast
+    probe scans the corpus once, and only the scored pairs are ranked."""
+    return top_k(candidates(probe, n), TOP_K)
+
+
+def two_phase_top_k(df: DataFrame, score: str, k: int) -> DataFrame:
+    """``df`` (query_id, vec_id, ``score``, ...) kept to each query's k
+    highest ``score`` rows, ties to the lower vec_id, in two ranks: per
+    (query_id, input partition) first — Q x P parallel keys, so ranking
+    never collapses to |Q| partitions — then per query_id over the
+    surviving Q x P x k rows. Adds ``pid``, ``r1`` and ``rk``."""
+    order = [F.col(score).desc(), "vec_id"]
+    return (df.withColumn("pid", F.spark_partition_id())
+            .withColumn("r1", F.row_number().over(
+                Window.partitionBy("query_id", "pid").orderBy(*order)))
+            .filter(F.col("r1") <= k)
+            .withColumn("rk", F.row_number().over(
+                Window.partitionBy("query_id").orderBy(*order)))
+            .filter(F.col("rk") <= k))
+
+
+def lsh_pairs(n: DataFrame) -> DataFrame:
+    """Distinct (va, vb), va < vb, of the vectors in ``n`` that collide
+    in any LSH table: one pinned (vec_id, tbl, bucket) row per vector and
+    table, self-joined on (tbl, bucket) — the Spark twin of
+    ``_KNN_CTE``'s b/x/cand CTEs."""
+    from ..registry import pin
+
     x = pin(n.select(
         "vec_id",
         F.posexplode(sim.lsh_buckets_multi(F.col("demb")))
          .alias("tbl", "bucket")).select("vec_id", "tbl", "bucket"))
     a = x.select(F.col("vec_id").alias("va"), "tbl", "bucket")
     c = x.select(F.col("vec_id").alias("vb"), "tbl", "bucket")
-    cand = (a.join(c, ["tbl", "bucket"])
+    return (a.join(c, ["tbl", "bucket"])
             .filter(F.col("va") < F.col("vb"))
             .select("va", "vb").distinct())
+
+
+def _knn_graph_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst, cosine, rn<=K): the directed approximate k-NN graph —
+    shared by sim_knn_graph, the PageRank centrality query and the
+    hubness histogram."""
+    from ..registry import pin, spread, table
+
+    n = pin(vectors(spread(table(spark, sf_dir, "embeddings"))))
     na = n.select(F.col("vec_id").alias("va"),
                   F.col("demb").alias("demb_a"), F.col("nrm").alias("nrm_a"))
     nb = n.select(F.col("vec_id").alias("vb"),
                   F.col("demb").alias("demb_b"), F.col("nrm").alias("nrm_b"))
-    sc = (cand.join(na, "va").join(nb, "vb")
+    sc = (lsh_pairs(n).join(na, "va").join(nb, "vb")
           .select("va", "vb",
                   sim.cosine(sim.dot(F.col("demb_a"), F.col("demb_b")),
                              F.col("nrm_a"), F.col("nrm_b"))
@@ -116,17 +227,8 @@ def lsh_probe(n: DataFrame) -> DataFrame:
         "vec_id", "demb", "nrm",
         F.posexplode(sim.lsh_buckets_multi(F.col("demb")))
          .alias("tbl", "bucket")))
-    q = x.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("demb").alias("q_demb"),
-        F.col("nrm").alias("q_nrm"), F.col("tbl").alias("q_tbl"),
-        F.col("bucket").alias("q_bucket"))
-    return (
-        F.broadcast(q)
-        .join(x, (F.col("tbl") == F.col("q_tbl"))
-              & (F.col("bucket") == F.col("q_bucket"))
-              & (F.col("vec_id") != F.col("query_id")))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                           F.col("q_nrm"), F.col("nrm")).alias("cosine"))
-        .distinct()
-    )
+    q = query_side(x.filter(F.col("vec_id") < 10),
+                   F.col("tbl").alias("q_tbl"),
+                   F.col("bucket").alias("q_bucket"))
+    return candidates(q, x, (F.col("tbl") == F.col("q_tbl"))
+                      & (F.col("bucket") == F.col("q_bucket"))).distinct()

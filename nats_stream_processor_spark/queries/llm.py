@@ -52,7 +52,15 @@ from ..operators.textstats import (
     token_stats_sql,
 )
 from ..registry import PY_MIN_SPLIT_BYTES, pin, register, spread, table
-from .knn_shared import lsh_probe
+from .knn_shared import (
+    _EMB_CTE,
+    candidates,
+    exact_top_k,
+    lsh_probe,
+    query_side,
+    top_k,
+    vectors,
+)
 
 NEAR_DUP_JACCARD = 0.5
 EMB_NEAR_DUP_COS = 0.4
@@ -747,13 +755,6 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------- similarity
 
-_EMB_CTE = f"""
-WITH e AS (SELECT vec_id, label, {sim.as_double_sql('embedding')} AS demb
-           FROM embeddings),
-n AS (SELECT vec_id, label, demb, {sim.norm_sql('demb')} AS nrm FROM e)
-"""
-
-
 @register(
     "sim_cosine_topk",
     oracle=f"""
@@ -776,27 +777,9 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, fold dot products JVM-side, rank per query. The corpus never
     shuffles — the plan is broadcast-join + window on the (tiny) scored
     set, which is exactly the exact-kNN baseline you run at any scale."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    q = n.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("demb").alias("q_demb"),
-        F.col("nrm").alias("q_nrm"))
-    scored = (
-        F.broadcast(q).crossJoin(n)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"),
-            sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                       F.col("q_nrm"), F.col("nrm")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .orderBy("query_id", "rn")
-    )
+    n = vectors(table(spark, sf_dir, "embeddings"))
+    q = query_side(n.filter(F.col("vec_id") < 10))
+    return exact_top_k(q, n).orderBy("query_id", "rn")
 
 
 @register(
@@ -829,16 +812,8 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the test corpus vs 0.14 single-table (asserted in test_ann_recall);
     the shuffle unit is the (table, bucket) row, never the corpus
     pairwise."""
-    e = spread(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    scored = lsh_probe(
-        e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .orderBy("query_id", "rn")
-    )
+    scored = lsh_probe(vectors(spread(table(spark, sf_dir, "embeddings"))))
+    return top_k(scored, 5).orderBy("query_id", "rn")
 
 
 @register(
@@ -857,10 +832,8 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup: LSH-blocked pairwise cosine >= 0.4.
     Same blocked-quadratic pattern as the text near-dup stages."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"),
-                 sim.lsh_bucket(F.col("demb")).alias("bucket"))
+    n = vectors(table(spark, sf_dir, "embeddings")).withColumn(
+        "bucket", sim.lsh_bucket(F.col("demb")))
     a, c = n.alias("a"), n.alias("c")
     return (
         a.join(c, (F.col("a.bucket") == F.col("c.bucket"))
@@ -992,9 +965,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     query touches nprobe/nlist of the data. This is the standard
     billion-vector layout (IVF-Flat) — swap the exact inner scan for PQ
     codes to go further."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
+    n = vectors(table(spark, sf_dir, "embeddings"))
     # NOTE (r16, losing A/B — do not retry): replacing rank_lists' rank-1
     # window with a lexicographic struct-max groupBy (max(struct(c_cos,
     # -cent_id, cent_id, demb, nrm))) measured CONSISTENTLY slower
@@ -1005,28 +976,22 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffles struct-wrapped vectors through partial+final too. The
     # streaming twin uses the struct-max shape because streaming cannot
     # run a non-time window at all, not because it is faster.
-    ranked = km.rank_lists(n, km.centroid_table(spark, e))
+    ranked = km.rank_lists(n, km.centroid_table(spark, n))
     assign = ranked.filter(F.col("rc") == 1).select("vec_id", "demb", "nrm", "cent_id")
-    probes = (ranked.filter((F.col("rc") <= IVF_NPROBE) & (F.col("vec_id") < 10))
-              .select(F.col("vec_id").alias("query_id"),
-                      F.col("demb").alias("q_demb"),
-                      F.col("nrm").alias("q_nrm"),
-                      F.col("cent_id").alias("p_cent_id")))
-    scored = (
-        F.broadcast(probes)
-        .join(assign, (F.col("cent_id") == F.col("p_cent_id"))
-              & (F.col("vec_id") != F.col("query_id")))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                           F.col("q_nrm"), F.col("nrm")).alias("cosine"))
-        .distinct()
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 5)
-        .orderBy("query_id", "rn")
-    )
+    probes = query_side(
+        ranked.filter((F.col("rc") <= IVF_NPROBE) & (F.col("vec_id") < 10)),
+        F.col("cent_id").alias("p_cent_id"))
+    scored = candidates(probes, assign,
+                        F.col("cent_id") == F.col("p_cent_id")).distinct()
+    return top_k(scored, 5).orderBy("query_id", "rn")
+
+
+def _adist():
+    """ADC distance of the corpus ``codes`` to the probe's lookup tables
+    ``lut0`` ... ``lut{PQ_M-1}``."""
+    return sim.pq_adc_dist(
+        F.col("codes"),
+        [F.col(f"lut{s}") for s in range(sim.PQ_M)]).alias("adist")
 
 
 @register(
@@ -1076,22 +1041,8 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (e.filter(F.col("vec_id") < 10)
          .select(F.col("vec_id").alias("query_id"),
                  *[luts[s].alias(f"lut{s}") for s in range(sim.PQ_M)]))
-    scored = (
-        corpus.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"),
-            sim.pq_adc_dist(
-                F.col("codes"),
-                [F.col(f"lut{s}") for s in range(sim.PQ_M)]).alias("adist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .orderBy("query_id", "rn")
-    )
+    scored = candidates(q, corpus, score=[_adist()])
+    return top_k(scored, 5, ["adist"]).orderBy("query_id", "rn")
 
 
 # Shared IVF-PQ candidate stage (training + coarse lists + 4-bit codes +
@@ -1117,11 +1068,9 @@ def ivf_pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates from probing the query's IVF lists and ADC-scoring their
     PQ codes. Training is memoized per corpus (operators/kmeans.py), so
     sharing this between queries retrains nothing."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    ranked = km.rank_lists(n, km.centroid_table(spark, e))
-    cb = km.train_pq_codebook(e)
+    n = vectors(table(spark, sf_dir, "embeddings"))
+    ranked = km.rank_lists(n, km.centroid_table(spark, n))
+    cb = km.train_pq_codebook(n)
     assign = (ranked.filter(F.col("rc") == 1)
               .select("vec_id", "cent_id",
                       sim.pq_codes("demb", cb).alias("codes")))
@@ -1132,16 +1081,8 @@ def ivf_pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("cent_id").alias("p_cent_id"))
               .select("query_id", "p_cent_id",
                       *[luts[s].alias(f"lut{s}") for s in range(sim.PQ_M)]))
-    return (
-        F.broadcast(probes)
-        .join(assign, (F.col("cent_id") == F.col("p_cent_id"))
-              & (F.col("vec_id") != F.col("query_id")))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                sim.pq_adc_dist(
-                    F.col("codes"),
-                    [F.col(f"lut{s}") for s in range(sim.PQ_M)]).alias("adist"))
-        .distinct()
-    )
+    return candidates(probes, assign, F.col("cent_id") == F.col("p_cent_id"),
+                      [_adist()]).distinct()
 
 
 @register(
@@ -1165,13 +1106,8 @@ def q_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 small ints per vector — centroids and the query's lookup tables are
     the only floats in flight. Both approximations are value-checked by
     the composed oracle."""
-    scored = ivf_pq_scored(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .orderBy("query_id", "rn")
-    )
+    return (top_k(ivf_pq_scored(spark, sf_dir), 5, ["adist"])
+            .orderBy("query_id", "rn"))
 
 
 # ------------------------------------------- corpus clustering & curation
@@ -1223,10 +1159,8 @@ def q_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the full corpus is the final groupBy(cluster_id) with map-side
     partial aggregation. Mean tightness uses the dsum decimal
     discipline, so it is partition-order independent."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    ranked = km.rank_lists(n, km.centroid_table(spark, e))
+    n = vectors(table(spark, sf_dir, "embeddings"))
+    ranked = km.rank_lists(n, km.centroid_table(spark, n))
     assigned = ranked.filter(F.col("rc") == 1).select(
         "vec_id", "cent_id", sim.round6_stable(F.col("c_cos")).alias("cos6"))
     return (
@@ -1298,10 +1232,8 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, exactly the published SemDeDup layout for web-scale corpora.
     All comparisons (pair cosine, dominance) happen on 6-dp-rounded
     doubles on BOTH engines, so the decision boundary is identical."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    ranked = km.rank_lists(n, km.centroid_table(spark, e))
+    n = vectors(table(spark, sf_dir, "embeddings"))
+    ranked = km.rank_lists(n, km.centroid_table(spark, n))
     assign = pin(ranked.filter(F.col("rc") == 1).select(
         "vec_id", "demb", "nrm", "cent_id",
         sim.round6_stable(F.col("c_cos")).alias("ccos6")))
@@ -1920,10 +1852,7 @@ def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (table, bucket) equi-join as the shuffle unit), but the rerank is a
     plain filter — no window, no K: result size is data-driven, which is
     what dedup-style callers (find EVERYTHING near this vector) need."""
-    e = spread(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    hits = lsh_probe(
-        e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm")))
+    hits = lsh_probe(vectors(spread(table(spark, sf_dir, "embeddings"))))
     return (
         hits.filter(F.col("cosine") >= RANGE_SEARCH_TAU)
         .orderBy("query_id", "neighbor_id")
@@ -2027,10 +1956,8 @@ def q_quality_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster) against (id, score) — neither text nor vectors cross the
     shuffle; the final groupBy(cluster) reduces K rows. Mean quality
     uses the dsum decimal discipline (partition-order independent)."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    ranked = km.rank_lists(n, km.centroid_table(spark, e))
+    n = vectors(table(spark, sf_dir, "embeddings"))
+    ranked = km.rank_lists(n, km.centroid_table(spark, n))
     assign = ranked.filter(F.col("rc") == 1).select("vec_id", "cent_id")
     d = spread(table(spark, sf_dir, "documents"))
     q = d.select("doc_id",

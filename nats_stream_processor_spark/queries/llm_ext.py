@@ -60,6 +60,16 @@ from ..operators.textstats import (
     token_stats_sql,
 )
 from ..registry import pin, register, spread, table
+from .knn_shared import (
+    _KNN_CTE,
+    _knn_graph_df,
+    candidates,
+    exact_top_k,
+    lsh_probe,
+    query_side,
+    top_k,
+    vectors,
+)
 
 # ------------------------------------------------- JL random projection
 
@@ -773,16 +783,10 @@ def q_ann_ivf_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the shared scored stage (queries/llm.py ivf_pq_scored — memoized
     training, broadcast probes), a WindowGroupLimit top-C, then an
     id-equi-join back to the raw vectors for the C survivors only."""
-    scored = _ivf_pq_scored(spark, sf_dir)
-    wa = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    topc = (scored.withColumn("ra", F.row_number().over(wa))
-            .filter(F.col("ra") <= REFINE_C)
+    topc = (top_k(_ivf_pq_scored(spark, sf_dir), REFINE_C, ["adist"])
             .select("query_id", "neighbor_id"))
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    q = n.select(F.col("vec_id").alias("query_id"),
-                 F.col("demb").alias("q_demb"), F.col("nrm").alias("q_nrm"))
+    n = vectors(table(spark, sf_dir, "embeddings"))
+    q = query_side(n)
     c = n.select(F.col("vec_id").alias("neighbor_id"),
                  F.col("demb").alias("c_demb"), F.col("nrm").alias("c_nrm"))
     exact = (
@@ -792,13 +796,8 @@ def q_ann_ivf_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
                     sim.dot(F.col("q_demb"), F.col("c_demb"))
                     / (F.col("q_nrm") * F.col("c_nrm"))).alias("cos6"))
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos6").desc(), "neighbor_id")
-    return (
-        exact.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 5)
-        .orderBy("query_id", "rn")
-    )
+    return (top_k(exact, 5, [F.col("cos6").desc()])
+            .orderBy("query_id", "rn"))
 
 
 # --------------------------------------- logistic-regression training
@@ -1372,30 +1371,27 @@ def q_ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = x.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("mx").alias("q_mx"),
         F.col("codes").alias("qcodes"))
-    idot = (
-        x.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"),
-            "q_mx", "mx",
-            F.aggregate(F.zip_with("qcodes", "codes",
-                                   lambda a, b: a * b),
-                        F.lit(0).cast("long"),
-                        lambda acc, v: acc + v).alias("score_int"))
-    )
+    return _int8_top5(q, x)
+
+
+def _int8_top5(probe: DataFrame, corpus: DataFrame, on=None) -> DataFrame:
+    """Each probe query's top 5 corpus vectors by the dequantized int8
+    score: ``score_int`` is the exact int64 code dot of the probe's
+    (q_mx, qcodes) and the corpus's (mx, codes), ranked on score6 =
+    score_int * scale_q * scale_c."""
+    idot = candidates(probe, corpus, on, [
+        "q_mx", "mx",
+        F.aggregate(F.zip_with("qcodes", "codes", lambda a, b: a * b),
+                    F.lit(0).cast("long"),
+                    lambda acc, v: acc + v).alias("score_int")])
     scored = idot.select(
         "query_id", "neighbor_id", "score_int",
         sim.round6_stable(
             (F.col("score_int").cast("double")
              * (F.col("q_mx") / F.lit(float(INT8_MAX))))
             * (F.col("mx") / F.lit(float(INT8_MAX)))).alias("score6"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score6").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .orderBy("query_id", "rn")
-    )
+    return (top_k(scored, 5, [F.col("score6").desc()])
+            .orderBy("query_id", "rn"))
 
 
 # --------------------------------------- interpolated bigram LM score
@@ -1952,13 +1948,6 @@ def q_score_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ k-NN graph construction
 
-from .knn_shared import (  # noqa: E402  (shared with llm_ext2)
-    _KNN_CTE,
-    _knn_graph_df,
-    lsh_probe,
-)
-
-
 @register(
     "sim_knn_graph",
     oracle=f"""
@@ -2448,10 +2437,8 @@ def q_cluster_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: K centroids broadcast against one corpus scan; the
     per-cluster argmax is a K-bounded window on the assignment table
     (shuffle carries vec_id, cluster id, one rounded cosine)."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    ranked = km.rank_lists(n, km.centroid_table(spark, e))
+    n = vectors(table(spark, sf_dir, "embeddings"))
+    ranked = km.rank_lists(n, km.centroid_table(spark, n))
     assigned = ranked.filter(F.col("rc") == 1).select(
         "vec_id", "cent_id", sim.round6_stable(F.col("c_cos")).alias("cos6"))
     wm = Window.partitionBy("cent_id").orderBy(F.col("cos6").desc(),
@@ -2755,10 +2742,8 @@ def q_ann_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: centroids broadcast; the corpus shuffles once on its
     list id; the probe join is list-bucketed (never corpus-wide); the
     code table joins on vec_id within probed lists only."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm"))
-    ranked = km.rank_lists(n, km.centroid_table(spark, e))
+    n = vectors(table(spark, sf_dir, "embeddings"))
+    ranked = km.rank_lists(n, km.centroid_table(spark, n))
     qc = pin(_int8_codes_df(spark, sf_dir))  # vec_id, mx, codes
     assign = (ranked.filter(F.col("rc") == 1)
               .select("vec_id", "cent_id")
@@ -2771,30 +2756,7 @@ def q_ann_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
                               F.col("mx").alias("q_mx"),
                               F.col("codes").alias("qcodes")),
                     "query_id"))
-    idot = (
-        F.broadcast(probes)
-        .join(assign, (F.col("cent_id") == F.col("p_cent_id"))
-              & (F.col("vec_id") != F.col("query_id")))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"),
-            "q_mx", "mx",
-            F.aggregate(F.zip_with("qcodes", "codes",
-                                   lambda a, b: a * b),
-                        F.lit(0).cast("long"),
-                        lambda acc, v: acc + v).alias("score_int")))
-    scored = idot.select(
-        "query_id", "neighbor_id", "score_int",
-        sim.round6_stable(
-            (F.col("score_int").cast("double")
-             * (F.col("q_mx") / F.lit(float(INT8_MAX))))
-            * (F.col("mx") / F.lit(float(INT8_MAX)))).alias("score6"))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("score6").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 5)
-        .orderBy("query_id", "rn")
-    )
+    return _int8_top5(probes, assign, F.col("cent_id") == F.col("p_cent_id"))
 
 
 # --------------------------------------------- per-document novelty
@@ -3115,24 +3077,10 @@ def q_index_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans (sim_cosine_topk, sim_ann_lsh) joined on (query, neighbor);
     the report is query-cardinality. At 100 TB you run this on a
     sampled query set — the plan shape is unchanged."""
-    e = spread(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = pin(e.select("vec_id", "demb",
-                     sim.norm(F.col("demb")).alias("nrm")))
-    qn = n.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("demb").alias("q_demb"),
-        F.col("nrm").alias("q_nrm"))
-    bs = (n.crossJoin(F.broadcast(qn))
-          .filter(F.col("vec_id") != F.col("query_id"))
-          .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                  sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                             F.col("q_nrm"), F.col("nrm")).alias("cosine")))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    bt = (bs.withColumn("rn", F.row_number().over(wq))
-          .filter(F.col("rn") <= 5).select("query_id", "neighbor_id"))
-    lt = (lsh_probe(n).withColumn("rn", F.row_number().over(wq))
-          .filter(F.col("rn") <= 5)
+    n = pin(vectors(spread(table(spark, sf_dir, "embeddings"))))
+    bt = (exact_top_k(query_side(n.filter(F.col("vec_id") < 10)), n)
+          .select("query_id", "neighbor_id"))
+    lt = (top_k(lsh_probe(n), 5)
           .select(F.col("query_id").alias("l_query"),
                   F.col("neighbor_id").alias("l_neighbor")))
     joined = bt.join(

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..registry import pin, register, table
 
 from ..operators import similarity as sim
+from .knn_shared import lsh_pairs, vectors
 from .llm_ext8 import HLL_LG_K
 
 # ----------------------------- HLL overlap matrix (sketch algebra)
@@ -424,26 +425,14 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune the embedding column."""
     from pyspark.sql import Window as W
 
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", sim.as_double(F.col("embedding")).alias("demb"))
-    n = pin(e.select("vec_id", "label", "demb",
-                     sim.norm(F.col("demb")).alias("nrm")))
-    x = pin(n.select(
-        "vec_id",
-        F.posexplode(sim.lsh_buckets_multi(F.col("demb")))
-         .alias("tbl", "bucket")).select("vec_id", "tbl", "bucket"))
-    a = x.select(F.col("vec_id").alias("va"), "tbl", "bucket")
-    c = x.select(F.col("vec_id").alias("vb"), "tbl", "bucket")
-    cand = (a.join(c, ["tbl", "bucket"])
-            .filter(F.col("va") < F.col("vb"))
-            .select("va", "vb").distinct())
+    n = pin(vectors(table(spark, sf_dir, "embeddings"), ("label",)))
     na = n.select(F.col("vec_id").alias("va"),
                   F.col("label").alias("label_a"),
                   F.col("demb").alias("demb_a"), F.col("nrm").alias("nrm_a"))
     nb = n.select(F.col("vec_id").alias("vb"),
                   F.col("label").alias("label_b"),
                   F.col("demb").alias("demb_b"), F.col("nrm").alias("nrm_b"))
-    sc = (cand.join(na, "va").join(nb, "vb")
+    sc = (lsh_pairs(n).join(na, "va").join(nb, "vb")
           .filter(F.col("label_a") != F.col("label_b"))
           .select("va", "vb",
                   sim.cosine(sim.dot(F.col("demb_a"), F.col("demb_b")),

@@ -60,6 +60,7 @@ from ..operators import similarity as sim
 from ..operators.kmeans import IVF_NLIST
 from ..operators.textstats import quality_cols, quality_sql
 from ..operators.textstats import token_stats_cols, token_stats_sql
+from .knn_shared import vectors
 
 # ------------------------------ IVF inverted-list balance dashboard
 
@@ -128,11 +129,9 @@ def q_ivf_list_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     size — the dashboard is read BEFORE queries pay for the skew.
     Magnitude license: n_vecs * 1e6 needs n_vecs <= 9.2e12 per list —
     int64-safe for any real corpus."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = spread(e).select("vec_id", "demb",
-                         sim.norm(F.col("demb")).alias("nrm"))
-    cent = km.centroid_table(spark, e)
+    emb = table(spark, sf_dir, "embeddings")
+    n = vectors(emb, fan_out=True)
+    cent = km.centroid_table(spark, vectors(emb))
     # ranked on the ppm-quantized key, as the oracle (see km.rank_lists)
     assign = (km.rank_lists(n, cent, ppm=True)
               .filter(F.col("rc") == 1)

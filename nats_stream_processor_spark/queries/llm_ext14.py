@@ -77,6 +77,14 @@ from ..operators import kmeans as km
 from ..operators import similarity as sim
 from ..operators.dedup import SPAN_K
 from ..operators.kmeans import IVF_NLIST
+from .knn_shared import (
+    TOP_K,
+    candidates,
+    exact_top_k,
+    neighbor_rank,
+    query_side,
+    vectors,
+)
 
 # ------------------------------- drop-plan execute (the act step)
 
@@ -193,7 +201,7 @@ def q_drop_plan_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVR_MIN_SPLITS = 2
 IVR_ITERS = 2
 IVR_NPROBE = 2
-IVR_TOPK = 5
+IVR_TOPK = TOP_K  # the brute reference is knn_shared.exact_top_k
 IVR_NQ = 10
 
 _PPM = "1000000"
@@ -453,11 +461,9 @@ def _ivf_base_frames(spark: SparkSession, sf_dir: str):
     corpus-with-norms, broadcastable trained-centroid table, pinned
     ppm-ranked assignment, per-list sizes, guarded total, load factors.
     The Spark twin of _ivf_base_ctes_sql."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = pin(spread(e).select(
-        "vec_id", "demb", sim.norm(F.col("demb")).alias("nrm")))
-    cent = km.centroid_table(spark, e)
+    emb = table(spark, sf_dir, "embeddings")
+    n = pin(vectors(emb, fan_out=True))
+    cent = km.centroid_table(spark, vectors(emb))
     # asg is MATERIALIZED on the oracle side and referenced by every
     # downstream layer — eagerly checkpoint it, truncating its lineage to
     # a LogicalRDD leaf, so each reference analyzes as a leaf instead of
@@ -508,10 +514,7 @@ def _ivf_recall_frames(n, cent, asg, newc, nasg):
     with rank <= top-k that matched (== the old top-k inner join's
     count) in the same pass. Halves the receipt frames the callers
     crossJoin and drops the single-consumer candidate pins."""
-    qv = (n.filter(F.col("vec_id") < IVR_NQ)
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("demb").alias("q_demb"),
-                  F.col("nrm").alias("q_nrm")))
+    qv = query_side(n.filter(F.col("vec_id") < IVR_NQ))
     wp1 = Window.partitionBy("query_id").orderBy(
         F.col("qppm").desc(), "cent_id")
     prb1 = (qv.crossJoin(F.broadcast(cent))
@@ -522,16 +525,8 @@ def _ivf_recall_frames(n, cent, asg, newc, nasg):
             .withColumn("r", F.row_number().over(wp1))
             .filter(F.col("r") <= IVR_NPROBE)
             .select("query_id", "q_demb", "q_nrm", "cent_id"))
-    cand1 = (
-        F.broadcast(prb1)
-        .join(asg.withColumnRenamed("cent_id", "a_cent"),
-              (F.col("a_cent") == F.col("cent_id"))
-              & (F.col("vec_id") != F.col("query_id")))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                           F.col("q_nrm"), F.col("nrm")).alias("cosine")))
-    wt = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id")
+    cand1 = candidates(prb1, asg.withColumnRenamed("cent_id", "a_cent"),
+                       F.col("a_cent") == F.col("cent_id"))
     wp2 = Window.partitionBy("query_id").orderBy(
         F.col("qppm").desc(), "nl_id")
     prb2 = (qv.crossJoin(F.broadcast(newc))
@@ -542,28 +537,14 @@ def _ivf_recall_frames(n, cent, asg, newc, nasg):
             .withColumn("r", F.row_number().over(wp2))
             .filter(F.col("r") <= IVR_NPROBE)
             .select("query_id", "q_demb", "q_nrm", "nl_id"))
-    cand2 = (
-        F.broadcast(prb2)
-        .join(nasg.withColumnRenamed("nl_id", "a_nl"),
-              (F.col("a_nl") == F.col("nl_id"))
-              & (F.col("vec_id") != F.col("query_id")))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                           F.col("q_nrm"), F.col("nrm")).alias("cosine")))
-    brute = pin(
-        F.broadcast(qv)
-        .join(n, F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                           F.col("q_nrm"), F.col("nrm")).alias("cosine"))
-        .withColumn("rn", F.row_number().over(wt))
-        .filter(F.col("rn") <= IVR_TOPK)
-        .select("query_id", "neighbor_id"))
+    cand2 = candidates(prb2, nasg.withColumnRenamed("nl_id", "a_nl"),
+                       F.col("a_nl") == F.col("nl_id"))
+    brute = pin(exact_top_k(qv, n).select("query_id", "neighbor_id"))
     qs = brute.agg(F.count_distinct("query_id").cast("long").alias("nq"))
     hit = F.broadcast(brute.withColumn("brute_hit", F.lit(1)))
 
     def _hits_and_cands(cand, hits_name: str, cands_name: str):
-        return (cand.withColumn("rn", F.row_number().over(wt))
+        return (cand.withColumn("rn", neighbor_rank())
                 .join(hit, ["query_id", "neighbor_id"], "left")
                 .agg(F.count(F.when((F.col("rn") <= IVR_TOPK)
                                     & F.col("brute_hit").isNotNull(),

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from ..registry import pin, register, spread, table
 
 from ..operators import similarity as sim
+from .knn_shared import candidates, exact_top_k, query_side, top_k
 
 from .llm_ext14 import (  # noqa: E402
     IVR_NPROBE,
@@ -171,10 +172,7 @@ def q_rank_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-division ppm."""
     n, cent, asg, sz, tot, ld = _ivf_base_frames(spark, sf_dir)
     disc = spark.createDataFrame(list(_DISCOUNTS), "rnk int, d double")
-    qv = (n.filter(F.col("vec_id") < IVR_NQ)
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("demb").alias("q_demb"),
-                  F.col("nrm").alias("q_nrm")))
+    qv = query_side(n.filter(F.col("vec_id") < IVR_NQ))
     wp = Window.partitionBy("query_id").orderBy(
         F.col("qppm").desc(), "cent_id")
     prb = (qv.crossJoin(F.broadcast(cent))
@@ -185,30 +183,15 @@ def q_rank_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
            .withColumn("r", F.row_number().over(wp))
            .filter(F.col("r") <= IVR_NPROBE)
            .select("query_id", "q_demb", "q_nrm", "cent_id"))
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id")
     ann = pin(
-        F.broadcast(prb)
-        .join(asg.withColumnRenamed("cent_id", "a_cent"),
-              (F.col("a_cent") == F.col("cent_id"))
-              & (F.col("vec_id") != F.col("query_id")))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                           F.col("q_nrm"), F.col("nrm")).alias("cosine"))
-        .withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= IVR_TOPK)
+        top_k(candidates(prb, asg.withColumnRenamed("cent_id", "a_cent"),
+                         F.col("a_cent") == F.col("cent_id")), IVR_TOPK)
         .select("query_id", "neighbor_id",
                 F.col("rn").cast("long").alias("rn")))
     brute = pin(
-        F.broadcast(qv)
-        .join(n, F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                           F.col("q_nrm"), F.col("nrm")).alias("cosine"))
-        .withColumn("bn", F.row_number().over(wr))
-        .filter(F.col("bn") <= IVR_TOPK)
+        exact_top_k(qv, n)
         .select("query_id", "neighbor_id",
-                F.col("bn").cast("long").alias("bn")))
+                F.col("rn").cast("long").alias("bn")))
     terms = (ann
              .join(brute, ["query_id", "neighbor_id"], "left")
              .join(F.broadcast(disc), ann["rn"] == disc["rnk"])

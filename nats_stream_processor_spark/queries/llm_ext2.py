@@ -42,6 +42,14 @@ from ..operators import kmeans as km
 from ..operators import similarity as sim
 from ..operators.dedup import connected_components, jaccard_sql
 from ..operators.kmeans import IVF_NLIST
+from .knn_shared import (
+    candidates,
+    exact_top_k,
+    query_cosine,
+    query_side,
+    top_k,
+    vectors,
+)
 from .llm import NEAR_DUP_JACCARD
 
 # --------------------------------------------- PCA via power iteration
@@ -946,50 +954,24 @@ def q_ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep points, and the brute-force reference once. recall_ppm is
     integer arithmetic over exact hit counts."""
     maxp = max(NPROBE_SWEEP)
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
-    n = pin(e.select("vec_id", "demb", sim.norm(F.col("demb")).alias("nrm")))
-    ranked = km.rank_lists(n, km.centroid_table(spark, e))
+    n = pin(vectors(table(spark, sf_dir, "embeddings")))
+    ranked = km.rank_lists(n, km.centroid_table(spark, n))
     assign = ranked.filter(F.col("rc") == 1).select(
         "vec_id", "demb", "nrm", "cent_id")
-    probes = (ranked.filter((F.col("rc") <= maxp)
-                            & (F.col("vec_id") < _SWEEP_NQ))
-              .select(F.col("vec_id").alias("query_id"),
-                      F.col("demb").alias("q_demb"),
-                      F.col("nrm").alias("q_nrm"),
-                      F.col("cent_id").alias("p_cent_id"),
-                      F.col("rc").alias("prc")))
-    cand = pin(
-        F.broadcast(probes)
-        .join(assign, (F.col("cent_id") == F.col("p_cent_id"))
-              & (F.col("vec_id") != F.col("query_id")))
-        .select("query_id", "prc", F.col("vec_id").alias("neighbor_id"),
-                sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                           F.col("q_nrm"), F.col("nrm")).alias("cosine")))
-    wnp = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id")
-    topk = (cand.select(
-                "*", F.explode(F.array(*[F.lit(p) for p in NPROBE_SWEEP]))
-                .alias("nprobe"))
-            .filter(F.col("prc") <= F.col("nprobe"))
-            .withColumn("rn", F.row_number().over(wnp))
-            .filter(F.col("rn") <= 5)
+    probes = query_side(
+        ranked.filter((F.col("rc") <= maxp) & (F.col("vec_id") < _SWEEP_NQ)),
+        F.col("cent_id").alias("p_cent_id"), F.col("rc").alias("prc"))
+    cand = pin(candidates(probes, assign,
+                          F.col("cent_id") == F.col("p_cent_id"),
+                          ["prc", query_cosine()]))
+    swept = (cand.select(
+                 "*", F.explode(F.array(*[F.lit(p) for p in NPROBE_SWEEP]))
+                 .alias("nprobe"))
+             .filter(F.col("prc") <= F.col("nprobe")))
+    topk = (top_k(swept, 5, by=("nprobe", "query_id"))
             .select("nprobe", "query_id", "neighbor_id"))
-    q = (n.filter(F.col("vec_id") < _SWEEP_NQ)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("demb").alias("q_demb"),
-                 F.col("nrm").alias("q_nrm")))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id")
-    brute = pin(
-        F.broadcast(q)
-        .join(n, F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                sim.cosine(sim.dot(F.col("q_demb"), F.col("demb")),
-                           F.col("q_nrm"), F.col("nrm")).alias("cosine"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id"))
+    q = query_side(n.filter(F.col("vec_id") < _SWEEP_NQ))
+    brute = pin(exact_top_k(q, n).select("query_id", "neighbor_id"))
     hits = (topk.join(brute, ["query_id", "neighbor_id"])
             .groupBy("nprobe").agg(F.count("*").alias("n_hits")))
     nps = spark.createDataFrame([(p,) for p in NPROBE_SWEEP], "nprobe int")

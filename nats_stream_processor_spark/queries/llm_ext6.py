@@ -46,6 +46,7 @@ from ..registry import REGISTRY, pin, register, spread, table
 from ..functions.text import tokens_col, tokens_sql
 from ..operators import kmeans as km
 from ..operators import similarity as sim
+from .knn_shared import two_phase_top_k, vectors
 
 # ------------------------------------------------ Flesch reading ease
 
@@ -321,12 +322,10 @@ def q_crossmodal_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (int, int) rows; the recall join touches only two Q x K sets.
     Cosine is ppm-quantized before ranking (ties broken on vec_id), so
     both rankings are exact-integer on both engines."""
-    e = spread(table(spark, sf_dir, "embeddings"))
     base = pin(
-        e.select("vec_id", sim.as_double(F.col("embedding")).alias("demb"))
+        vectors(spread(table(spark, sf_dir, "embeddings")))
         .select("vec_id", "demb",
-                sim.lsh_buckets_multi(F.col("demb")).alias("bks"),
-                sim.norm(F.col("demb")).alias("nrm")))
+                sim.lsh_buckets_multi(F.col("demb")).alias("bks"), "nrm"))
     panel = F.explode(F.array(*[
         F.struct(
             F.lit(q).cast("bigint").alias("query_id"),
@@ -349,15 +348,7 @@ def q_crossmodal_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cand_cond.alias("cand")))
 
     def topk(df: DataFrame) -> DataFrame:
-        w1 = (Window.partitionBy("query_id", "pid")
-              .orderBy(F.col("rel_ppm").desc(), "vec_id"))
-        w2 = (Window.partitionBy("query_id")
-              .orderBy(F.col("rel_ppm").desc(), "vec_id"))
-        return (df.withColumn("pid", F.spark_partition_id())
-                .withColumn("r1", F.row_number().over(w1))
-                .filter(F.col("r1") <= XM_TOPK)
-                .withColumn("rnk", F.row_number().over(w2))
-                .filter(F.col("rnk") <= XM_TOPK)
+        return (two_phase_top_k(df, "rel_ppm", XM_TOPK)
                 .select("query_id", "vec_id"))
 
     exact = topk(scored)

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..registry import REGISTRY, pin, register, spread, table
 
 from ..operators import similarity as sim
+from .knn_shared import two_phase_top_k, vectors
 
 # ------------------------------------------ NN-Descent kNN-graph build
 
@@ -76,11 +77,7 @@ ND_STRIDE = 97  # init-graph stride over the contiguous vec_id space
 def _embeddings_en(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned (vec_id, demb, nrm) — the scoring table both graph
     operators join their id-keyed candidate sets against."""
-    e = spread(table(spark, sf_dir, "embeddings"))
-    return pin(e.select("vec_id",
-                        sim.as_double(F.col("embedding")).alias("demb"))
-               .select("vec_id", "demb",
-                       sim.norm(F.col("demb")).alias("nrm")))
+    return pin(vectors(spread(table(spark, sf_dir, "embeddings"))))
 
 
 def _score_pairs(en: DataFrame, cand: DataFrame) -> DataFrame:
@@ -401,15 +398,7 @@ def _exact_topk(base: DataFrame, qpanel: DataFrame, k: int) -> DataFrame:
                                    / (F.col("qnorm") * F.col("nrm")))
                                   * F.lit(1e6) + F.lit(0.5)).cast("long")
                           .alias("sim_ppm")))
-    w1 = (Window.partitionBy("query_id", "pid")
-          .orderBy(F.col("sim_ppm").desc(), "vec_id"))
-    return (scored_all.withColumn("pid", F.spark_partition_id())
-            .withColumn("r1", F.row_number().over(w1))
-            .filter(F.col("r1") <= k)
-            .withColumn("rk", F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("sim_ppm").desc(), "vec_id")))
-            .filter(F.col("rk") <= k)
+    return (two_phase_top_k(scored_all, "sim_ppm", k)
             .select("query_id", F.col("vec_id").alias("node")))
 
 

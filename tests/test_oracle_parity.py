@@ -23,8 +23,6 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-from conftest import SF_SMOKE  # noqa: E402
-
 from nats_stream_processor_spark import registry  # noqa: E402
 
 # Workers default to one per 4 cores (each worker is the old local[4]

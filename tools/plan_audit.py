@@ -11,12 +11,33 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.001"
+
+# Counters a plan prints that change from run to run while the plan does
+# not: expression ids (#12, #12L), PySpark's fresh lambda-variable names
+# (lambda x_3), DataFrame plan ids, RDD ids and AQE query-stage numbers.
+_PLAN_IDS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"(lambda [A-Za-z]+)_\d+"), r"\1_N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"QueryStage \d+"), "QueryStage N"),
+)
+
+
+def normalize_plan(text: str) -> str:
+    """``text`` with every id counter mapped to a fixed token, so two
+    renderings of the same plan compare equal and a diff shows only
+    operator changes."""
+    for pattern, token in _PLAN_IDS:
+        text = pattern.sub(token, text)
+    return text
 
 # query -> the scale property worth reading the plan for
 NOTES = {
@@ -591,7 +612,8 @@ def main() -> int:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        out.append(f"## {name}\n\n{note}\n\n```\n{buf.getvalue().strip()}\n```\n")
+        plan = normalize_plan(buf.getvalue().strip())
+        out.append(f"## {name}\n\n{note}\n\n```\n{plan}\n```\n")
 
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "PLANS.md")
